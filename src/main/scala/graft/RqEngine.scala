@@ -17,14 +17,17 @@ final class RqEngine(val spark: SparkSession) {
 
   /** Record-stream read: one row per record, `value: STRING` holding
     * canonical JSON (formats: json, csv, msgpack, cbor, toml, yaml,
-    * raw, avro, protobuf — SURVEY §2.1).
+    * raw, avro, protobuf — SURVEY §2.1). This is the public row form;
+    * [[run]] reads the binary one instead (see [[RqTableProvider]]).
     */
   def read(format: String, path: String,
       options: Map[String, String] = Map.empty): DataFrame =
+    reader(format, options).load(path)
+
+  private def reader(format: String, options: Map[String, String]) =
     spark.read.format(providerClass)
       .option("recordFormat", format)
       .options(options)
-      .load(path)
 
   /** Typed read: record stream + Spark JSON schema inference (the
     * ValueVisitor analog — SURVEY §1.3).
@@ -56,17 +59,30 @@ final class RqEngine(val spark: SparkSession) {
         df.schema.fields(0).dataType ==
           org.apache.spark.sql.types.StringType) df
       else df.toJSON.toDF("value")
-    canonical.write.format(providerClass)
+    save(format, canonical, path, options, mode)
+  }
+
+  private def save(format: String, rows: DataFrame, path: String,
+      options: Map[String, String], mode: String): Unit =
+    rows.write.format(providerClass)
       .option("recordFormat", format)
       .options(options)
       .mode(mode)
       .save(path)
-  }
 
   /** The reference's whole program (§2.3): identity map from one
-    * format/path to another.
+    * format/path to another. Records cross the row boundary as the
+    * binary row, msgpack of `JsonCodec.normalize(v)`, instead of JSON
+    * text: no JSON emit and parse per record, and a msgpack sink copies
+    * the row bytes. The output is byte-identical to
+    * `write(outFormat, read(inFormat, inPath, options), outPath,
+    * options)`, since `normalize` yields exactly the values the JSON
+    * text parses back to.
     */
   def run(inFormat: String, inPath: String, outFormat: String,
       outPath: String, options: Map[String, String] = Map.empty): Unit =
-    write(outFormat, read(inFormat, inPath, options), outPath, options)
+    save(outFormat,
+      reader(inFormat, options).schema(RqTableProvider.binarySchema)
+        .load(inPath),
+      outPath, options, "overwrite")
 }

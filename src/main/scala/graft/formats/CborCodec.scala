@@ -113,18 +113,18 @@ object CborCodec {
         else throw new IllegalArgumentException("cbor: negint overflow")
       case 2 =>
         if (info == 31) indefBytes(in)
-        else Value.Bytes(in.bytes(arg(in, info).toInt))
+        else Value.Bytes(in.bytes(len(in, info)))
       case 3 =>
         if (info == 31) indefText(in)
         else Value.Str(
-          new String(in.bytes(arg(in, info).toInt), StandardCharsets.UTF_8))
+          new String(in.bytes(len(in, info)), StandardCharsets.UTF_8))
       case 4 =>
         if (info == 31) {
           var items = Vector.empty[Value]
           while (in.peek() != 0xff) items :+= decode(in, typed)
           in.u8() // break
           Value.Seq(items)
-        } else Value.Seq(Vector.fill(arg(in, info).toInt)(decode(in, typed)))
+        } else Value.Seq(Vector.fill(len(in, info))(decode(in, typed)))
       case 5 =>
         if (info == 31) {
           var items = Vector.empty[(Value, Value)]
@@ -132,7 +132,7 @@ object CborCodec {
             items :+= ((decode(in, typed), decode(in, typed)))
           in.u8()
           Value.Map(items)
-        } else Value.Map(Vector.fill(arg(in, info).toInt)(
+        } else Value.Map(Vector.fill(len(in, info))(
           (decode(in, typed), decode(in, typed))))
       case 6 => // tag: skip, keep inner (serde_cbor drops unknown tags)
         arg(in, info)
@@ -182,6 +182,17 @@ object CborCodec {
     case 27 => in.i64()
     case other =>
       throw new IllegalArgumentException(s"cbor: bad additional info $other")
+  }
+
+  /** A definite length or count: the header argument may claim up to
+    * 2⁶⁴−1, so narrow it checked instead of wrapping with `.toInt`.
+    */
+  private def len(in: ByteIn, info: Int): Int = {
+    val n = arg(in, info)
+    if (n < 0 || n > Int.MaxValue) throw new IllegalArgumentException(
+      s"cbor: length ${java.lang.Long.toUnsignedString(n)} exceeds " +
+        Int.MaxValue)
+    n.toInt
   }
 
   private def indefBytes(in: ByteIn): Value = {

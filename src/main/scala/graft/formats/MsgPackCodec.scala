@@ -148,16 +148,16 @@ object MsgPackCodec {
       case b if b >= 0xa0 && b < 0xc0 => str(in, b & 0x1f)
       case 0xd9 => str(in, in.u8())
       case 0xda => str(in, in.s16() & 0xffff)
-      case 0xdb => str(in, in.i32())
+      case 0xdb => str(in, len32(in))
       case 0xc4 => bin(in, in.u8())
       case 0xc5 => bin(in, in.s16() & 0xffff)
-      case 0xc6 => bin(in, in.i32())
+      case 0xc6 => bin(in, len32(in))
       case b if b >= 0x90 && b < 0xa0 => arr(in, b & 0x0f, typed)
       case 0xdc => arr(in, in.s16() & 0xffff, typed)
-      case 0xdd => arr(in, in.i32(), typed)
+      case 0xdd => arr(in, len32(in), typed)
       case b if b >= 0x80 && b < 0x90 => map(in, b & 0x0f, typed)
       case 0xde => map(in, in.s16() & 0xffff, typed)
-      case 0xdf => map(in, in.i32(), typed)
+      case 0xdf => map(in, len32(in), typed)
       // ext → Bytes, type tag dropped (messagepack.rs:82)
       case 0xd4 => extBytes(in, 1)
       case 0xd5 => extBytes(in, 2)
@@ -166,7 +166,7 @@ object MsgPackCodec {
       case 0xd8 => extBytes(in, 16)
       case 0xc7 => extBytes(in, in.u8())
       case 0xc8 => extBytes(in, in.s16() & 0xffff)
-      case 0xc9 => extBytes(in, in.i32())
+      case 0xc9 => extBytes(in, len32(in))
       case other =>
         throw new IllegalArgumentException(
           f"msgpack: invalid marker 0x$other%02x")
@@ -191,6 +191,59 @@ object MsgPackCodec {
       def hasNext: Boolean = !bi.atEnd()
       def next(): Value = decode(bi, typed)
     }
+
+  /** A 32-bit length or count header, which msgpack defines as
+    * unsigned: one no JVM array or Vector can hold fails here instead of
+    * wrapping to a negative count.
+    */
+  private def len32(in: ByteIn): Int = {
+    val n = in.i32() & 0xffffffffL
+    if (n > Int.MaxValue) throw new IllegalArgumentException(
+      s"msgpack: length $n exceeds ${Int.MaxValue}")
+    n.toInt
+  }
+
+  /** True iff `row` holds exactly one msgpack value and nothing after
+    * it, with no bin, ext or f32 marker: the shape every
+    * `encode(JsonCodec.normalize(v))` has (the binary record row).
+    * Walks the markers without decoding or allocating.
+    */
+  def isRowValue(row: Array[Byte]): Boolean = {
+    val end = row.length
+    var pos = 0
+    var pending = 1L // values still to walk
+    while (pending > 0 && pos < end) {
+      val m = row(pos) & 0xff
+      pos += 1
+      pending -= 1
+      if (m >= 0xa0 && m < 0xc0) pos += m & 0x1f // fixstr
+      else if (m >= 0x90 && m < 0xa0) pending += m & 0x0f // fixarray
+      else if (m >= 0x80 && m < 0x90) pending += 2 * (m & 0x0f) // fixmap
+      else if (m >= 0xc0 && m < 0xe0) m match {
+        case 0xc0 | 0xc2 | 0xc3 => ()
+        case 0xcc | 0xd0 => pos += 1
+        case 0xcd | 0xd1 => pos += 2
+        case 0xce | 0xd2 => pos += 4
+        case 0xcf | 0xd3 | 0xcb => pos += 8
+        case 0xd9 | 0xda | 0xdb | 0xdc | 0xdd | 0xde | 0xdf =>
+          val width = m match {
+            case 0xd9 => 1; case 0xda | 0xdc | 0xde => 2; case _ => 4
+          }
+          if (end - pos < width) return false
+          var n = 0L
+          var i = 0
+          while (i < width) { n = (n << 8) | (row(pos + i) & 0xff); i += 1 }
+          pos += width
+          if (m <= 0xdb) { // str8/16/32 payload
+            if (n > end - pos) return false
+            pos += n.toInt
+          } else pending += (if (m >= 0xde) 2 * n else n)
+        case _ => return false // 0xc1, bin, ext, f32
+      }
+      // else: positive or negative fixint
+    }
+    pending == 0 && pos == end
+  }
 
   private def str(in: ByteIn, n: Int): Value =
     Value.Str(new String(in.bytes(n), StandardCharsets.UTF_8))

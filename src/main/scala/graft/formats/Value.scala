@@ -1,5 +1,7 @@
 package graft.formats
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 /** The rq record data model (reference: src/value/mod.rs:19-46): a
   * dynamically-typed, self-describing record. This AST is the codec
   * interchange inside graft — every format codec maps bytes ⇄ Value;
@@ -118,6 +120,83 @@ object JsonCodec {
     val sb = new StringBuilder
     emitTo(v, sb)
     sb.toString
+  }
+
+  /** `parse(emit(v))` computed without the text, UTF-8 hop included:
+    * tagged scalars widen, `U64` that fits a Long becomes `I64`,
+    * `Bytes` become a sequence of numbers, non-string map keys become
+    * the string `emit` prints, NaN/±Inf become `Unit`, −0.0 becomes
+    * 0.0, `F32` becomes the `F64` of its f32 decimal form, and lone
+    * surrogates become `?` (as in the UTF-8 bytes of the text). These
+    * are the values the JSON text row delivers, so a binary row holding
+    * msgpack of `normalize(v)` yields the same output bytes. Subtrees
+    * that need no change are returned as they are.
+    */
+  def normalize(v: Value): Value = v match {
+    case Value.Str(s) => val t = utf8Safe(s); if (t eq s) v else Value.Str(t)
+    case Value.Unit | _: Value.Bool | _: Value.I64 => v
+    case Value.F64(d) =>
+      if (d.isNaN || d.isInfinite) Value.Unit
+      else if (java.lang.Double.doubleToRawLongBits(d) == Long.MinValue)
+        Value.F64(0.0) // −0.0 prints as "0.0"
+      else v
+    case Value.U64(bits) => if (bits >= 0) Value.I64(bits) else v
+    case Value.F32(f) => // mirrors emitTo's F32 case
+      if (f.isNaN || f.isInfinite) Value.Unit
+      else if (f == Math.floor(f) && Math.abs(f) < 1e15f)
+        Value.F64(f.toLong.toDouble)
+      else Value.F64(java.lang.Float.toString(f).toDouble)
+    case Value.Chr(c) => Value.Str(utf8Safe(c.toString))
+    case Value.Bytes(b) =>
+      Value.Seq(b.iterator.map(x => Value.I64(x & 0xff): Value).toVector)
+    case Value.Seq(vs) =>
+      val ws = mapShared(vs)(normalize)
+      if (ws eq vs) v else Value.Seq(ws)
+    case Value.Map(kvs) =>
+      val ws = mapShared(kvs) { kv =>
+        val k = kv._1 match {
+          case Value.Str(_) => normalize(kv._1)
+          case other => Value.Str(utf8Safe(emit(other)))
+        }
+        val e = normalize(kv._2)
+        if ((k eq kv._1) && (e eq kv._2)) kv else (k, e)
+      }
+      if (ws eq kvs) v else Value.Map(ws)
+    case tagged => Value.widenShallow(tagged) // I8..U32
+  }
+
+  /** `s` as it comes back from its UTF-8 bytes (lone surrogates → `?`). */
+  private def utf8Safe(s: String): String = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+          Character.isLowSurrogate(s.charAt(i + 1))) i += 2
+      else if (Character.isSurrogate(c))
+        return new String(s.getBytes(UTF_8), UTF_8)
+      else i += 1
+    }
+    s
+  }
+
+  /** `xs.map(f)`, or `xs` itself when `f` returns every element unchanged. */
+  private def mapShared[A <: AnyRef](xs: Vector[A])(f: A => A): Vector[A] = {
+    val it = xs.iterator
+    var i = 0
+    while (it.hasNext) {
+      val x = it.next()
+      val y = f(x)
+      if (!(y eq x)) {
+        val b = Vector.newBuilder[A]
+        b.sizeHint(xs.length)
+        b ++= xs.iterator.take(i)
+        b += y
+        it.foreach(z => b += f(z))
+        return b.result()
+      }
+      i += 1
+    }
+    xs
   }
 
   private def emitTo(v: Value, sb: StringBuilder): scala.Unit = v match {

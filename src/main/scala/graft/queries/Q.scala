@@ -49,11 +49,19 @@ object T {
       // this caches METADATA, never data or results. Only the 10
       // immutable driver tables are cached (scratch paths fall through
       // to a fresh read: they may be overwritten between loads).
-      val view = "__graft_t_" +
-        s"$dir/$name".map(c => if (c.isLetterOrDigit) c else '_')
+      val view = viewName(dir, name)
       if (!spark.catalog.tableExists(view))
         load(spark, dir, name).createOrReplaceTempView(view)
       spark.table(view)
+    }
+
+  /** Session view pinning `dir/name` for [[t]]. Injective: ASCII
+    * letters and digits stay, every other char (`_` included) becomes
+    * `_` and its 4 hex digits, so `/a/b` and `/a_b` get different views.
+    */
+  private[graft] def viewName(dir: String, name: String): String =
+    "__graft_t_" + s"$dir/$name".flatMap { c =>
+      if (c < 128 && c.isLetterOrDigit) c.toString else f"_${c.toInt}%04x"
     }
 
   private def load(spark: SparkSession, dir: String,

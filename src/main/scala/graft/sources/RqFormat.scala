@@ -121,6 +121,13 @@ object RqFormat {
     */
   trait RecordEncoder {
     def write(v: Value): Unit
+    /** Write the record a binary row holds (msgpack of a normalized
+      * value, see [[RqTableProvider]]).
+      */
+    def writeMsgPack(row: Array[Byte]): Unit = {
+      checkRow(row)
+      write(MsgPackCodec.decode(java.nio.ByteBuffer.wrap(row)))
+    }
     def finish(): Unit = ()
     /** Push any encoder-internal buffer down to the sink — called at
       * frame-index mark points so the counted byte offset is a true
@@ -128,6 +135,14 @@ object RqFormat {
       */
     def flush(): Unit = ()
   }
+
+  /** Fails with [[InvalidRowException]] unless `row` has the binary
+    * row's shape ([[MsgPackCodec.isRowValue]]).
+    */
+  private[sources] def checkRow(row: Array[Byte]): Unit =
+    if (!MsgPackCodec.isRowValue(row)) throw new InvalidRowException(
+      s"rq sink: a binary row must hold exactly one msgpack value with " +
+        s"no bin, ext or f32 marker (got ${row.length} bytes)")
 
   def encoder(format: String, out: OutputStream,
       options: Map[String, String] = Map.empty): RecordEncoder =
@@ -154,9 +169,15 @@ object RqFormat {
         }
       case "msgpack" =>
         val dos = new java.io.DataOutputStream(
-          new java.io.BufferedOutputStream(out, 1 << 16))
+          new ChunkedOutputStream(out, 1 << 16))
         new RecordEncoder {
           def write(v: Value): Unit = MsgPackCodec.encodeTo(v, dos)
+          // a valid row already is `encode`'s minimal-width output for
+          // its value, and encode ∘ decode is the identity on that
+          override def writeMsgPack(row: Array[Byte]): Unit = {
+            checkRow(row)
+            dos.write(row)
+          }
           override def finish(): Unit = dos.flush()
           override def flush(): Unit = dos.flush()
         }
@@ -205,6 +226,40 @@ object RqFormat {
       case other =>
         throw new IllegalArgumentException(s"unknown rq format: $other")
     }
+}
+
+/** A binary record row that is not one msgpack value of the row form. */
+final class InvalidRowException(msg: String)
+    extends IllegalArgumentException(msg)
+
+/** Buffers writes and passes `sink` only whole `size`-byte chunks (the
+  * rest on flush), so the bytes `sink` has seen after any write depend
+  * on the total written, not on how the writes were split: a row copied
+  * in one write and the same record encoded value by value leave the
+  * same frame-index marks in [[RqDataWriter]].
+  */
+private[sources] final class ChunkedOutputStream(sink: OutputStream,
+    size: Int) extends OutputStream {
+  private val buf = new Array[Byte](size)
+  private var n = 0
+  override def write(b: Int): Unit = {
+    if (n == size) drain()
+    buf(n) = b.toByte
+    n += 1
+  }
+  override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+    var o = off
+    val end = off + len
+    while (o < end) {
+      if (n == size) drain()
+      val k = math.min(end - o, size - n)
+      System.arraycopy(b, o, buf, n, k)
+      n += k
+      o += k
+    }
+  }
+  override def flush(): Unit = { if (n > 0) drain(); sink.flush() }
+  private def drain(): Unit = { sink.write(buf, 0, n); n = 0 }
 }
 
 /** CSV record semantics (reference: src/value/csv.rs): headerless,

@@ -10,14 +10,15 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
   * appearing in a directory". The offset is the count of files in
   * sorted order (append-only directory assumption, like Spark's own
   * FileStreamSource); each batch decodes the newly-arrived files with
-  * the same per-file partition readers as the batch path.
+  * the same per-file partition readers, and the same row form, as the
+  * batch path.
   */
 final case class RqFileOffset(count: Int) extends Offset {
   override def json(): String = count.toString
 }
 
-final class RqMicroBatchStream(options: Map[String, String])
-    extends MicroBatchStream {
+final class RqMicroBatchStream(options: Map[String, String],
+    binary: Boolean) extends MicroBatchStream {
 
   private val (path, fmt, opts) = RqTableProvider.opts(options)
 
@@ -46,7 +47,7 @@ final class RqMicroBatchStream(options: Map[String, String])
     val s = start.asInstanceOf[RqFileOffset].count
     val e = end.asInstanceOf[RqFileOffset].count
     listFiles().slice(s, e)
-      .map(f => RqInputPartition(f, fmt, opts): InputPartition)
+      .map(f => RqInputPartition(f, fmt, opts, binary): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -14,17 +14,32 @@ import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.formats.{JsonCodec, Value}
+import graft.formats.{JsonCodec, MsgPackCodec, Value}
 
 /** DataSource V2 provider for rq record streams (SURVEY §2.1/§2.2,
   * §4.3): `spark.read.format("rq").option("recordFormat", fmt)
-  * .load(path)` yields one row per record with a single `value: STRING`
-  * column holding the record's canonical JSON; the writer encodes that
-  * JSON back into the target format, one output file per partition.
+  * .load(path)` yields one row per record in a single `value` column;
+  * the writer encodes each row into the target format, one output file
+  * per partition.
+  *
+  * Row forms. A frame's schema selects one of two; a read takes the
+  * user schema (`.schema(...)`, batch or streaming), a write the schema
+  * of the written frame, and any other schema is rejected:
+  *  - `value STRING`, the default: the record's canonical JSON text
+  *    (`JsonCodec.emit`), which the writer parses back.
+  *  - `value BINARY`: msgpack of `JsonCodec.normalize(v)`, i.e. of the
+  *    value the JSON text would parse back to, so both forms write the
+  *    same bytes. `RqEngine.run` uses it to skip the JSON emit and
+  *    parse. The writer hands each row to
+  *    `RecordEncoder.writeMsgPack`: the msgpack sink copies it
+  *    unchanged (encode ∘ decode is the identity on encode's output),
+  *    the other sinks decode it. Both first check that the row is one
+  *    msgpack value without bin/ext/f32 markers, and fail the task with
+  *    [[InvalidRowException]] if it is not.
   *
   * Scale notes: concatenated varlen binary streams (msgpack/cbor) and
   * whole-document formats (toml/yaml) carry no sync markers, so the
@@ -45,7 +60,7 @@ class RqTableProvider extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new RqTable(properties.asScala.toMap)
+    new RqTable(properties.asScala.toMap, RqTableProvider.binaryRows(schema))
 
   override def supportsExternalMetadata(): Boolean = true
 }
@@ -127,9 +142,45 @@ private[sources] final class BoundedInputStream(in: java.io.InputStream,
   override def close(): Unit = in.close()
 }
 
+/** The reader's reused binary-row buffer: a growable byte array without
+  * the lock ByteArrayOutputStream takes on every write.
+  */
+private[sources] final class RowBuffer extends java.io.OutputStream {
+  private var buf = new Array[Byte](1 << 12)
+  private var n = 0
+  override def write(b: Int): Unit = {
+    ensure(1)
+    buf(n) = b.toByte
+    n += 1
+  }
+  override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+    ensure(len)
+    System.arraycopy(b, off, buf, n, len)
+    n += len
+  }
+  private def ensure(k: Int): Unit =
+    if (n + k > buf.length)
+      buf = java.util.Arrays.copyOf(buf, math.max(n + k, buf.length * 2))
+  def reset(): Unit = n = 0
+  def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, n)
+}
+
 object RqTableProvider {
-  val schema: StructType =
-    StructType(Seq(StructField("value", StringType, nullable = false)))
+  val schema: StructType = rowSchema(StringType)
+  val binarySchema: StructType = rowSchema(BinaryType)
+
+  private def rowSchema(t: DataType): StructType =
+    StructType(Seq(StructField("value", t, nullable = false)))
+
+  /** Whether `schema` selects the binary row form (see the provider). */
+  def binaryRows(schema: StructType): Boolean = schema.fields match {
+    case Array(StructField(n, t, _, _)) if n.equalsIgnoreCase("value") &&
+        (t == StringType || t == BinaryType) => t == BinaryType
+    case _ => throw new IllegalArgumentException(
+      "rq: a record frame is one column, `value STRING` (JSON text) or " +
+        s"`value BINARY` (msgpack), got ${schema.simpleString}; " +
+        "RqEngine.write converts other frames")
+  }
 
   /** Extension→codec mapping is static; share one factory instead of
     * paying a Configuration XML parse + codec registry scan per
@@ -148,17 +199,21 @@ object RqTableProvider {
   }
 }
 
-final class RqTable(properties: Map[String, String])
+final class RqTable(properties: Map[String, String], binary: Boolean)
     extends Table with SupportsRead with SupportsWrite {
 
   private val props = properties.map { case (k, v) => k.toLowerCase -> v }
 
   override def name(): String = s"rq(${props.getOrElse("path", "?")})"
-  override def schema(): StructType = RqTableProvider.schema
+  override def schema(): StructType =
+    if (binary) RqTableProvider.binarySchema else RqTableProvider.schema
+  // ACCEPT_ANY_SCHEMA: a write's row form is the written frame's schema,
+  // checked in newWriteBuilder; Spark would otherwise resolve the frame
+  // against the STRING schema that getTable infers for a write
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ,
-      TableCapability.STREAMING_WRITE)
+      TableCapability.STREAMING_WRITE, TableCapability.ACCEPT_ANY_SCHEMA)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with Scan with Batch
@@ -176,10 +231,10 @@ final class RqTable(properties: Map[String, String])
       override def isPartiallyPushed: Boolean = true
 
       override def build(): Scan = this
-      override def readSchema(): StructType = RqTableProvider.schema
+      override def readSchema(): StructType = schema()
       override def toBatch: Batch = this
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new RqMicroBatchStream(merged)
+        new RqMicroBatchStream(merged, binary)
       override def description(): String =
         s"rq(${merged.getOrElse("path", "?")})" +
           pushedLimit.map(l => s" PushedLimit: $l").getOrElse("")
@@ -213,11 +268,11 @@ final class RqTable(properties: Map[String, String])
                 .distinct.toSeq) :+ len
               bounds.sliding(2).collect {
                 case Seq(s, e) if e > s =>
-                  RqInputPartition(f.toString, fmt, o, pushedLimit,
+                  RqInputPartition(f.toString, fmt, o, binary, pushedLimit,
                     s, e): InputPartition
               }.toSeq
             case _ =>
-              Seq(RqInputPartition(f.toString, fmt, o, pushedLimit)
+              Seq(RqInputPartition(f.toString, fmt, o, binary, pushedLimit)
                 : InputPartition)
           }
         }.toArray
@@ -230,18 +285,15 @@ final class RqTable(properties: Map[String, String])
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val merged = props ++ info.options.asScala.map {
       case (k, v) => k.toLowerCase -> v }
-    require(info.schema().fields.length == 1 &&
-      info.schema().fields(0).dataType == StringType,
-      "rq sink expects a single STRING column of JSON records " +
-        s"(got ${info.schema().simpleString}); use RqEngine.write")
+    val binaryIn = RqTableProvider.binaryRows(info.schema())
     new WriteBuilder with SupportsTruncate {
       private var doTruncate = false
       override def truncate(): WriteBuilder = { doTruncate = true; this }
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new RqBatchWrite(merged, doTruncate)
+          new RqBatchWrite(merged, binaryIn, doTruncate)
         override def toStreaming: streaming.StreamingWrite =
-          new RqStreamingWrite(merged)
+          new RqStreamingWrite(merged, binaryIn)
       }
     }
   }
@@ -252,30 +304,31 @@ final class RqTable(properties: Map[String, String])
   * epoch's partitions write epoch-unique shards through the same
   * streaming per-record encoders as the batch path.
   */
-final class RqStreamingWrite(options: Map[String, String])
+final class RqStreamingWrite(options: Map[String, String], binary: Boolean)
     extends streaming.StreamingWrite {
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory =
-    RqStreamingWriterFactory(options)
+    RqStreamingWriterFactory(options, binary)
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-final case class RqStreamingWriterFactory(options: Map[String, String])
-    extends streaming.StreamingDataWriterFactory {
+final case class RqStreamingWriterFactory(options: Map[String, String],
+    binary: Boolean) extends streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new RqDataWriter(options, f"part-$epochId%05d-$partitionId%05d", taskId)
+    new RqDataWriter(options, binary,
+      f"part-$epochId%05d-$partitionId%05d", taskId)
 }
 
-/** `start`/`end` bound a frame-indexed byte range; end = -1 means
-  * the whole file (the unsplit path).
+/** `binary` selects the row form; `start`/`end` bound a frame-indexed
+  * byte range; end = -1 means the whole file (the unsplit path).
   */
 final case class RqInputPartition(file: String, format: String,
-    options: Map[String, String], limit: Option[Int] = None,
-    start: Long = 0L, end: Long = -1L)
+    options: Map[String, String], binary: Boolean,
+    limit: Option[Int] = None, start: Long = 0L, end: Long = -1L)
     extends InputPartition
 
 final case class RqReaderFactory() extends PartitionReaderFactory {
@@ -310,12 +363,21 @@ final class RqPartitionReader(part: RqInputPartition)
     val all = RqFormat.decodeStream(part.format, stream, part.options)
     part.limit.fold(all)(all.take)
   }
+  private val toRow: Value => InternalRow =
+    if (part.binary) {
+      val buf = new RowBuffer
+      val out = new java.io.DataOutputStream(buf)
+      v => {
+        buf.reset()
+        MsgPackCodec.encodeTo(JsonCodec.normalize(v), out)
+        InternalRow(buf.toByteArray)
+      }
+    } else v => InternalRow(UTF8String.fromString(JsonCodec.emit(v)))
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     if (records.hasNext) {
-      current = InternalRow(
-        UTF8String.fromString(JsonCodec.emit(records.next())))
+      current = toRow(records.next())
       true
     } else false
   }
@@ -323,8 +385,8 @@ final class RqPartitionReader(part: RqInputPartition)
   override def close(): Unit = stream.close()
 }
 
-final class RqBatchWrite(options: Map[String, String],
-    truncate: Boolean = false) extends BatchWrite {
+final class RqBatchWrite(options: Map[String, String], binary: Boolean,
+    truncate: Boolean) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     if (truncate) {
       // a REAL truncate: clear prior shards driver-side before tasks
@@ -344,20 +406,20 @@ final class RqBatchWrite(options: Map[String, String],
           p.getName.startsWith(".")) && !p.getName.endsWith(".rqx"))
         .foreach(fs.delete(_, false))
     }
-    RqWriterFactory(options)
+    RqWriterFactory(options, binary)
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-final case class RqWriterFactory(options: Map[String, String])
-    extends DataWriterFactory {
+final case class RqWriterFactory(options: Map[String, String],
+    binary: Boolean) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new RqDataWriter(options, f"part-$partitionId%05d", taskId)
+    new RqDataWriter(options, binary, f"part-$partitionId%05d", taskId)
 }
 
-final class RqDataWriter(options: Map[String, String], baseName: String,
-    taskId: Long) extends DataWriter[InternalRow] {
+final class RqDataWriter(options: Map[String, String], binary: Boolean,
+    baseName: String, taskId: Long) extends DataWriter[InternalRow] {
 
   private val (dir, fmt, _) = RqTableProvider.opts(options)
   // optional whole-file compression (option "compression": gzip|none);
@@ -421,7 +483,8 @@ final class RqDataWriter(options: Map[String, String], baseName: String,
         else raw
       enc = RqFormat.encoder(fmt, out, options)
     }
-    enc.write(JsonCodec.parse(record.getUTF8String(0).toString))
+    if (binary) enc.writeMsgPack(record.getBinary(0))
+    else enc.write(JsonCodec.parse(record.getUTF8String(0).toString))
     if (framing) {
       // cheap check first; flush (real boundary) only at mark points
       if (counted.count - lastMark >= frameEvery) {

@@ -143,6 +143,114 @@ class CodecSpec extends AnyFunSuite {
     case other => other
   }
 
+  // ---- binary row form: normalize and isRowValue ----
+
+  /** Every value the JSON text hop changes, mixed with ordinary ones. */
+  private val genJsonEdge: Gen[Value] = Gen.oneOf(
+    Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      -0.0, 1e15, -1e15, 1e16, 123456789012345678.0, 999999999999999.0,
+      4.9e-324, Double.MaxValue).map(Value.F64),
+    Gen.oneOf(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity,
+      -0.0f, 1.1f, 3.4028235e38f, 1e15f, 16777217f, 1.4e-45f).map(Value.F32),
+    Arbitrary.arbitrary[Float].map(Value.F32),
+    Arbitrary.arbitrary[Double].map(Value.F64),
+    Arbitrary.arbitrary[Long].map(Value.U64),
+    Gen.oneOf("a\uD800b", "\uDC00", "\uD83D\uDE00", "x\uDBFF",
+      "\"q\"\\\n\u0001\u007f").map(Value.Str),
+    Arbitrary.arbitrary[String].map(Value.Str),
+    Arbitrary.arbitrary[Char].map(Value.Chr),
+    Gen.const(Value.Map(Vector(Value.Str("k") -> Value.I64(1),
+      Value.Str("k") -> Value.I64(2))))) // duplicate keys
+
+  private def genRowValue(depth: Int): Gen[Value] =
+    if (depth <= 0) Gen.oneOf(genScalar, genTaggedScalar, genJsonEdge)
+    else Gen.frequency(
+      6 -> genRowValue(0),
+      2 -> Gen.listOfN(3, genRowValue(depth - 1))
+        .map(vs => Value.Seq(vs.toVector)),
+      // keys of any type, nested ones included
+      2 -> Gen.listOfN(3, Gen.zip(genRowValue(depth - 1),
+        genRowValue(depth - 1))).map(kvs => Value.Map(kvs.toVector)))
+
+  private def forAllRowValues(seed: Long)(body: Value => Unit): Unit = {
+    var s = org.scalacheck.rng.Seed(seed)
+    var n = 0
+    while (n < 500) {
+      genRowValue(3).apply(Gen.Parameters.default, s).foreach { v =>
+        body(v); n += 1
+      }
+      s = s.next
+    }
+  }
+
+  test("normalize is parse(emit(v)) across the UTF-8 text row, " +
+      "down to the msgpack bytes") {
+    import org.apache.spark.unsafe.types.UTF8String
+    forAllRowValues(44L) { v =>
+      val viaText = JsonCodec.parse(
+        UTF8String.fromString(JsonCodec.emit(v)).toString)
+      val n = JsonCodec.normalize(v)
+      assert(n == viaText, v)
+      // Value equality cannot see −0.0 vs 0.0; the row bytes can
+      val row = MsgPackCodec.encode(n)
+      assert(row.sameElements(MsgPackCodec.encode(viaText)), v)
+      assert(MsgPackCodec.decodeStream(row) == Vector(n))
+      assert(JsonCodec.normalize(n) eq n, "normalize is idempotent")
+    }
+  }
+
+  test("isRowValue accepts exactly one row-form value") {
+    forAllRowValues(45L) { v =>
+      val row = MsgPackCodec.encode(JsonCodec.normalize(v))
+      assert(MsgPackCodec.isRowValue(row), v)
+      assert(!MsgPackCodec.isRowValue(row.init), s"truncated $v")
+      assert(!MsgPackCodec.isRowValue(row ++ row), s"two values $v")
+      assert(!MsgPackCodec.isRowValue(row :+ 0xc0.toByte), s"trailing $v")
+    }
+    def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    assert(!MsgPackCodec.isRowValue(Array.empty))
+    val banned = Seq(
+      MsgPackCodec.encode(Value.Bytes(Array[Byte](1, 2))), // bin8
+      b(0xc5, 0, 1, 7), b(0xc6, 0, 0, 0, 1, 7), // bin16, bin32
+      b(0xd4, 1, 2), b(0xc7, 1, 5, 9), // fixext1, ext8
+      MsgPackCodec.encode(Value.F32(1.5f)), // f32
+      b(0xc1)) // never used
+    for (x <- banned) {
+      assert(!MsgPackCodec.isRowValue(x))
+      assert(!MsgPackCodec.isRowValue(b(0x91) ++ x), "nested")
+      assert(!MsgPackCodec.isRowValue(b(0x81, 0xa1, 'k') ++ x), "map value")
+    }
+    // length and count headers reaching past the row
+    assert(!MsgPackCodec.isRowValue(b(0xdb, 0xff, 0xff, 0xff, 0xff, 'a')))
+    assert(!MsgPackCodec.isRowValue(b(0xdd, 0xff, 0xff, 0xff, 0xff, 0xc0)))
+    assert(!MsgPackCodec.isRowValue(b(0xdf, 0, 0, 0, 1, 0xc0)))
+    assert(MsgPackCodec.isRowValue(b(0xdf, 0, 0, 0, 1, 0xc0, 0xc0)))
+  }
+
+  test("length headers beyond Int range fail with an error naming the " +
+      "format, never wrap (cbor 64-bit, msgpack 32-bit)") {
+    import java.nio.ByteBuffer
+    // cbor bytes/text/array/map claiming 2^32 (.toInt made it 0: the
+    // payload was then misread as records), 2^62 and 2^64-1
+    for (head <- Seq(0x5b, 0x7b, 0x9b, 0xbb);
+        n <- Seq(1L << 32, 1L << 62, -1L)) {
+      val in = ByteBuffer.allocate(12).put(head.toByte).putLong(n)
+        .put(Array[Byte](0x61, 0x62, 0x63)).array()
+      val e = intercept[IllegalArgumentException](CborCodec.decodeStream(in))
+      assert(e.getMessage.startsWith("cbor: length"), e.getMessage)
+    }
+    // msgpack str32/bin32/ext32/array32/map32 at 2^31 and 2^32-1 (read
+    // signed: NegativeArraySizeException, or an empty container)
+    for (head <- Seq(0xdb, 0xc6, 0xc9, 0xdd, 0xdf);
+        n <- Seq(0x80000000L, 0xffffffffL)) {
+      val in = ByteBuffer.allocate(8).put(head.toByte).putInt(n.toInt)
+        .put(Array[Byte](1, 0x61, 0x62)).array()
+      val e = intercept[IllegalArgumentException](
+        MsgPackCodec.decodeStream(in))
+      assert(e.getMessage.startsWith("msgpack: length"), e.getMessage)
+    }
+  }
+
   test("msgpack stream: back-to-back values with clean EOF") {
     val vs = Vector(Value.I64(1), Value.Str("two"), Value.obj("three" -> Value.Bool(true)))
     assert(MsgPackCodec.decodeStream(MsgPackCodec.encodeStream(vs)) == vs)

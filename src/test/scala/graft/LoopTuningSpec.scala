@@ -75,10 +75,44 @@ class LoopTuningSpec extends SparkSpec {
     val a = T.t(spark, sf0001, "nation").orderBy("n_nationkey").collect()
     val b = T.t(spark, sf0001, "nation").orderBy("n_nationkey").collect()
     assert(a.toSeq == b.toSeq)
-    val view = "__graft_t_" +
-      s"$sf0001/nation".map(c => if (c.isLetterOrDigit) c else '_')
-    assert(spark.catalog.tableExists(view))
+    assert(spark.catalog.tableExists(T.viewName(sf0001, "nation")))
     // scratch (non-contract) names never cache
     assert(!spark.catalog.tableExists("__graft_t_whatever_scratch"))
+    // dirs that differ only in non-alphanumerics get their own views:
+    // `/a/b` and `/a_b` once shared one, and the second read the first
+    assert(T.viewName("/a/b", "nation") != T.viewName("/a_b", "nation"))
+    assert(T.viewName("/a/b", "nation") != T.viewName("/a.b", "nation"))
+    val root = java.nio.file.Files.createTempDirectory("tt_key").toString
+    val full = T.t(spark, sf0001, "nation")
+    full.write.parquet(s"$root/a/b/nation.parquet")
+    full.where(col("n_nationkey") < 5)
+      .write.parquet(s"$root/a_b/nation.parquet")
+    assert(T.t(spark, s"$root/a/b", "nation").count() == full.count())
+    assert(T.t(spark, s"$root/a_b", "nation").count() == 5)
+  }
+
+  test("withLoopAqeOff: AQE off inside, restored after and on throw; " +
+      "a no-op with the kill switch off") {
+    val conf = spark.conf
+    val aqe0 = conf.get("spark.sql.adaptive.enabled")
+    for (outer <- Seq("true", "false")) {
+      conf.set("spark.sql.adaptive.enabled", outer)
+      try {
+        assert(LoopTuning.withLoopAqeOff(spark, on = true) {
+          conf.get("spark.sql.adaptive.enabled")
+        } == "false")
+        assert(conf.get("spark.sql.adaptive.enabled") == outer)
+        intercept[IllegalStateException] {
+          LoopTuning.withLoopAqeOff(spark, on = true) {
+            throw new IllegalStateException("boom")
+          }
+        }
+        assert(conf.get("spark.sql.adaptive.enabled") == outer)
+        assert(LoopTuning.withLoopAqeOff(spark, on = false) {
+          conf.get("spark.sql.adaptive.enabled")
+        } == outer)
+        assert(conf.get("spark.sql.adaptive.enabled") == outer)
+      } finally conf.set("spark.sql.adaptive.enabled", aqe0)
+    }
   }
 }

@@ -238,13 +238,232 @@ class RqEngineSpec extends SparkSpec {
     }
   }
 
+  // ---- binary row form: engine.run against the JSON text row ----
+
+  private val provider = classOf[graft.sources.RqTableProvider].getName
+
+  /** Every file of an output directory, sidecars and checksums included;
+    * avro shards as their records, since each OCF file carries a random
+    * sync marker.
+    */
+  private def tree(dir: String): Map[String, Any] =
+    new java.io.File(dir).listFiles().filter(_.isFile).collect {
+      case f if f.getName.endsWith(".avro") => f.getName ->
+        graft.formats.AvroCodec.readStream(Files.readAllBytes(f.toPath))
+      case f if !f.getName.endsWith(".avro.crc") =>
+        f.getName -> Files.readAllBytes(f.toPath).toSeq
+    }.toMap
+
+  private def chain(t: Throwable): List[Throwable] =
+    if (t == null) Nil else t :: chain(t.getCause)
+
+  /** Runs `in → out` through `engine.run` (binary rows) and through
+    * `write(read(...))` (JSON text rows): both must write the same
+    * bytes or fail with the same root cause. Returns whether they
+    * wrote.
+    */
+  private def sameAsTextPath(in: String, inDir: String, out: String,
+      opts: Map[String, String]): Boolean = {
+    import scala.util.{Failure, Success, Try}
+    val refDir = tmp()
+    val gotDir = tmp()
+    val ref = Try(engine.write(out, engine.read(in, inDir, opts), refDir, opts))
+    val got = Try(engine.run(in, inDir, out, gotDir, opts))
+    (ref, got) match {
+      case (Success(_), Success(_)) =>
+        assert(tree(gotDir) == tree(refDir), s"$in -> $out $opts")
+        true
+      case (Failure(a), Failure(b)) =>
+        val (ra, rb) = (chain(a).last, chain(b).last)
+        assert(ra.getClass == rb.getClass && ra.getMessage == rb.getMessage,
+          s"$in -> $out: text path failed with $ra, run with $rb")
+        false
+      case _ => fail(s"$in -> $out $opts: text path $ref, run $got")
+    }
+  }
+
+  private val avroSchema =
+    """{"type":"record","name":"R","fields":[{"name":"id","type":"long"},
+      |{"name":"name","type":"string"},
+      |{"name":"vals","type":{"type":"array","items":"long"}}]}"""
+      .stripMargin
+  private val personProto =
+    """syntax = "proto3";
+      |package example;
+      |message Person { string name = 1; int32 age = 2; }
+      |""".stripMargin
+  private val matrixOpts = Map("avroSchema" -> avroSchema,
+    "message" -> ".example.Person", "protoSchema" -> personProto)
+
+  /** Records with every value the JSON text hop changes: tagged widths
+    * (typed reads), f32, NaN/±Inf, −0.0, doubles ≥ 1e15, u64, bytes,
+    * non-string and nested keys, duplicate keys, lone surrogates.
+    */
+  private lazy val edgeRecords: Seq[graft.formats.Value] = {
+    import graft.formats.Value._
+    Vector(
+      obj("id" -> I64(1), "name" -> Str("a"), "vals" -> seq(I64(1), I64(2))),
+      obj("id" -> I64(2), "name" -> Str("b\uD800"), "vals" -> seq()),
+      obj("f32" -> F32(1.1f), "max" -> F32(3.4028235e38f), "nz" -> F64(-0.0),
+        "nan" -> F64(Double.NaN), "inf" -> F64(Double.NegativeInfinity),
+        "big" -> F64(1e15), "bigger" -> F64(123456789012345678.0),
+        "u" -> U64(-1L), "u8" -> I64(200), "neg" -> I64(-70000)),
+      Map(Vector(I64(7) -> Bytes(Array[Byte](0, -1, 7)),
+        seq(Str("k"), F64(0.5)) -> Unit,
+        obj("n" -> Str("\"q\"")) -> Bool(true),
+        Str("dup") -> I64(1), Str("dup") -> I64(2))),
+      seq(Str("x\uDC00y"), F64(Double.PositiveInfinity), Bytes(Array[Byte](9))))
+  }
+
+  /** What a binary row holds for each record of `inputs("msgpack")`. */
+  private lazy val edgeRows = {
+    import graft.formats._
+    MsgPackCodec.decodeStream(MsgPackCodec.encodeStream(edgeRecords))
+      .map(JsonCodec.normalize)
+  }
+
+  /** One input directory per readable format. */
+  private lazy val inputs: Map[String, String] = {
+    import graft.formats._
+    def put(name: String, bytes: Array[Byte]): String = {
+      val dir = tmp()
+      Files.write(java.nio.file.Paths.get(dir, name), bytes)
+      dir
+    }
+    def text(name: String, s: String) = put(name, s.getBytes("UTF-8"))
+    Map(
+      "json" -> text("in.json", ndjson +
+        "{\"s\":\"lone \\ud800\",\"z\":-0.0,\"e\":1e15," +
+        "\"u\":18446744073709551615,\"d\":{\"k\":1,\"k\":2}," +
+        "\"f\":[1.5e300,-2.5,0.1]}\n7 \"x\" null\n"),
+      "csv" -> text("in.csv", "a,1,true\n\"x,y\",2,false\n\n,\n"),
+      "raw" -> text("in.txt", "hello\n\nw\u00f6rld\n"),
+      "toml" -> text("in.toml", "title = \"t\"\nf = 1.5\n[a]\nb = 1\n"),
+      "yaml" -> text("in.yaml", "a: 1\nb: [x, 2.5, -0.0]\nc: null\n"),
+      "msgpack" -> put("in.mp", MsgPackCodec.encodeStream(edgeRecords)),
+      "cbor" -> put("in.cbor", CborCodec.encodeStream(edgeRecords)),
+      "avro" -> put("in.avro", AvroCodec.writeStream(Seq(
+        Value.obj("id" -> Value.I64(1), "name" -> Value.Str("a"),
+          "vals" -> Value.seq(Value.I64(1), Value.I64(-2))),
+        Value.obj("id" -> Value.I64(2), "name" -> Value.Str("\u00e9"),
+          "vals" -> Value.seq())),
+        AvroCodec.parseSchema(avroSchema), "deflate")),
+      "protobuf" -> put("in.pb",
+        Array[Byte](0x0a, 3, 'A', 'd', 'a', 0x10, 36)))
+  }
+
+  private val writable =
+    Seq("json", "csv", "msgpack", "cbor", "toml", "yaml", "raw", "avro")
+
+  test("engine.run writes the same bytes as write(read(...)) for every " +
+      "readable x writable pair") {
+    val wrote = for {
+      in <- graft.sources.RqFormat.names
+      out <- writable
+      if sameAsTextPath(in, inputs(in), out, matrixOpts)
+    } yield in -> out
+    // the sinks every input can reach must have written, not only agreed
+    for (in <- graft.sources.RqFormat.names; out <- Seq("json", "msgpack",
+        "cbor", "yaml"))
+      assert(wrote.contains(in -> out), s"$in -> $out did not write")
+    for (pair <- Seq("csv" -> "csv", "raw" -> "raw", "avro" -> "avro",
+        "avro" -> "toml", "toml" -> "toml"))
+      assert(wrote.contains(pair), s"$pair did not write")
+  }
+
+  test("engine.run byte identity holds for typed reads, framed and " +
+      "gzip outputs") {
+    for (in <- Seq("msgpack", "cbor"); out <- writable)
+      sameAsTextPath(in, inputs(in), out, matrixOpts + ("typed" -> "true"))
+    for (in <- Seq("json", "msgpack"); out <- Seq("json", "msgpack", "cbor"))
+      assert(sameAsTextPath(in, inputs(in), out,
+        Map("compression" -> "gzip")), s"$in -> $out gzip")
+    // framed: large enough that the msgpack sink's 64 KiB buffer drains
+    // several times between marks, so the sidecar offsets are exercised
+    import graft.formats._
+    val big = (0 until 4000).map(i => Value.obj("k" -> Value.I64(i),
+      "s" -> Value.Str("x" * (i % 97)), "f" -> Value.F64(i / 7.0),
+      "t" -> Value.F32(i / 3.0f)))
+    val bigDir = tmp()
+    Files.write(java.nio.file.Paths.get(bigDir, "big.mp"),
+      MsgPackCodec.encodeStream(big))
+    for (out <- Seq("json", "msgpack", "cbor");
+        typed <- Seq("false", "true")) {
+      val opts = Map("frameEvery" -> "4096", "typed" -> typed)
+      assert(sameAsTextPath("msgpack", bigDir, out, opts), s"-> $out $opts")
+    }
+    val framed = tmp()
+    engine.run("msgpack", bigDir, "msgpack", framed,
+      Map("frameEvery" -> "4096"))
+    assert(new java.io.File(framed).list().exists(_.endsWith(".rqx")))
+  }
+
+  test("row forms: read stays STRING, the schema selects the form, " +
+      "others are rejected") {
+    val dir = inputs("msgpack")
+    assert(engine.read("msgpack", dir).schema ==
+      graft.sources.RqTableProvider.schema)
+    val rows = spark.read.format(provider).option("recordFormat", "msgpack")
+      .schema("value BINARY").load(dir)
+    assert(rows.schema.fields.map(_.dataType).toSeq ==
+      Seq(org.apache.spark.sql.types.BinaryType))
+    assert(rows.collect().map(r => graft.formats.MsgPackCodec.decodeStream(
+      r.getAs[Array[Byte]](0)).head).toSeq == edgeRows)
+    for (bad <- Seq("value INT", "value STRING, other STRING", "v STRING")) {
+      val ex = intercept[Exception] {
+        spark.read.format(provider).option("recordFormat", "msgpack")
+          .schema(bad).load(dir).collect()
+      }
+      assert(chain(ex).exists(_.getMessage.contains("`value BINARY`")), bad)
+    }
+  }
+
+  test("a malformed binary row fails the sink with a typed error and " +
+      "commits no shard") {
+    import spark.implicits._
+    import graft.formats.{MsgPackCodec, Value}
+    val good = MsgPackCodec.encode(Value.obj("k" -> Value.I64(1)))
+    val bad = Seq(
+      "msgpack" -> good.init, // truncated
+      "msgpack" -> (good ++ good), // two values
+      "msgpack" -> MsgPackCodec.encode(Value.Bytes(Array[Byte](1))), // bin
+      "json" -> (good :+ 0xc0.toByte)) // trailing byte, decoding sink
+    for ((fmt, row) <- bad) {
+      val out = tmp()
+      val ex = intercept[Exception] {
+        Seq(good, row).toDF("value").coalesce(1).write.format(provider)
+          .option("recordFormat", fmt).mode("overwrite").save(out)
+      }
+      assert(chain(ex).exists(
+        _.isInstanceOf[graft.sources.InvalidRowException]), s"$fmt: $ex")
+      assert(new java.io.File(out).list().forall(n =>
+        n.startsWith(".") || n.startsWith("_")), s"$fmt committed a shard")
+    }
+  }
+
+  test("streaming: readStream with value BINARY -> writeStream rq " +
+      "round-trips") {
+    val outDir = tmp()
+    val q = spark.readStream.format(provider)
+      .option("recordFormat", "msgpack").schema("value BINARY")
+      .load(inputs("msgpack"))
+      .writeStream.format(provider)
+      .option("recordFormat", "msgpack").option("path", outDir)
+      .option("checkpointLocation", tmp())
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val shards = new java.io.File(outDir).listFiles()
+      .filter(_.getName.endsWith(".mp"))
+    assert(shards.length == 1)
+    assert(graft.formats.MsgPackCodec.decodeStream(
+      Files.readAllBytes(shards(0).toPath)) == edgeRows)
+  }
+
   test("protobuf sink unimplemented (K11 parity)") {
     val in = writeInput()
     val ex = intercept[Exception] {
       engine.run("json", in, "protobuf", tmp())
     }
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: chain(t.getCause)
     assert(chain(ex).exists(_.isInstanceOf[UnsupportedOperationException]))
   }
 }
