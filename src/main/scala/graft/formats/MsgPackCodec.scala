@@ -204,9 +204,13 @@ object MsgPackCodec {
   }
 
   /** True iff `row` holds exactly one msgpack value and nothing after
-    * it, with no bin, ext or f32 marker: the shape every
-    * `encode(JsonCodec.normalize(v))` has (the binary record row).
-    * Walks the markers without decoding or allocating.
+    * it, in the form `encode(JsonCodec.normalize(v))` gives (the binary
+    * record row): no bin, ext or f32 marker; integer, length and count
+    * headers of minimal width; well-formed UTF-8 strings; f64 finite
+    * and not −0.0. So `encode(decode(row))` is `row` itself for every
+    * row it accepts. Map keys may be of any type: those pass
+    * `encode ∘ decode` unchanged too. Walks the bytes without decoding
+    * or allocating.
     */
   def isRowValue(row: Array[Byte]): Boolean = {
     val end = row.length
@@ -216,33 +220,87 @@ object MsgPackCodec {
       val m = row(pos) & 0xff
       pos += 1
       pending -= 1
-      if (m >= 0xa0 && m < 0xc0) pos += m & 0x1f // fixstr
-      else if (m >= 0x90 && m < 0xa0) pending += m & 0x0f // fixarray
+      if (m >= 0xa0 && m < 0xc0) { // fixstr
+        val n = m & 0x1f
+        if (n > end - pos || !isUtf8(row, pos, n)) return false
+        pos += n
+      } else if (m >= 0x90 && m < 0xa0) pending += m & 0x0f // fixarray
       else if (m >= 0x80 && m < 0x90) pending += 2 * (m & 0x0f) // fixmap
-      else if (m >= 0xc0 && m < 0xe0) m match {
-        case 0xc0 | 0xc2 | 0xc3 => ()
-        case 0xcc | 0xd0 => pos += 1
-        case 0xcd | 0xd1 => pos += 2
-        case 0xce | 0xd2 => pos += 4
-        case 0xcf | 0xd3 | 0xcb => pos += 8
-        case 0xd9 | 0xda | 0xdb | 0xdc | 0xdd | 0xde | 0xdf =>
-          val width = m match {
-            case 0xd9 => 1; case 0xda | 0xdc | 0xde => 2; case _ => 4
-          }
-          if (end - pos < width) return false
-          var n = 0L
-          var i = 0
-          while (i < width) { n = (n << 8) | (row(pos + i) & 0xff); i += 1 }
-          pos += width
-          if (m <= 0xdb) { // str8/16/32 payload
-            if (n > end - pos) return false
-            pos += n.toInt
-          } else pending += (if (m >= 0xde) 2 * n else n)
-        case _ => return false // 0xc1, bin, ext, f32
+      else if (m >= 0xc0 && m < 0xe0 && m != 0xc0 && m != 0xc2 &&
+          m != 0xc3) {
+        val width = m match {
+          case 0xcc | 0xd0 | 0xd9 => 1
+          case 0xcd | 0xd1 | 0xda | 0xdc | 0xde => 2
+          case 0xce | 0xd2 | 0xdb | 0xdd | 0xdf => 4
+          case 0xcf | 0xd3 | 0xcb => 8
+          case _ => return false // 0xc1, bin, ext, f32
+        }
+        if (end - pos < width) return false
+        var n = 0L // the header's argument, big-endian
+        var i = 0
+        while (i < width) { n = (n << 8) | (row(pos + i) & 0xff); i += 1 }
+        pos += width
+        // each marker only where encode's minimal width picks it
+        val minimal = m match {
+          case 0xcc => n >= 0x80
+          case 0xcd => n >= 0x100
+          case 0xce => n >= 0x10000
+          case 0xcf => n < 0 || n >= 0x100000000L // unsigned ≥ 2^32
+          case 0xd0 => n.toByte < -32
+          case 0xd1 => n.toShort < Byte.MinValue
+          case 0xd2 => n.toInt < Short.MinValue
+          case 0xd3 => n < Int.MinValue
+          case 0xcb =>
+            val d = java.lang.Double.longBitsToDouble(n)
+            !d.isNaN && !d.isInfinite && n != Long.MinValue // −0.0
+          case 0xd9 => n >= 32
+          case 0xda => n >= 0x100
+          case 0xdb | 0xdd | 0xdf => n >= 0x10000
+          case _ => n >= 16 // array16, map16
+        }
+        if (!minimal) return false
+        if (m >= 0xd9 && m <= 0xdb) { // str8/16/32 payload
+          if (n > end - pos || !isUtf8(row, pos, n.toInt)) return false
+          pos += n.toInt
+        } else if (m >= 0xdc) pending += (if (m >= 0xde) 2 * n else n)
       }
-      // else: positive or negative fixint
+      // else: nil, bool, positive or negative fixint
     }
     pending == 0 && pos == end
+  }
+
+  /** Whether `n` bytes of `b` from `from` are well-formed UTF-8: no
+    * overlong form, surrogate or code point above U+10FFFF, the bytes a
+    * String decodes and re-encodes unchanged.
+    */
+  private def isUtf8(b: Array[Byte], from: Int, n: Int): Boolean = {
+    val end = from + n
+    var i = from
+    while (i < end) {
+      val c = b(i) & 0xff
+      if (c < 0x80) i += 1
+      else {
+        val k = // continuation bytes
+          if (c >= 0xc2 && c < 0xe0) 1
+          else if (c >= 0xe0 && c < 0xf0) 2
+          else if (c >= 0xf0 && c < 0xf5) 3
+          else return false
+        if (end - i <= k) return false
+        var cp = c & (0x3f >> k)
+        var j = 1
+        while (j <= k) {
+          val d = b(i + j) & 0xff
+          if ((d & 0xc0) != 0x80) return false
+          cp = (cp << 6) | (d & 0x3f)
+          j += 1
+        }
+        if (k == 2 && (cp < 0x800 || (cp >= 0xd800 && cp < 0xe000)))
+          return false
+        if (k == 3 && (cp < 0x10000 || cp > 0x10ffff)) return false
+        i += k + 1
+      }
+    }
+    true
   }
 
   private def str(in: ByteIn, n: Int): Value =

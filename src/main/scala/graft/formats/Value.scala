@@ -129,8 +129,7 @@ object JsonCodec {
     * 0.0, `F32` becomes the `F64` of its f32 decimal form, and lone
     * surrogates become `?` (as in the UTF-8 bytes of the text). These
     * are the values the JSON text row delivers, so a binary row holding
-    * msgpack of `normalize(v)` yields the same output bytes. Subtrees
-    * that need no change are returned as they are.
+    * msgpack of `normalize(v)` yields the same output bytes.
     */
   def normalize(v: Value): Value = v match {
     case Value.Str(s) => val t = utf8Safe(s); if (t eq s) v else Value.Str(t)
@@ -149,19 +148,14 @@ object JsonCodec {
     case Value.Chr(c) => Value.Str(utf8Safe(c.toString))
     case Value.Bytes(b) =>
       Value.Seq(b.iterator.map(x => Value.I64(x & 0xff): Value).toVector)
-    case Value.Seq(vs) =>
-      val ws = mapShared(vs)(normalize)
-      if (ws eq vs) v else Value.Seq(ws)
-    case Value.Map(kvs) =>
-      val ws = mapShared(kvs) { kv =>
-        val k = kv._1 match {
-          case Value.Str(_) => normalize(kv._1)
-          case other => Value.Str(utf8Safe(emit(other)))
-        }
-        val e = normalize(kv._2)
-        if ((k eq kv._1) && (e eq kv._2)) kv else (k, e)
+    case Value.Seq(vs) => Value.Seq(vs.map(normalize))
+    case Value.Map(kvs) => Value.Map(kvs.map { case (k, e) =>
+      val key = k match {
+        case Value.Str(_) => normalize(k)
+        case other => Value.Str(utf8Safe(emit(other)))
       }
-      if (ws eq kvs) v else Value.Map(ws)
+      (key, normalize(e))
+    })
     case tagged => Value.widenShallow(tagged) // I8..U32
   }
 
@@ -177,26 +171,6 @@ object JsonCodec {
       else i += 1
     }
     s
-  }
-
-  /** `xs.map(f)`, or `xs` itself when `f` returns every element unchanged. */
-  private def mapShared[A <: AnyRef](xs: Vector[A])(f: A => A): Vector[A] = {
-    val it = xs.iterator
-    var i = 0
-    while (it.hasNext) {
-      val x = it.next()
-      val y = f(x)
-      if (!(y eq x)) {
-        val b = Vector.newBuilder[A]
-        b.sizeHint(xs.length)
-        b ++= xs.iterator.take(i)
-        b += y
-        it.foreach(z => b += f(z))
-        return b.result()
-      }
-      i += 1
-    }
-    xs
   }
 
   private def emitTo(v: Value, sb: StringBuilder): scala.Unit = v match {

@@ -107,12 +107,9 @@ object LoopTuning {
     * declared entries run their loops single-threaded on the session
     * driving them; do not run a batch loop concurrently with other
     * planning on the same session.
-    *
-    * `on` defaults to the `SPARK_GRAFT_LOOP_TUNING` kill switch.
     */
-  def withLoopAqeOff[T](spark: SparkSession, on: Boolean = enabled)(
-      body: => T): T = {
-    if (!on) return body
+  def withLoopAqeOff[T](spark: SparkSession)(body: => T): T = {
+    if (!enabled) return body
     val conf = spark.conf
     val prevAqe = conf.get("spark.sql.adaptive.enabled")
     conf.set("spark.sql.adaptive.enabled", "false")

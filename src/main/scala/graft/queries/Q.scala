@@ -55,13 +55,16 @@ object T {
       spark.table(view)
     }
 
-  /** Session view pinning `dir/name` for [[t]]. Injective: ASCII
-    * letters and digits stay, every other char (`_` included) becomes
-    * `_` and its 4 hex digits, so `/a/b` and `/a_b` get different views.
+  /** Session view pinning `dir/name` for [[t]]. Injective under
+    * Spark's case-insensitive view lookup: lowercase ASCII letters and
+    * digits stay, every other char (`_` and uppercase included) becomes
+    * `_` and its 4 hex digits, so `/a/b`, `/a_b` and `/a/B` get
+    * different views.
     */
   private[graft] def viewName(dir: String, name: String): String =
     "__graft_t_" + s"$dir/$name".flatMap { c =>
-      if (c < 128 && c.isLetterOrDigit) c.toString else f"_${c.toInt}%04x"
+      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) c.toString
+      else f"_${c.toInt}%04x"
     }
 
   private def load(spark: SparkSession, dir: String,

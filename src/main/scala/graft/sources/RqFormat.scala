@@ -141,8 +141,9 @@ object RqFormat {
     */
   private[sources] def checkRow(row: Array[Byte]): Unit =
     if (!MsgPackCodec.isRowValue(row)) throw new InvalidRowException(
-      s"rq sink: a binary row must hold exactly one msgpack value with " +
-        s"no bin, ext or f32 marker (got ${row.length} bytes)")
+      s"rq sink: a binary row must hold exactly one msgpack value in " +
+        s"encode's canonical form, with no bin, ext or f32 marker " +
+        s"(got ${row.length} bytes)")
 
   def encoder(format: String, out: OutputStream,
       options: Map[String, String] = Map.empty): RecordEncoder =
@@ -172,8 +173,8 @@ object RqFormat {
           new ChunkedOutputStream(out, 1 << 16))
         new RecordEncoder {
           def write(v: Value): Unit = MsgPackCodec.encodeTo(v, dos)
-          // a valid row already is `encode`'s minimal-width output for
-          // its value, and encode ∘ decode is the identity on that
+          // a valid row is `encode`'s canonical output for its value:
+          // the copy is the bytes `write(decode(row))` would give
           override def writeMsgPack(row: Array[Byte]): Unit = {
             checkRow(row)
             dos.write(row)

@@ -38,8 +38,10 @@ import graft.formats.{JsonCodec, MsgPackCodec, Value}
   *    `RecordEncoder.writeMsgPack`: the msgpack sink copies it
   *    unchanged (encode ∘ decode is the identity on encode's output),
   *    the other sinks decode it. Both first check that the row is one
-  *    msgpack value without bin/ext/f32 markers, and fail the task with
-  *    [[InvalidRowException]] if it is not.
+  *    msgpack value in `encode`'s canonical form without bin/ext/f32
+  *    markers ([[MsgPackCodec.isRowValue]]), so the copy is the bytes
+  *    decoding and re-encoding would give, and fail the task with
+  *    [[InvalidRowException]] if it is not, or if the row is null.
   *
   * Scale notes: concatenated varlen binary streams (msgpack/cbor) and
   * whole-document formats (toml/yaml) carry no sync markers, so the
@@ -140,29 +142,6 @@ private[sources] final class BoundedInputStream(in: java.io.InputStream,
       n
     }
   override def close(): Unit = in.close()
-}
-
-/** The reader's reused binary-row buffer: a growable byte array without
-  * the lock ByteArrayOutputStream takes on every write.
-  */
-private[sources] final class RowBuffer extends java.io.OutputStream {
-  private var buf = new Array[Byte](1 << 12)
-  private var n = 0
-  override def write(b: Int): Unit = {
-    ensure(1)
-    buf(n) = b.toByte
-    n += 1
-  }
-  override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-    ensure(len)
-    System.arraycopy(b, off, buf, n, len)
-    n += len
-  }
-  private def ensure(k: Int): Unit =
-    if (n + k > buf.length)
-      buf = java.util.Arrays.copyOf(buf, math.max(n + k, buf.length * 2))
-  def reset(): Unit = n = 0
-  def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, n)
 }
 
 object RqTableProvider {
@@ -365,7 +344,7 @@ final class RqPartitionReader(part: RqInputPartition)
   }
   private val toRow: Value => InternalRow =
     if (part.binary) {
-      val buf = new RowBuffer
+      val buf = new java.io.ByteArrayOutputStream(1 << 12)
       val out = new java.io.DataOutputStream(buf)
       v => {
         buf.reset()
@@ -475,6 +454,9 @@ final class RqDataWriter(options: Map[String, String], binary: Boolean,
   }
 
   override def write(record: InternalRow): Unit = {
+    // ACCEPT_ANY_SCHEMA drops Spark's not-null check on `value`
+    if (record.isNullAt(0))
+      throw new InvalidRowException("rq sink: null `value` row")
     if (enc == null) {
       val raw = tmpPath.getFileSystem(new Configuration())
         .create(tmpPath, true)

@@ -195,7 +195,7 @@ class CodecSpec extends AnyFunSuite {
       val row = MsgPackCodec.encode(n)
       assert(row.sameElements(MsgPackCodec.encode(viaText)), v)
       assert(MsgPackCodec.decodeStream(row) == Vector(n))
-      assert(JsonCodec.normalize(n) eq n, "normalize is idempotent")
+      assert(JsonCodec.normalize(n) == n, "normalize is idempotent")
     }
   }
 
@@ -224,7 +224,61 @@ class CodecSpec extends AnyFunSuite {
     assert(!MsgPackCodec.isRowValue(b(0xdb, 0xff, 0xff, 0xff, 0xff, 'a')))
     assert(!MsgPackCodec.isRowValue(b(0xdd, 0xff, 0xff, 0xff, 0xff, 0xc0)))
     assert(!MsgPackCodec.isRowValue(b(0xdf, 0, 0, 0, 1, 0xc0)))
-    assert(MsgPackCodec.isRowValue(b(0xdf, 0, 0, 0, 1, 0xc0, 0xc0)))
+    // headers wider than encode's minimal width, and f64 values
+    // normalize never leaves, name values encode writes otherwise
+    val nonCanonical = Seq(
+      b(0xcc, 5), b(0xcd, 0, 0xff), b(0xce, 0, 0, 0xff, 0xff),
+      b(0xcf, 0, 0, 0, 0, 0xff, 0xff, 0xff, 0xff), // 2^32 - 1
+      b(0xd0, 0xe0), b(0xd0, 5), b(0xd1, 0xff, 0x80),
+      b(0xd2, 0xff, 0xff, 0x80, 0), b(0xd3, 0xff, 0xff, 0xff, 0xff, 0x80,
+        0, 0, 0), // Int.MinValue
+      b(0xd9, 1, 'a'), b(0xda, 0, 0xff) ++ Array.fill(255)('a'.toByte),
+      b(0xdb, 0, 0, 0, 1, 'a'), b(0xdc, 0, 1, 0xc0),
+      b(0xdd, 0, 0, 0, 1, 0xc0), b(0xde, 0, 1, 0xa1, 'k', 0xc0),
+      b(0xdf, 0, 0, 0, 1, 0xa1, 'k', 0xc0),
+      MsgPackCodec.encode(Value.F64(Double.NaN)),
+      MsgPackCodec.encode(Value.F64(Double.PositiveInfinity)),
+      MsgPackCodec.encode(Value.F64(Double.NegativeInfinity)),
+      MsgPackCodec.encode(Value.F64(-0.0)),
+      // ill-formed UTF-8: stray continuation, overlong, surrogate,
+      // above U+10FFFF, cut short
+      b(0xa1, 0x80), b(0xa2, 0xc0, 0xaf), b(0xa3, 0xed, 0xa0, 0x80),
+      b(0xa4, 0xf4, 0x90, 0x80, 0x80), b(0xa2, 0xe2, 0x82))
+    for (x <- nonCanonical) {
+      assert(!MsgPackCodec.isRowValue(x), x.map(_ & 0xff).mkString(" "))
+      assert(!MsgPackCodec.isRowValue(b(0x91) ++ x), "nested")
+    }
+    // the widest forms where encode picks them
+    for (v <- Seq(Value.I64(1L << 32), Value.I64(Long.MinValue),
+        Value.U64(-1L), Value.Str("é" * 40000),
+        Value.Seq(Vector.fill(70000)(Value.Unit)),
+        Value.Map(Vector.tabulate(70000)(i =>
+          Value.Str(i.toString) -> Value.Unit))))
+      assert(MsgPackCodec.isRowValue(MsgPackCodec.encode(v)))
+  }
+
+  test("isRowValue(row) implies encode(decode(row)) is row itself, so " +
+      "the msgpack sink's copy is what decoding and re-encoding gives") {
+    val rnd = new scala.util.Random(46L)
+    var accepted = 0
+    def check(row: Array[Byte]): Unit =
+      if (MsgPackCodec.isRowValue(row)) {
+        accepted += 1
+        val back = MsgPackCodec.encode(
+          MsgPackCodec.decode(java.nio.ByteBuffer.wrap(row)))
+        assert(back.sameElements(row), row.map(_ & 0xff).mkString(" "))
+      }
+    forAllRowValues(47L) { v =>
+      val row = MsgPackCodec.encode(JsonCodec.normalize(v))
+      for (_ <- 0 until 8) { // one byte replaced at random
+        val m = row.clone()
+        m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
+        check(m)
+      }
+    }
+    for (_ <- 0 until 20000)
+      check(Array.fill(1 + rnd.nextInt(6))(rnd.nextInt(256).toByte))
+    assert(accepted > 1000, accepted)
   }
 
   test("length headers beyond Int range fail with an error naming the " +

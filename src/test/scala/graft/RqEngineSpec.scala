@@ -427,6 +427,7 @@ class RqEngineSpec extends SparkSpec {
       "msgpack" -> good.init, // truncated
       "msgpack" -> (good ++ good), // two values
       "msgpack" -> MsgPackCodec.encode(Value.Bytes(Array[Byte](1))), // bin
+      "msgpack" -> Array(0xcc, 5).map(_.toByte), // non-minimal uint8
       "json" -> (good :+ 0xc0.toByte)) // trailing byte, decoding sink
     for ((fmt, row) <- bad) {
       val out = tmp()
@@ -436,6 +437,27 @@ class RqEngineSpec extends SparkSpec {
       }
       assert(chain(ex).exists(
         _.isInstanceOf[graft.sources.InvalidRowException]), s"$fmt: $ex")
+      assert(new java.io.File(out).list().forall(n =>
+        n.startsWith(".") || n.startsWith("_")), s"$fmt committed a shard")
+    }
+  }
+
+  test("a null value row fails the sink with a typed error, both row " +
+      "forms") {
+    import spark.implicits._
+    val good = graft.formats.MsgPackCodec.encode(graft.formats.Value.I64(1))
+    val frames = Seq(
+      Seq(Some("1"), None).toDF("value"),
+      Seq(Some(good), None).toDF("value"))
+    for (df <- frames; fmt <- Seq("msgpack", "json")) {
+      val out = tmp()
+      val ex = intercept[Exception] {
+        df.coalesce(1).write.format(provider).option("recordFormat", fmt)
+          .mode("overwrite").save(out)
+      }
+      assert(chain(ex).exists(e =>
+        e.isInstanceOf[graft.sources.InvalidRowException] &&
+          e.getMessage.contains("null")), s"$fmt: $ex")
       assert(new java.io.File(out).list().forall(n =>
         n.startsWith(".") || n.startsWith("_")), s"$fmt committed a shard")
     }
