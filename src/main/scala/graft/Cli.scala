@@ -317,8 +317,7 @@ object Cli {
         val (outFmt, outOpts) = outputFormat(o, ttyOut)
         val inOptsT =
           if (o.typed) inOpts + ("typed" -> "true") else inOpts
-        RqFormat.encode(outFmt,
-          RqFormat.decodeStream(inFmt, in, inOptsT), out, outOpts)
+        RqFormat.pipe(inFmt, in, inOptsT, outFmt, out, outOpts)
         out.flush()
     }
   }

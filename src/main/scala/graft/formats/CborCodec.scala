@@ -1,6 +1,5 @@
 package graft.formats
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
@@ -15,39 +14,38 @@ object CborCodec {
   // ---- encode ----
 
   def encode(v: Value): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    write(v, new DataOutputStream(bos))
-    bos.toByteArray
+    val out = ByteOut()
+    write(v, out)
+    out.toByteArray
   }
 
   def encodeStream(vs: Iterable[Value]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+    val out = ByteOut()
     vs.foreach(write(_, out))
-    bos.toByteArray
+    out.toByteArray
   }
 
-  /** Append one encoded item to an open stream (incremental sink). */
-  def encodeTo(v: Value, out: DataOutputStream): Unit = write(v, out)
+  /** Append one encoded item to `out` (incremental sink). */
+  def encodeTo(v: Value, out: ByteOut): Unit = write(v, out)
 
-  private def head(major: Int, arg: Long, out: DataOutputStream): Unit = {
+  private def head(major: Int, arg: Long, out: ByteOut): Unit = {
     val m = major << 5
-    if (arg < 24) out.writeByte(m | arg.toInt)
-    else if (arg < 256) { out.writeByte(m | 24); out.writeByte(arg.toInt) }
-    else if (arg < 65536) { out.writeByte(m | 25); out.writeShort(arg.toInt) }
-    else if (arg < 4294967296L) { out.writeByte(m | 26); out.writeInt(arg.toInt) }
-    else { out.writeByte(m | 27); out.writeLong(arg) }
+    if (arg < 24) out.write(m | arg.toInt)
+    else if (arg < 256) { out.write(m | 24); out.write(arg.toInt) }
+    else if (arg < 65536) { out.write(m | 25); out.writeShort(arg.toInt) }
+    else if (arg < 4294967296L) { out.write(m | 26); out.writeInt(arg.toInt) }
+    else { out.write(m | 27); out.writeLong(arg) }
   }
 
-  private def write(v: Value, out: DataOutputStream): Unit = v match {
-    case Value.Unit => out.writeByte(0xf6)
-    case Value.Bool(b) => out.writeByte(if (b) 0xf5 else 0xf4)
+  private def write(v: Value, out: ByteOut): Unit = v match {
+    case Value.Unit => out.write(0xf6)
+    case Value.Bool(b) => out.write(if (b) 0xf5 else 0xf4)
     case Value.I64(n) =>
       if (n >= 0) head(0, n, out) else head(1, -1 - n, out)
     case Value.U64(bits) =>
       if (bits >= 0) head(0, bits, out)
-      else { out.writeByte(0x1b); out.writeLong(bits) } // full u64 arg
-    case Value.F64(d) => out.writeByte(0xfb); out.writeDouble(d)
+      else { out.write(0x1b); out.writeLong(bits) } // full u64 arg
+    case Value.F64(d) => out.write(0xfb); out.writeDouble(d)
     // tagged scalars (typed mode): integers re-encode minimal-width
     // (serde_cbor's Serializer::serialize_i*/u* all re-minimalize),
     // so minimal-wire round-trips stay byte-identical. F32 keeps its
@@ -59,7 +57,7 @@ object CborCodec {
     case Value.U8(x) => head(0, x.toLong, out)
     case Value.U16(x) => head(0, x.toLong, out)
     case Value.U32(x) => head(0, x, out)
-    case Value.F32(f) => out.writeByte(0xfa); out.writeFloat(f)
+    case Value.F32(f) => out.write(0xfa); out.writeFloat(f)
     case Value.Chr(c) => write(Value.Str(c.toString), out) // serde char
     case Value.Str(s) =>
       val b = s.getBytes(StandardCharsets.UTF_8)
@@ -196,7 +194,7 @@ object CborCodec {
   }
 
   private def indefBytes(in: ByteIn): Value = {
-    val bos = new ByteArrayOutputStream()
+    val bos = ByteOut()
     while (in.peek() != 0xff) {
       decode(in, typed = false) match {
         case Value.Bytes(b) => bos.write(b)

@@ -1,6 +1,5 @@
 package graft.formats
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
@@ -20,35 +19,34 @@ object MsgPackCodec {
   // ---- encode ----
 
   def encode(v: Value): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    write(v, new DataOutputStream(bos))
-    bos.toByteArray
+    val out = ByteOut()
+    write(v, out)
+    out.toByteArray
   }
 
   def encodeStream(vs: Iterable[Value]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+    val out = ByteOut()
     vs.foreach(write(_, out))
-    bos.toByteArray
+    out.toByteArray
   }
 
-  /** Append one encoded value to an open stream (incremental sink). */
-  def encodeTo(v: Value, out: DataOutputStream): Unit = write(v, out)
+  /** Append one encoded value to `out` (incremental sink). */
+  def encodeTo(v: Value, out: ByteOut): Unit = write(v, out)
 
-  private def write(v: Value, out: DataOutputStream): Unit = v match {
-    case Value.Unit => out.writeByte(0xc0)
-    case Value.Bool(b) => out.writeByte(if (b) 0xc3 else 0xc2)
+  private def write(v: Value, out: ByteOut): Unit = v match {
+    case Value.Unit => out.write(0xc0)
+    case Value.Bool(b) => out.write(if (b) 0xc3 else 0xc2)
     case Value.I64(n) =>
       if (n >= 0) writeUnsigned(n, out)
-      else if (n >= -32) out.writeByte((n & 0xff).toInt)
-      else if (n >= Byte.MinValue) { out.writeByte(0xd0); out.writeByte(n.toInt) }
-      else if (n >= Short.MinValue) { out.writeByte(0xd1); out.writeShort(n.toInt) }
-      else if (n >= Int.MinValue) { out.writeByte(0xd2); out.writeInt(n.toInt) }
-      else { out.writeByte(0xd3); out.writeLong(n) }
+      else if (n >= -32) out.write((n & 0xff).toInt)
+      else if (n >= Byte.MinValue) { out.write(0xd0); out.write(n.toInt) }
+      else if (n >= Short.MinValue) { out.write(0xd1); out.writeShort(n.toInt) }
+      else if (n >= Int.MinValue) { out.write(0xd2); out.writeInt(n.toInt) }
+      else { out.write(0xd3); out.writeLong(n) }
     case Value.U64(bits) =>
       if (bits >= 0) writeUnsigned(bits, out) // fits in signed range
-      else { out.writeByte(0xcf); out.writeLong(bits) }
-    case Value.F64(d) => out.writeByte(0xcb); out.writeDouble(d)
+      else { out.write(0xcf); out.writeLong(bits) }
+    case Value.F64(d) => out.write(0xcb); out.writeDouble(d)
     // tagged scalars (typed mode): integers re-encode minimal-width
     // exactly like rmp's write_sint/write_uint does for the
     // reference's I8..U32 (rmp re-minimalizes; messagepack.rs:96-128),
@@ -61,38 +59,38 @@ object MsgPackCodec {
     case Value.U8(x) => writeUnsigned(x.toLong, out)
     case Value.U16(x) => writeUnsigned(x.toLong, out)
     case Value.U32(x) => writeUnsigned(x, out)
-    case Value.F32(f) => out.writeByte(0xca); out.writeFloat(f)
+    case Value.F32(f) => out.write(0xca); out.writeFloat(f)
     case Value.Chr(c) => write(Value.Str(c.toString), out) // serde char
     case Value.Str(s) =>
       val b = s.getBytes(StandardCharsets.UTF_8)
-      if (b.length < 32) out.writeByte(0xa0 | b.length)
-      else if (b.length < 256) { out.writeByte(0xd9); out.writeByte(b.length) }
-      else if (b.length < 65536) { out.writeByte(0xda); out.writeShort(b.length) }
-      else { out.writeByte(0xdb); out.writeInt(b.length) }
+      if (b.length < 32) out.write(0xa0 | b.length)
+      else if (b.length < 256) { out.write(0xd9); out.write(b.length) }
+      else if (b.length < 65536) { out.write(0xda); out.writeShort(b.length) }
+      else { out.write(0xdb); out.writeInt(b.length) }
       out.write(b)
     case Value.Bytes(b) =>
-      if (b.length < 256) { out.writeByte(0xc4); out.writeByte(b.length) }
-      else if (b.length < 65536) { out.writeByte(0xc5); out.writeShort(b.length) }
-      else { out.writeByte(0xc6); out.writeInt(b.length) }
+      if (b.length < 256) { out.write(0xc4); out.write(b.length) }
+      else if (b.length < 65536) { out.write(0xc5); out.writeShort(b.length) }
+      else { out.write(0xc6); out.writeInt(b.length) }
       out.write(b)
     case Value.Seq(vs) =>
-      if (vs.length < 16) out.writeByte(0x90 | vs.length)
-      else if (vs.length < 65536) { out.writeByte(0xdc); out.writeShort(vs.length) }
-      else { out.writeByte(0xdd); out.writeInt(vs.length) }
+      if (vs.length < 16) out.write(0x90 | vs.length)
+      else if (vs.length < 65536) { out.write(0xdc); out.writeShort(vs.length) }
+      else { out.write(0xdd); out.writeInt(vs.length) }
       vs.foreach(write(_, out))
     case Value.Map(kvs) =>
-      if (kvs.length < 16) out.writeByte(0x80 | kvs.length)
-      else if (kvs.length < 65536) { out.writeByte(0xde); out.writeShort(kvs.length) }
-      else { out.writeByte(0xdf); out.writeInt(kvs.length) }
+      if (kvs.length < 16) out.write(0x80 | kvs.length)
+      else if (kvs.length < 65536) { out.write(0xde); out.writeShort(kvs.length) }
+      else { out.write(0xdf); out.writeInt(kvs.length) }
       kvs.foreach { case (k, e) => write(k, out); write(e, out) }
   }
 
-  private def writeUnsigned(n: Long, out: DataOutputStream): Unit = {
-    if (n < 128) out.writeByte(n.toInt)
-    else if (n < 256) { out.writeByte(0xcc); out.writeByte(n.toInt) }
-    else if (n < 65536) { out.writeByte(0xcd); out.writeShort(n.toInt) }
-    else if (n < 4294967296L) { out.writeByte(0xce); out.writeInt(n.toInt) }
-    else { out.writeByte(0xcf); out.writeLong(n) }
+  private def writeUnsigned(n: Long, out: ByteOut): Unit = {
+    if (n < 128) out.write(n.toInt)
+    else if (n < 256) { out.write(0xcc); out.write(n.toInt) }
+    else if (n < 65536) { out.write(0xcd); out.writeShort(n.toInt) }
+    else if (n < 4294967296L) { out.write(0xce); out.writeInt(n.toInt) }
+    else { out.write(0xcf); out.writeLong(n) }
   }
 
   // ---- decode ----

@@ -378,19 +378,32 @@ object JsonCodec {
     def offset: Int
   }
 
+  /** Reads `r` through an 8 KiB char window: one bulk `read` (one run
+    * of the charset decoder) per window instead of one per char.
+    */
   private final class ReaderCursor(r: java.io.Reader) extends Cursor {
-    private var pushed: Int = -2 // -2 = no pushback
-    private var pos: Int = 0
-    def read(): Int = {
-      val c =
-        if (pushed != -2) { val p = pushed; pushed = -2; p }
-        else r.read()
-      if (c >= 0) pos += 1
-      c
-    }
-    def unread(c: Int): scala.Unit = if (c >= 0) { pushed = c; pos -= 1 }
-    def peek(): Int = { val c = read(); unread(c); c }
+    private val buf = new Array[Char](1 << 13)
+    private var i = 0 // next unread char
+    private var n = 0 // end of the chars held
+    private var pos = 0
+    def read(): Int =
+      if (i < n || fill()) {
+        val c = buf(i)
+        i += 1
+        pos += 1
+        c
+      } else -1
+    // `c` is the char read() just returned, so it is still at buf(i - 1)
+    def unread(c: Int): scala.Unit = if (c >= 0) { i -= 1; pos -= 1 }
+    def peek(): Int = if (i < n || fill()) buf(i) else -1
     def offset: Int = pos
+    private def fill(): Boolean = {
+      var k = r.read(buf, 0, buf.length)
+      while (k == 0) k = r.read(buf, 0, buf.length)
+      i = 0
+      n = math.max(k, 0)
+      k > 0
+    }
   }
 
   /** Offset cursor over an in-memory String — the per-row hot path of

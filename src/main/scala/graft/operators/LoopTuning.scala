@@ -49,11 +49,6 @@ object LoopTuning {
     math.max(1L, math.min(200000L,
       (rows + rowsPerPartition - 1) / rowsPerPartition)).toInt
 
-  /** Run `body` (the loop) under size-derived shuffle partitioning
-    * with AQE off; restores both confs afterwards. Every frame the
-    * body hands back across the boundary must already be materialized
-    * (the loops checkpoint each round, so they are).
-    */
   /** Attribution kill-switch (the SPARK_GRAFT_BENCH_FILTER pattern):
     * `SPARK_GRAFT_LOOP_TUNING=off` makes the scope a no-op so a
     * suspected regression can be A/B'd in back-to-back sessions
@@ -62,6 +57,19 @@ object LoopTuning {
   private val enabled: Boolean =
     !sys.env.get("SPARK_GRAFT_LOOP_TUNING").contains("off")
 
+  /** Run `body` (the loop) under size-derived shuffle partitioning
+    * with AQE off; restores both confs afterwards. Every frame the
+    * body hands back across the boundary must already be materialized
+    * (the loops checkpoint each round, so they are).
+    *
+    * Thread-safety: this mutates the shared session conf. Scopes nest
+    * correctly on one thread, but a query planned CONCURRENTLY on
+    * another thread of the same session sees the loop's partition
+    * count and AQE setting, and two loops scoped concurrently can
+    * restore each other's values. The engine's declared entries run
+    * their loops single-threaded on the session driving them; do not
+    * run a loop concurrently with other planning on the same session.
+    */
   def withLoopShuffle[T](spark: SparkSession, rows: Long)(body: => T): T = {
     if (!enabled) return body
     val conf = spark.conf

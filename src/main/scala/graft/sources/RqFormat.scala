@@ -3,6 +3,8 @@ package graft.sources
 import java.io.{InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import graft.formats._
 
 /** The rq codec matrix as pluggable format handlers (SURVEY §2.1/§2.2):
@@ -18,6 +20,14 @@ import graft.formats._
   *  - avro: OCF with embedded reader schema in; writer schema required
   *    out (S3/K5)
   *  - protobuf: single message in (S6); OUT IS UNIMPLEMENTED (K11).
+  *
+  * Every sink is buffered: it encodes into a 64 KiB window
+  * ([[ByteOut]]) and passes the window to the output stream when it
+  * fills, on drain() and on finish(). [[encode]] and [[pipe]] finish it
+  * when a run fails and then report the error, so `rq` still prints
+  * every record before a bad one; [[pipe]] drains it before the decoder
+  * waits for input, so `rq` at a terminal or on a slow pipe prints each
+  * record as soon as it is complete.
   */
 object RqFormat {
 
@@ -105,21 +115,53 @@ object RqFormat {
         throw new IllegalArgumentException(s"unknown rq format: $other")
     }
 
-  /** Encode a record stream into `out` (incremental — see [[encoder]]). */
+  /** Encode a record stream into `out` (incremental — see [[encoder]]).
+    * If decoding or encoding fails, the encoder still finishes, so every
+    * record before the failure reaches `out`, and the failure stands (a
+    * failure to finish rides along as suppressed).
+    */
   def encode(format: String, values: Iterator[Value], out: OutputStream,
-      options: Map[String, String] = Map.empty): Unit = {
-    val enc = encoder(format, out, options)
-    values.foreach(enc.write)
+      options: Map[String, String] = Map.empty): Unit =
+    encodeAll(encoder(format, out, options), values)
+
+  /** The identity pipe: decodes `in` as `inFormat` and encodes every
+    * record into `out` as `outFormat`, as [[encode]] does. Before the
+    * decoder waits on `in` (nothing more is ready), the records encoded
+    * so far go down to `out`: a terminal or a slow pipe sees each record
+    * once its input is complete, while a file still gets whole windows.
+    */
+  def pipe(inFormat: String, in: InputStream, inOptions: Map[String, String],
+      outFormat: String, out: OutputStream,
+      outOptions: Map[String, String]): Unit = {
+    val enc = encoder(outFormat, out, outOptions)
+    val src = new java.io.FilterInputStream(in) {
+      private def drainIfIdle(): Unit = if (in.available() == 0) enc.drain()
+      override def read(): Int = { drainIfIdle(); in.read() }
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        drainIfIdle(); in.read(b, off, len)
+      }
+    }
+    encodeAll(enc, decodeStream(inFormat, src, inOptions))
+  }
+
+  private def encodeAll(enc: RecordEncoder, values: Iterator[Value]): Unit = {
+    try values.foreach(enc.write)
+    catch {
+      case NonFatal(e) =>
+        try enc.finish() catch { case NonFatal(f) => e.addSuppressed(f) }
+        throw e
+    }
     enc.finish()
   }
 
-  /** Incremental per-record sink: each write() streams one encoded
-    * record into `out` — no whole-partition buffering anywhere
-    * (records flow executor→disk as they arrive; a 100 GB partition
-    * needs one record of memory). finish() flushes format trailers
-    * (avro's final block); the caller owns and closes `out`.
+  /** Incremental per-record sink over one 64 KiB [[ByteOut]] in front
+    * of `out`: records stream to `out` a window at a time, never a
+    * partition at a time (a 100 GB partition needs one record and one
+    * window of memory). finish() writes format trailers (avro's last
+    * block) and passes the window on; the caller owns and closes `out`.
     */
-  trait RecordEncoder {
+  abstract class RecordEncoder(out: OutputStream) {
+    protected val buf: ByteOut = ByteOut(out)
     def write(v: Value): Unit
     /** Write the record a binary row holds (msgpack of a normalized
       * value, see [[RqTableProvider]]).
@@ -128,12 +170,15 @@ object RqFormat {
       checkRow(row)
       write(MsgPackCodec.decode(java.nio.ByteBuffer.wrap(row)))
     }
-    def finish(): Unit = ()
-    /** Push any encoder-internal buffer down to the sink — called at
-      * frame-index mark points so the counted byte offset is a true
-      * record boundary. Default no-op (unbuffered encoders).
+    /** Bytes encoded so far. Right after a write it is a record boundary
+      * of the record-stream formats ([[RqFrameIndex.Splittable]]).
       */
-    def flush(): Unit = ()
+    final def position: Long = buf.position
+    /** Passes the records encoded so far to the stream without ending
+      * the output (avro keeps its open block).
+      */
+    final def drain(): Unit = buf.flush()
+    def finish(): Unit = buf.flush()
   }
 
   /** Fails with [[InvalidRowException]] unless `row` has the binary
@@ -145,70 +190,59 @@ object RqFormat {
         s"encode's canonical form, with no bin, ext or f32 marker " +
         s"(got ${row.length} bytes)")
 
+  /** A sink writing each record with `enc`. */
+  private def encoderOf(out: OutputStream)(
+      enc: (Value, ByteOut) => Unit): RecordEncoder =
+    new RecordEncoder(out) { def write(v: Value): Unit = enc(v, buf) }
+
+  /** A sink writing each record as `emit`'s text and a newline. */
+  private def textEncoder(out: OutputStream)(
+      emit: Value => String): RecordEncoder =
+    encoderOf(out) { (v, o) =>
+      o.write(emit(v).getBytes(StandardCharsets.UTF_8))
+      o.write('\n')
+    }
+
   def encoder(format: String, out: OutputStream,
       options: Map[String, String] = Map.empty): RecordEncoder =
     format match {
       case "json" =>
         // formatter selection mirrors --format compact/indented/readable
-        // (rq.rs:216, 323-329; compact is the pipe default)
-        val emit: Value => String = opt(options, "jsonFormat")
-          .getOrElse("compact") match {
-          case "compact" => JsonCodec.emit
-          case "indented" => JsonCodec.emitIndented
-          case "readable" => JsonCodec.emitReadable
+        // (rq.rs:216, 323-329; compact is the pipe default); one record
+        // per doc + newline (json.rs:110)
+        opt(options, "jsonFormat").getOrElse("compact") match {
+          case "compact" => textEncoder(out)(JsonCodec.emit)
+          case "indented" => textEncoder(out)(JsonCodec.emitIndented)
+          case "readable" => textEncoder(out)(JsonCodec.emitReadable)
           case other => throw new IllegalArgumentException(
             s"unknown jsonFormat: $other (compact|indented|readable)")
         }
-        v => {
-          out.write(emit(v).getBytes(StandardCharsets.UTF_8))
-          out.write('\n') // one record per doc + newline (json.rs:110)
-        }
-      case "csv" =>
-        v => {
-          out.write(CsvCodec.emitRecord(v).getBytes(StandardCharsets.UTF_8))
-          out.write('\n')
-        }
+      case "csv" => textEncoder(out)(CsvCodec.emitRecord)
       case "msgpack" =>
-        val dos = new java.io.DataOutputStream(
-          new ChunkedOutputStream(out, 1 << 16))
-        new RecordEncoder {
-          def write(v: Value): Unit = MsgPackCodec.encodeTo(v, dos)
+        new RecordEncoder(out) {
+          def write(v: Value): Unit = MsgPackCodec.encodeTo(v, buf)
           // a valid row is `encode`'s canonical output for its value:
           // the copy is the bytes `write(decode(row))` would give
           override def writeMsgPack(row: Array[Byte]): Unit = {
             checkRow(row)
-            dos.write(row)
+            buf.write(row)
           }
-          override def finish(): Unit = dos.flush()
-          override def flush(): Unit = dos.flush()
         }
-      case "cbor" =>
-        val dos = new java.io.DataOutputStream(
-          new java.io.BufferedOutputStream(out, 1 << 16))
-        new RecordEncoder {
-          def write(v: Value): Unit = CborCodec.encodeTo(v, dos)
-          override def finish(): Unit = dos.flush()
-          override def flush(): Unit = dos.flush()
-        }
-      case "toml" =>
-        v => {
-          out.write(TomlCodec.emit(v).getBytes(StandardCharsets.UTF_8))
-          out.write('\n') // doc + newline (toml.rs:62)
-        }
-      case "yaml" =>
-        v => {
-          out.write(YamlCodec.emit(v).getBytes(StandardCharsets.UTF_8))
-          out.write('\n') // doc + newline (yaml.rs:54)
-        }
+      case "cbor" => encoderOf(out)((v, o) => CborCodec.encodeTo(v, o))
+      // doc + newline (toml.rs:62, yaml.rs:54)
+      case "toml" => textEncoder(out)(TomlCodec.emit)
+      case "yaml" => textEncoder(out)(YamlCodec.emit)
       case "raw" =>
-        {
-          // Str/Bytes verbatim + newline; anything else is a hard error
-          // (raw.rs:46-73)
-          case Value.Str(s) =>
-            out.write(s.getBytes(StandardCharsets.UTF_8)); out.write('\n')
-          case Value.Bytes(b) => out.write(b); out.write('\n')
-          case other => throw new IllegalArgumentException(
-            s"rq raw sink: cannot write $other (only strings/bytes)")
+        // Str/Bytes verbatim + newline; anything else is a hard error
+        // (raw.rs:46-73)
+        encoderOf(out) { (v, o) =>
+          v match {
+            case Value.Str(s) => o.write(s.getBytes(StandardCharsets.UTF_8))
+            case Value.Bytes(b) => o.write(b)
+            case other => throw new IllegalArgumentException(
+              s"rq raw sink: cannot write $other (only strings/bytes)")
+          }
+          o.write('\n')
         }
       case "avro" =>
         val schemaJson = opt(options, "avroSchema").getOrElse(
@@ -217,11 +251,11 @@ object RqFormat {
               "reference: -A schema.avsc, rq.rs:241-259)"))
         val schema = AvroCodec.parseSchema(schemaJson)
         val codec = opt(options, "codec").getOrElse("null")
-        // OCF appends records block-by-block — inherently streaming
-        val writer = AvroCodec.openWriter(out, schema, codec)
-        new RecordEncoder {
+        new RecordEncoder(out) {
+          // OCF appends records block-by-block — inherently streaming
+          private val writer = AvroCodec.openWriter(buf, schema, codec)
           def write(v: Value): Unit = writer.append(AvroCodec.toAvro(v, schema))
-          override def finish(): Unit = writer.flush()
+          override def finish(): Unit = { writer.flush(); super.finish() }
         }
       case "protobuf" => ProtoWire.serializeUnsupported() // K11 parity
       case other =>
@@ -232,36 +266,6 @@ object RqFormat {
 /** A binary record row that is not one msgpack value of the row form. */
 final class InvalidRowException(msg: String)
     extends IllegalArgumentException(msg)
-
-/** Buffers writes and passes `sink` only whole `size`-byte chunks (the
-  * rest on flush), so the bytes `sink` has seen after any write depend
-  * on the total written, not on how the writes were split: a row copied
-  * in one write and the same record encoded value by value leave the
-  * same frame-index marks in [[RqDataWriter]].
-  */
-private[sources] final class ChunkedOutputStream(sink: OutputStream,
-    size: Int) extends OutputStream {
-  private val buf = new Array[Byte](size)
-  private var n = 0
-  override def write(b: Int): Unit = {
-    if (n == size) drain()
-    buf(n) = b.toByte
-    n += 1
-  }
-  override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-    var o = off
-    val end = off + len
-    while (o < end) {
-      if (n == size) drain()
-      val k = math.min(end - o, size - n)
-      System.arraycopy(b, o, buf, n, k)
-      n += k
-      o += k
-    }
-  }
-  override def flush(): Unit = { if (n > 0) drain(); sink.flush() }
-  private def drain(): Unit = { sink.write(buf, 0, n); n = 0 }
-}
 
 /** CSV record semantics (reference: src/value/csv.rs): headerless,
   * no inference — every cell is a String, a record is a Sequence of

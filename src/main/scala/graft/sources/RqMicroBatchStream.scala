@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
@@ -24,7 +23,7 @@ final class RqMicroBatchStream(options: Map[String, String],
 
   private def listFiles(): Array[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(RqTableProvider.hadoopConf)
     if (!fs.exists(p)) Array.empty
     else if (fs.getFileStatus(p).isDirectory)
       fs.listStatus(p).filter(_.isFile).map(_.getPath.toString)

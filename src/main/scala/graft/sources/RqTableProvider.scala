@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructField
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.formats.{JsonCodec, MsgPackCodec, Value}
+import graft.formats.{ByteOut, JsonCodec, MsgPackCodec, Value}
 
 /** DataSource V2 provider for rq record streams (SURVEY §2.1/§2.2,
   * §4.3): `spark.read.format("rq").option("recordFormat", fmt)
@@ -53,6 +53,11 @@ import graft.formats.{JsonCodec, MsgPackCodec, Value}
   * without a sidecar (and all compressed/whole-doc inputs) keep the
   * per-file path. Decoding is per-partition streaming with no driver
   * involvement.
+  *
+  * Hadoop configuration: the planner, readers, writers, truncate and
+  * the micro-batch source all use one `Configuration` per JVM
+  * ([[RqTableProvider.hadoopConf]]), not a new one per reader or
+  * writer.
   */
 class RqTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "rq"
@@ -73,14 +78,20 @@ class RqTableProvider extends TableProvider with DataSourceRegister {
   * file is otherwise one InputPartition. The WRITER (which is the one
   * party that knows record boundaries for free) emits a hidden
   * sidecar `.<shard>.rqx` of byte offsets at record boundaries every
-  * `frameEvery` bytes; the reader splits the file into one
-  * InputPartition per frame when the sidecar is present and the file
-  * is uncompressed, and falls back to per-file otherwise — reference
-  * semantics and old files untouched. A crash between data commit and
-  * sidecar write just loses the split hints, never correctness.
+  * `frameEvery` bytes, each the encoder's position right after a
+  * record (`RecordEncoder.position`), so marks do not depend on when
+  * the encoder's buffer reaches the file. The reader splits the file
+  * into one InputPartition per frame when the sidecar is present and
+  * the file is uncompressed, and falls back to per-file otherwise —
+  * reference semantics and old files untouched. A crash between data
+  * commit and sidecar write just loses the split hints, never
+  * correctness.
   *
   * Sidecar format: line 1 `rqx1`, then one decimal offset per line
   * (strictly increasing, each the byte position of a record start).
+  * Offsets depend only on the records and `frameEvery`. Older writers
+  * marked at buffer flushes, so their sidecars hold other offsets for
+  * the same data bytes; both are record starts and read the same.
   */
 object RqFrameIndex {
   val Magic = "rqx1"
@@ -161,13 +172,21 @@ object RqTableProvider {
         "RqEngine.write converts other frames")
   }
 
+  /** The one Hadoop `Configuration` of this JVM, for every
+    * `getFileSystem` of the planner, reader, writer, truncate and
+    * micro-batch source. Building one parses `core-default.xml` and
+    * searches the classpath for `core-site.xml`, so it is built once,
+    * not per reader and writer; it is only read after that, so tasks
+    * share it.
+    */
+  lazy val hadoopConf: Configuration = new Configuration()
+
   /** Extension→codec mapping is static; share one factory instead of
-    * paying a Configuration XML parse + codec registry scan per
-    * partition reader (millions of small files = millions of readers).
+    * paying a codec registry scan per partition reader (millions of
+    * small files = millions of readers).
     */
   lazy val codecFactory: org.apache.hadoop.io.compress.CompressionCodecFactory =
-    new org.apache.hadoop.io.compress.CompressionCodecFactory(
-      new Configuration())
+    new org.apache.hadoop.io.compress.CompressionCodecFactory(hadoopConf)
 
   def opts(options: Map[String, String]): (String, String, Map[String, String]) = {
     val path = options.getOrElse("path",
@@ -220,7 +239,7 @@ final class RqTable(properties: Map[String, String], binary: Boolean)
 
       override def planInputPartitions(): Array[InputPartition] = {
         val (path, fmt, o) = RqTableProvider.opts(merged)
-        val fs = new Path(path).getFileSystem(new Configuration())
+        val fs = new Path(path).getFileSystem(RqTableProvider.hadoopConf)
         val files = {
           val p = new Path(path)
           if (fs.getFileStatus(p).isDirectory)
@@ -319,7 +338,7 @@ final class RqPartitionReader(part: RqInputPartition)
     extends PartitionReader[InternalRow] {
   private val stream: java.io.InputStream = {
     val p = new Path(part.file)
-    val raw = p.getFileSystem(new Configuration()).open(p)
+    val raw = p.getFileSystem(RqTableProvider.hadoopConf).open(p)
     if (part.end >= 0) {
       // frame-indexed split: seek to the record boundary and read
       // the window only (splits are never compressed — the planner
@@ -344,11 +363,10 @@ final class RqPartitionReader(part: RqInputPartition)
   }
   private val toRow: Value => InternalRow =
     if (part.binary) {
-      val buf = new java.io.ByteArrayOutputStream(1 << 12)
-      val out = new java.io.DataOutputStream(buf)
+      val buf = ByteOut() // one row buffer per reader
       v => {
         buf.reset()
-        MsgPackCodec.encodeTo(JsonCodec.normalize(v), out)
+        MsgPackCodec.encodeTo(JsonCodec.normalize(v), buf)
         InternalRow(buf.toByteArray)
       }
     } else v => InternalRow(UTF8String.fromString(JsonCodec.emit(v)))
@@ -374,7 +392,7 @@ final class RqBatchWrite(options: Map[String, String], binary: Boolean,
       // between runs, leaving stale shards that double-read later.
       val (dir, _, _) = RqTableProvider.opts(options)
       val d = new Path(dir)
-      val fs = d.getFileSystem(new Configuration())
+      val fs = d.getFileSystem(RqTableProvider.hadoopConf)
       // sweep data shards AND .rqx frame sidecars: a stale sidecar
       // surviving a truncate would split the NEXT run's same-named
       // shard at the OLD file's byte offsets (silent mid-record
@@ -417,8 +435,9 @@ final class RqDataWriter(options: Map[String, String], binary: Boolean,
   // Streaming sink: the file opens on the FIRST record (empty
   // partitions emit nothing — record-per-file formats would otherwise
   // produce empty shards, avro header-only files) and every record is
-  // encoded straight into the open stream. No partition-sized buffer:
-  // a 100 GB partition needs one record of executor memory.
+  // encoded into the open stream through the encoder's 64 KiB window.
+  // No partition-sized buffer: a 100 GB partition needs one record and
+  // one window of executor memory.
   //
   // Attempt safety: records stream into an ATTEMPT-UNIQUE temp file
   // (dot-prefixed → invisible to the reader's listing); commit()
@@ -434,48 +453,33 @@ final class RqDataWriter(options: Map[String, String], binary: Boolean,
   // frame index (option "frameEvery", bytes): record a boundary
   // offset roughly every frameEvery bytes so the committed shard
   // splits into N InputPartitions on read. Writer-side framing is
-  // free — the encoder IS the party that knows where records end;
-  // only uncompressed record-stream formats qualify.
+  // free — the encoder IS the party that knows where records end
+  // (its position); only uncompressed record-stream formats qualify.
   private val frameEvery: Long =
     options.get("frameevery").map(_.toLong).getOrElse(0L)
   private val framing =
     frameEvery > 0 && !gzip && RqFrameIndex.Splittable(fmt)
-  private var counted: CountingOutputStream = _
   private var lastMark = 0L
   private val marks = scala.collection.mutable.ArrayBuffer.empty[Long]
-
-  private final class CountingOutputStream(sink: java.io.OutputStream)
-      extends java.io.FilterOutputStream(sink) {
-    var count = 0L
-    override def write(b: Int): Unit = { sink.write(b); count += 1 }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      sink.write(b, off, len); count += len
-    }
-  }
 
   override def write(record: InternalRow): Unit = {
     // ACCEPT_ANY_SCHEMA drops Spark's not-null check on `value`
     if (record.isNullAt(0))
       throw new InvalidRowException("rq sink: null `value` row")
     if (enc == null) {
-      val raw = tmpPath.getFileSystem(new Configuration())
+      val raw = tmpPath.getFileSystem(RqTableProvider.hadoopConf)
         .create(tmpPath, true)
       out = if (gzip) new java.util.zip.GZIPOutputStream(raw, 1 << 16)
-        else if (framing) { counted = new CountingOutputStream(raw); counted }
         else raw
       enc = RqFormat.encoder(fmt, out, options)
     }
     if (binary) enc.writeMsgPack(record.getBinary(0))
     else enc.write(JsonCodec.parse(record.getUTF8String(0).toString))
-    if (framing) {
-      // cheap check first; flush (real boundary) only at mark points
-      if (counted.count - lastMark >= frameEvery) {
-        enc.flush()
-        if (counted.count - lastMark >= frameEvery) {
-          marks += counted.count
-          lastMark = counted.count
-        }
-      }
+    // the encoder's position after a record is that record's end, so
+    // a mark never depends on when the encoder passes bytes to `out`
+    if (framing && enc.position - lastMark >= frameEvery) {
+      lastMark = enc.position
+      marks += lastMark
     }
   }
 
@@ -484,7 +488,7 @@ final class RqDataWriter(options: Map[String, String], binary: Boolean,
       enc.finish()
       out.close() // closes the full wrapper chain incl. gzip trailer
       enc = null; out = null
-      val fs = finalPath.getFileSystem(new Configuration())
+      val fs = finalPath.getFileSystem(RqTableProvider.hadoopConf)
       fs.delete(finalPath, false) // clear any stale shard, then move
       if (!fs.rename(tmpPath, finalPath))
         throw new java.io.IOException(
@@ -505,7 +509,7 @@ final class RqDataWriter(options: Map[String, String], binary: Boolean,
     // the temp must still be deleted and the ORIGINAL task failure
     // must stay visible, so swallow close errors here.
     try out.close() catch { case _: java.io.IOException => () }
-    tmpPath.getFileSystem(new Configuration()).delete(tmpPath, false)
+    tmpPath.getFileSystem(RqTableProvider.hadoopConf).delete(tmpPath, false)
   }
   override def close(): Unit = ()
 }

@@ -190,6 +190,69 @@ class CliSpec extends AnyFunSuite {
     assert(!Cli.parse(Array("-mM")).typed)
   }
 
+  test("a decode error mid-stream keeps the records before it on out, " +
+      "and the run still fails") {
+    val in = """{"a":1} {"b":""".getBytes(UTF_8)
+    for (o <- Seq(Options(inputJson = true, outputJson = true),
+        Options(inputJson = true, outputMsgPack = true))) {
+      val out = new ByteArrayOutputStream()
+      val e = intercept[IllegalArgumentException] {
+        Cli.run(o.copy(quiet = true), new ByteArrayInputStream(in), out)
+      }
+      assert(e.getMessage.startsWith("json:"), e.getMessage)
+      val first = graft.formats.Value.obj("a" -> graft.formats.Value.I64(1))
+      val expected =
+        if (o.outputMsgPack) graft.formats.MsgPackCodec.encode(first)
+        else "{\"a\":1}\n".getBytes(UTF_8)
+      assert(out.toByteArray.toSeq == expected.toSeq, o)
+    }
+  }
+
+  test("a record reaches out before the input after it arrives") {
+    // a pipe whose second chunk comes later, as at a terminal or from
+    // `tail -f`: the first record must not wait in the output window
+    val one = graft.formats.Value.obj("a" -> graft.formats.Value.I64(1))
+    val json = "{\"a\":1}\n".getBytes(UTF_8)
+    val msgpack = graft.formats.MsgPackCodec.encode(one)
+    val cases = Seq(
+      (Options(inputJson = true, outputJson = true), json, json),
+      (Options(inputJson = true, outputMsgPack = true), json, msgpack),
+      (Options(inputMsgPack = true, outputJson = true), msgpack, json),
+      (Options(inputRaw = true, outputRaw = true), "x\n".getBytes(UTF_8),
+        "x\n".getBytes(UTF_8)))
+    for ((o, record, expected) <- cases) {
+      val out = new ByteArrayOutputStream()
+      var seen: Array[Byte] = null // out when the second chunk arrives
+      val in = new java.io.InputStream {
+        private var chunks = List(record, record)
+        private var pos = 0
+        override def available(): Int =
+          if (chunks.isEmpty) 0 else chunks.head.length - pos
+        def read(): Int = {
+          val b = new Array[Byte](1)
+          if (read(b, 0, 1) < 0) -1 else b(0) & 0xff
+        }
+        override def read(b: Array[Byte], off: Int, len: Int): Int = {
+          if (chunks.nonEmpty && pos == chunks.head.length) {
+            chunks = chunks.tail
+            pos = 0
+            if (chunks.nonEmpty) seen = out.toByteArray
+          }
+          if (chunks.isEmpty) -1
+          else {
+            val k = math.min(len, chunks.head.length - pos)
+            System.arraycopy(chunks.head, pos, b, off, k)
+            pos += k
+            k
+          }
+        }
+      }
+      Cli.run(o.copy(quiet = true), in, out)
+      assert(seen != null && seen.toSeq == expected.toSeq, o)
+      assert(out.toByteArray.toSeq == (expected ++ expected).toSeq, o)
+    }
+  }
+
   test("json -> cbor -> json roundtrip preserves records") {
     val src = "{\"a\":1} [1,2,3] \"s\" true null".getBytes(UTF_8)
     val cbor = pipe(Options(outputCbor = true), src)

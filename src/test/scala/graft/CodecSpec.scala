@@ -281,6 +281,43 @@ class CodecSpec extends AnyFunSuite {
     assert(accepted > 1000, accepted)
   }
 
+  test("a length header claiming more bytes than the input holds fails " +
+      "at end of input without allocating the claim") {
+    import java.io.{ByteArrayInputStream, EOFException}
+    import java.nio.BufferUnderflowException
+    val tmx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated(body: => Unit): Long = {
+      val id = Thread.currentThread.getId
+      val before = tmx.getThreadAllocatedBytes(id)
+      body
+      tmx.getThreadAllocatedBytes(id) - before
+    }
+    def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    val claims = Seq( // 0x7fffffff-byte bodies, 1 or 3 bytes present
+      "msgpack" -> b(0xdb, 0x7f, 0xff, 0xff, 0xff, 'a'), // str32
+      "msgpack" -> b(0xc6, 0x7f, 0xff, 0xff, 0xff, 1, 2, 3), // bin32
+      "cbor" -> b(0x5a, 0x7f, 0xff, 0xff, 0xff, 1), // byte string
+      "cbor" -> b(0x7a, 0x7f, 0xff, 0xff, 0xff, 'a', 'b', 'c')) // text
+    for ((fmt, in) <- claims) {
+      val fromBuffer = allocated {
+        intercept[BufferUnderflowException] {
+          if (fmt == "msgpack") MsgPackCodec.decodeStream(in)
+          else CborCodec.decodeStream(in)
+        }
+      }
+      val fromStream = allocated {
+        intercept[EOFException] {
+          val s = new ByteArrayInputStream(in)
+          if (fmt == "msgpack") MsgPackCodec.decodeIterator(s).toVector
+          else CborCodec.decodeIterator(s).toVector
+        }
+      }
+      assert(fromBuffer < (1L << 20), s"$fmt from a buffer: $fromBuffer B")
+      assert(fromStream < (1L << 20), s"$fmt from a stream: $fromStream B")
+    }
+  }
+
   test("length headers beyond Int range fail with an error naming the " +
       "format, never wrap (cbor 64-bit, msgpack 32-bit)") {
     import java.nio.ByteBuffer

@@ -2,6 +2,8 @@ package graft
 
 import java.io.{ByteArrayOutputStream, InputStream}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.formats._
@@ -72,6 +74,42 @@ class StreamIOSpec extends AnyFunSuite {
     val it = RqFormat.decodeStream("raw",
       new RepeatingStream("line one\r\n".getBytes("UTF-8")))
     assert(it.take(4).toVector == Vector.fill(4)(Value.Str("line one")))
+  }
+
+  /** Hands out one byte per `read`, whatever the caller asks for. */
+  private final class OneByteStream(bytes: Array[Byte]) extends InputStream {
+    private var pos = 0
+    override def read(): Int =
+      if (pos < bytes.length) { pos += 1; bytes(pos - 1) & 0xff } else -1
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0
+      else { val c = read(); if (c < 0) -1 else { b(off) = c.toByte; 1 } }
+  }
+
+  test("decode through a one-byte-per-read stream equals the in-memory " +
+      "decode, with values straddling the read windows") {
+    // odd-sized records put every field width across the 64 KiB byte
+    // window and the 8 KiB char window; the long values span several
+    val small = (0 until 12000).map { i =>
+      Value.obj("i" -> Value.I64(i * 7919L - 40000000L),
+        "d" -> Value.F64(i / 3.0), "s" -> Value.Str("é中" * (i % 5)),
+        "u" -> Value.U64(-1L - i))
+    }
+    val records = Vector[Value](
+      Value.Str("x" * 70000), Value.Str("中" * 30000),
+      Value.Bytes(Array.tabulate(100000)(_.toByte))) ++ small ++
+      Vector(Value.seq(Value.Str("é" * 40000), Value.F64(-0.5)))
+    def viaStream(fmt: String, bytes: Array[Byte]): Vector[Value] =
+      RqFormat.decodeStream(fmt, new OneByteStream(bytes)).toVector
+    val mp = MsgPackCodec.encodeStream(records)
+    assert(mp.length > 3 * 65536)
+    assert(viaStream("msgpack", mp) == MsgPackCodec.decodeStream(mp))
+    val cb = CborCodec.encodeStream(records)
+    assert(viaStream("cbor", cb) == CborCodec.decodeStream(cb))
+    val text = records.map(JsonCodec.emit).mkString(" \n")
+    val fromText = JsonCodec.parseStream(text)
+    assert(fromText.size == records.size)
+    assert(viaStream("json", text.getBytes("UTF-8")) == fromText)
   }
 
   test("record encoders stream bytes out before finish (no partition buffer)") {
@@ -181,6 +219,51 @@ class StreamIOSpec extends AnyFunSuite {
     assert(whole.rdd.getNumPartitions == 1)
     assert(whole.collect().map(_.getString(0)).sorted.toSeq == got,
       "split read diverged from the unsplit read")
+  }
+
+  test("framed json/csv/raw shards mark record starts, and the split " +
+      "read equals the unsplit read") {
+    import java.nio.file.Files
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]").getOrCreate()
+    val engine = new graft.RqEngine(spark)
+    // JSON text rows, one record shape per sink, of varying length
+    val rows = Map(
+      "json" -> """concat('{"k":', id, ',"s":"',
+        |repeat('é', CAST(id % 23 AS INT)), '"}')""",
+      "csv" -> """concat('["', id, '","a,b","',
+        |repeat('q', CAST(id % 17 AS INT)), '"]')""",
+      "raw" -> """concat('"line ', id, ' ',
+        |repeat('z', CAST(id % 29 AS INT)), '"')""")
+      .map { case (f, e) => f -> e.stripMargin.replace("\n", "") }
+    for ((fmt, expr) <- rows) {
+      val dir = Files.createTempDirectory(s"rq_fr_$fmt").toString
+      val df = spark.range(0, 3000).selectExpr(s"$expr AS value").coalesce(1)
+      engine.write(fmt, df, dir, Map("frameEvery" -> "1024"))
+      val files = new java.io.File(dir).listFiles()
+      val data = files.filter(f => !f.getName.startsWith(".")).head
+      val bytes = Files.readAllBytes(data.toPath)
+      val sc = files.find(_.getName.endsWith(".rqx")).get
+      val offs = Files.readAllLines(sc.toPath).asScala.toSeq.tail
+        .filter(_.nonEmpty).map(_.toLong)
+      assert(offs.size > 4, s"$fmt: ${offs.size} marks")
+      // a mark is the end of the record where the period ran out
+      offs.foldLeft(0L) { (prev, o) =>
+        assert(o - prev >= 1024 && o <= bytes.length, s"$fmt: mark $o")
+        assert(bytes((o - 1).toInt) == '\n', s"$fmt: $o is no record start")
+        o
+      }
+      val split = engine.read(fmt, dir)
+      assert(split.rdd.getNumPartitions ==
+        offs.count(_ < bytes.length) + 1, fmt)
+      val got = split.collect().map(_.getString(0)).sorted.toSeq
+      assert(got.size == 3000, fmt)
+      sc.delete()
+      val whole = engine.read(fmt, dir)
+      assert(whole.rdd.getNumPartitions == 1, fmt)
+      assert(whole.collect().map(_.getString(0)).sorted.toSeq == got,
+        s"$fmt: split read diverged from the unsplit read")
+    }
   }
 
   test("frame index is not written for gzip or whole-doc formats, " +
