@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's correctness gate: for each query output
 parquet written by graft.Verify, run the corresponding oracle SQL in
-DuckDB over the same testdata tables and compare values.
+DuckDB over the same testdata tables and compare values. Every query
+listed in the failures.json that graft.Verify writes counts as a FAIL.
 
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
 """
@@ -32,8 +33,20 @@ def main(sf_dir: str, out_dir: str) -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
+    # queries that threw inside graft.Verify (absent when Verify
+    # predates the file)
+    failed = {}
+    if os.path.exists(f"{out_dir}/failures.json"):
+        with open(f"{out_dir}/failures.json") as f:
+            failed = {e["name"]: e for e in json.load(f)}
     n_fail = 0
-    for name in sorted(oracle):
+    for name in sorted(set(oracle) | set(failed)):
+        if name in failed:
+            e = failed[name]
+            print(f"FAIL {name}: verify failed: {e['class']}: "
+                  f"{e['message']}")
+            n_fail += 1
+            continue
         sql = oracle[name]
         try:
             want = canon(con.execute(sql).df())
@@ -72,7 +85,8 @@ def main(sf_dir: str, out_dir: str) -> int:
             n_fail += 1
         else:
             print(f"ok   {name} ({len(got)} rows)")
-    print(f"\n{len(oracle) - n_fail}/{len(oracle)} queries match")
+    n = len(set(oracle) | set(failed))
+    print(f"\n{n - n_fail}/{n} queries match")
     return 1 if n_fail else 0
 
 

@@ -937,9 +937,6 @@ object Similarity {
       val h = loads.indices.maxBy(i => (loads(i), -i))
       if (loads(h) <= maxSkew * mean) balanced = true
       else {
-        if (sys.env.contains("GRAFT_BAL_DEBUG"))
-          System.err.println(s"[bal] pass=$pass cells=${cents.length} " +
-            s"maxLoad=${loads(h)} minLoad=${loads.min} mean=$mean")
         // BISECT the heavy cell with a local 2-means over its own
         // members, seeded at its worst-fit member and the member
         // farthest from it (a single re-seeded member point cannot

@@ -38,8 +38,6 @@ object RqFormat {
   private def opt(options: Map[String, String], key: String): Option[String] =
     options.get(key).orElse(options.get(key.toLowerCase))
 
-  def readAll(in: InputStream): Array[Byte] = in.readAllBytes()
-
   /** Decode a whole in-memory input into its record stream. */
   def decode(format: String, bytes: Array[Byte],
       options: Map[String, String] = Map.empty): Iterator[Value] =

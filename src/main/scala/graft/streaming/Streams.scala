@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -241,10 +242,8 @@ object Streams {
     val n = corpus.count() + delta.count()
     val (bands, bits) = graft.operators.Dedup
       .lshParams(math.max(1L, n), threshold)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    edges.sliding(2).map { case Seq(lo, hi) =>
-      graft.operators.Dedup.embeddingNearDupsLSHAgainst(
-        delta.where(col(idCol) >= lo && col(idCol) < hi), corpus,
+    chunks(delta, idCol, bounds).map { b =>
+      graft.operators.Dedup.embeddingNearDupsLSHAgainst(b, corpus,
         idCol, vecCol, threshold, bands, bits)
     }.reduce(_.unionAll(_))
   }
@@ -261,29 +260,13 @@ object Streams {
       .lshParams(math.max(1L, totalHint), threshold)
     // Prep (norms + hyperplane band keys + localCheckpoint) ONCE,
     // before start(): per batch only the delta pays signatures. The
-    // prepped RDDs predate every batch's `before` snapshot, so the
-    // per-batch cleanup below never touches them.
+    // prepped RDDs predate every batch, so the per-batch release never
+    // touches them.
     val frozen = graft.operators.Dedup.lshPrep(
       corpus, "id", "v", bands, bits)
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("v", ArrayType(DoubleType))))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(deltaDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        graft.operators.Dedup.embeddingNearDupsLSHAgainstPrepped(
-            batch, frozen, "id", "v", threshold, bands, bits)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (rid, _) => before(rid) }
-          .values.foreach(_.unpersist(blocking = false))
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    runDocBatchStream(spark, deltaDir, outDir, idVecSchema)(
+      graft.operators.Dedup.embeddingNearDupsLSHAgainstPrepped(_, frozen,
+        "id", "v", threshold, bands, bits))
   }
 
   /** Chunked batch face of streaming SemDedup (QS17): id-sliced delta
@@ -299,11 +282,9 @@ object Streams {
       .labelCentroids(corpus, labelCol, vecCol).localCheckpoint(true)
     val frozen = graft.operators.Dedup
       .semDedupPrep(corpus, idCol, vecCol, cents)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    edges.sliding(2).map { case Seq(lo, hi) =>
-      graft.operators.Dedup.semDedupAgainstPrepped(
-        delta.where(col(idCol) >= lo && col(idCol) < hi), frozen,
-        cents, idCol, vecCol, threshold)
+    chunks(delta, idCol, bounds).map { b =>
+      graft.operators.Dedup.semDedupAgainstPrepped(b, frozen, cents,
+        idCol, vecCol, threshold)
     }.reduce(_.unionAll(_))
   }
 
@@ -320,25 +301,9 @@ object Streams {
       .labelCentroids(corpus, "label", "v").localCheckpoint(true)
     val frozen = graft.operators.Dedup
       .semDedupPrep(corpus, "id", "v", cents)
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("v", ArrayType(DoubleType))))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(deltaDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        graft.operators.Dedup.semDedupAgainstPrepped(
-            batch, frozen, cents, "id", "v", threshold)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (rid, _) => before(rid) }
-          .values.foreach(_.unpersist(blocking = false))
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    runDocBatchStream(spark, deltaDir, outDir, idVecSchema)(
+      graft.operators.Dedup.semDedupAgainstPrepped(_, frozen, cents,
+        "id", "v", threshold))
   }
 
   /** Streaming paragraph dedup (QS7): newly-arriving documents have
@@ -449,43 +414,62 @@ object Streams {
       graft.operators.Bpe.tokenizeDocsBytes(_, merges, numMerges = 16))
   }
 
-  /** Shared QS6/QS7 runner: a file-source of delta document parquet
-    * files → `transform(batch)` per micro-batch → parquet sink. The
-    * composite transforms (band joins + distinct + verify) are not
-    * single append-mode streaming plans, so they run via `foreachBatch`
-    * — the canonical Structured Streaming shape for batch-composite
-    * logic; exactly-once comes from idempotent per-batch overwrite
-    * into a batchId-named subdir. After each committed batch, the
-    * checkpoint blocks THAT batch created are released (the composite
-    * transforms localCheckpoint their intermediates; left in place
-    * they accumulate corpus-scale storage across a long stream) while
-    * pre-existing blocks — the caller's cached corpus or prepared
-    * store — survive.
+  /** Shared stateless runner (QS6/7/11/13/16/17/18): a file-source of
+    * delta parquet files → `transform(batch)` per micro-batch →
+    * parquet sink. The composite transforms (band joins + distinct +
+    * verify) are not single append-mode streaming plans, so they run
+    * via `foreachBatch` — the canonical Structured Streaming shape for
+    * batch-composite logic; exactly-once comes from idempotent
+    * per-batch overwrite into a batchId-named subdir. Each batch's
+    * blocks are released after its write ([[releasing]]).
     */
   private def runDocBatchStream(spark: SparkSession, deltaDir: String,
-      outDir: String)(transform: DataFrame => DataFrame): Unit =
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      transform(batch)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      outDir: String, schema: StructType = docSchema)(
+      transform: DataFrame => DataFrame): Unit =
+    fileStream(spark, deltaDir, schema, outDir) { (batch, batchId) =>
+      releasing(spark.sparkContext) {
+        transform(batch)
+          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      }
     }
 
+  /** Run `body`; return its result and the ids of the RDDs it left
+    * persisted (cached frames and localCheckpoint blocks). */
+  private def created[A](sc: SparkContext)(body: => A): (A, Set[Int]) = {
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val a = body
+    (a, sc.getPersistentRDDs.keySet.toSet -- before)
+  }
+
+  /** Unpersist those of `ids` that are still persisted. */
+  private def release(sc: SparkContext, ids: Set[Int]): Unit =
+    sc.getPersistentRDDs.filter { case (id, _) => ids(id) }
+      .values.foreach(_.unpersist(blocking = false))
+
+  /** Run `body` and release the blocks it created. Per-batch work
+    * localCheckpoints its intermediates; left in place they
+    * accumulate corpus-scale storage across a long stream. Blocks
+    * that predate `body` — a cached corpus, a prepared store — survive.
+    */
+  private def releasing[A](sc: SparkContext)(body: => A): A = {
+    val (a, ids) = created(sc)(body)
+    release(sc, ids)
+    a
+  }
+
   /** Reconcile `outDir/store/batch=*` against the streaming
-    * checkpoint's COMMIT log before a startup replay: a crash in the
+    * checkpoint's COMMIT log before a startup replay. A crash in the
     * window between the foreachBatch store write and the checkpoint
     * commit leaves a store batch the restarted stream will ALSO
-    * reprocess (same batch id). The duplicate-insensitive stores
-    * (first-occurrence / distinct / register-max folds) absorb that
-    * double harmlessly, but the qs32 prefix index and qs34 kNN-graph
-    * folds are duplicate-SENSITIVE: duplicated shingle rows inflate
-    * ppjoinVerify's __ix overlap counts, and a twice-ingested vector
-    * occupies two top-k slots, displacing a real edge. Uncommitted
-    * dirs are DELETED — the restarted stream reprocesses that batch
-    * and rewrites them (the idempotent-overwrite contract) — and only
-    * committed ones replay. Returns the committed dirs, oldest first.
+    * reprocess (same batch id), so every store replays committed
+    * batches only. Replaying an uncommitted dir double-ingests it
+    * into a duplicate-sensitive fold (duplicated shingle rows inflate
+    * ppjoinVerify's __ix overlap counts; a twice-ingested vector takes
+    * two top-k slots), and a store that reads it lazily fails when the
+    * reprocessed batch overwrites the dir under it. Uncommitted dirs
+    * are DELETED — the restarted stream reprocesses that batch and
+    * rewrites them (the idempotent-overwrite contract). Returns the
+    * committed dirs, oldest first.
     */
   private def committedStoreBatches(spark: SparkSession,
       outDir: String): Seq[String] = {
@@ -529,15 +513,30 @@ object Streams {
     keep.sortBy(_._1).map(_._2.toString)
   }
 
-  /** The bare QS6/QS7/QS8 stream skeleton: file-source of delta
-    * document parquet → `onBatch` per micro-batch → stop when drained.
+  /** Delta document files (the `documents` table's columns). */
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  /** Delta vector files of the QS16/QS17 screens. */
+  private val idVecSchema = StructType(Seq(StructField("id", LongType),
+    StructField("v", ArrayType(DoubleType))))
+
+  /** Delta embedding files (the `embeddings` table's columns). */
+  private val embeddingSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
+
+  /** The file-source stream skeleton: delta parquet files of `schema`
+    * under `deltaDir`, one file per trigger → `onBatch` per
+    * micro-batch → stop when drained. The checkpoint lives in
+    * `outDir/_checkpoint`.
     */
-  private def docStream(spark: SparkSession, deltaDir: String,
-      outDir: String)(onBatch: (DataFrame, Long) => Unit): Unit = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
+  private def fileStream(spark: SparkSession, deltaDir: String,
+      schema: StructType, outDir: String)(
+      onBatch: (DataFrame, Long) => Unit): Unit = {
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(deltaDir)
       .writeStream
@@ -550,6 +549,104 @@ object Streams {
     finally q.stop()
   }
 
+  /** One micro-batch's durable outputs in a store stream. Each is an
+    * idempotent overwrite keyed by the batch id, so a reprocessed
+    * batch rewrites the same paths.
+    */
+  private final class StoreBatch(spark: SparkSession, outDir: String,
+      batchId: Long) {
+    private val storeDir = s"$outDir/store/batch=$batchId"
+
+    /** Write the batch's store delta: what a restart replays. */
+    def store(delta: DataFrame): Unit =
+      delta.write.mode("overwrite").parquet(storeDir)
+
+    /** The store delta as written, read back. */
+    def stored: DataFrame = spark.read.parquet(storeDir)
+
+    /** Write the batch's result to `batch=<id>`. */
+    def result(out: DataFrame): Unit =
+      out.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+
+    /** Write one serving pass to `serve/batch=<id>`. The pass's
+      * scratch blocks (traversal visited frames, corpus/edge copies,
+      * medoid probes) are per-batch artifacts, not store state: they
+      * are released right after the write.
+      */
+    def serve(pass: => DataFrame): Unit =
+      releasing(spark.sparkContext) {
+        pass.write.mode("overwrite").parquet(s"$outDir/serve/batch=$batchId")
+      }
+  }
+
+  /** The evolving-store runner behind QS8, QS10, QS19, QS20, QS32,
+    * QS34, QS35 and QS37/QS38: delta files of `schema` → `ingest` per
+    * micro-batch into a store of type `S`. It owns what every store
+    * shares:
+    *
+    *  - Durability: `ingest` writes the batch's store delta to
+    *    `outDir/store/batch=<id>` through its [[StoreBatch]]. On a
+    *    (re)start the store is `prepare`d, then `replay`ed over the
+    *    checkpoint-COMMITTED store dirs, oldest first
+    *    ([[committedStoreBatches]]; `replay` is skipped when there
+    *    are none).
+    *  - Block ownership: the store owns every block that prepare,
+    *    replay and ingest leave persisted. Blocks that predate the
+    *    call (a cached corpus, a pinned query set) are never owned.
+    *  - Maintenance: after the run's n-th batch `maintain(store, n)`
+    *    may rewrite the store (compaction, re-preparation, tiering).
+    *    The owned blocks the rewrite did not create are then released
+    *    — delta-sized appends between store-sized rewrites (the LSM
+    *    amortization), keeping plan depth and block count bounded.
+    *
+    * Returns the drained store.
+    */
+  private def runStoreStream[S](spark: SparkSession, deltaDir: String,
+      schema: StructType, outDir: String)(prepare: => S)(
+      replay: (S, Seq[String]) => S,
+      ingest: (S, DataFrame, StoreBatch) => S,
+      maintain: (S, Int) => Option[S]): S = {
+    val sc = spark.sparkContext
+    var (store, owned) = created(sc) {
+      val prepared = prepare
+      val dirs = committedStoreBatches(spark, outDir)
+      if (dirs.isEmpty) prepared else replay(prepared, dirs)
+    }
+    var batches = 0
+    fileStream(spark, deltaDir, schema, outDir) { (batch, batchId) =>
+      val (next, made) = created(sc)(
+        ingest(store, batch, new StoreBatch(spark, outDir, batchId)))
+      store = next
+      owned ++= made
+      batches += 1
+      val (rewritten, kept) = created(sc)(maintain(store, batches))
+      rewritten match {
+        case Some(s) =>
+          store = s
+          release(sc, owned -- kept)
+          owned = kept
+        case None => owned ++= kept
+      }
+    }
+    store
+  }
+
+  /** `Some(rewrite)` after every `k`-th batch (`k` ≤ 0: never). */
+  private def every[S](n: Int, k: Int)(rewrite: => S): Option[S] =
+    if (k > 0 && n % k == 0) Some(rewrite) else None
+
+  /** `df` sliced by `idCol` into the chunks that the ascending
+    * upper-exclusive edges `bounds` cut: (-∞, b0), [b0, b1), …,
+    * [b_last, ∞), in id order. The batch-shape harnesses fold these
+    * exactly as the file-stream runners see their batches arrive.
+    */
+  private def chunks(df: DataFrame, idCol: String,
+      bounds: Seq[Long]): Seq[DataFrame] =
+    ((Long.MinValue +: bounds.sorted) :+ Long.MaxValue).sliding(2)
+      .map { case Seq(lo, hi) =>
+        df.where(col(idCol) >= lo && col(idCol) < hi)
+      }.toSeq
+
   /** Run the QS8 stream: delta document files → per-micro-batch
     * EVOLVING-store span dedup → parquet sink. Unlike [[
     * runParagraphDedupStream]]'s static store, here the store absorbs
@@ -560,10 +657,10 @@ object Streams {
     *  - Durability: each batch's absorbed spans also land in
     *    `outDir/store/batch=<id>` (idempotent overwrite, same
     *    exactly-once story as the result sink); a restarted stream
-    *    rebuilds the store by replaying them through
-    *    [[graft.operators.Dedup.appendSpansToStore]] — signatures are
-    *    deterministic, so the rebuilt store is equivalent to the one
-    *    the crashed run held.
+    *    rebuilds the store by replaying the checkpoint-committed ones
+    *    through [[graft.operators.Dedup.appendSpansToStore]] —
+    *    signatures are deterministic, so the rebuilt store is
+    *    equivalent to the one the crashed run held.
     *  - Compaction: every `compactEvery` batches the store's
     *    accumulated union frames rewrite into single checkpoints and
     *    the superseded blocks release — delta-sized appends between
@@ -578,40 +675,20 @@ object Streams {
       deltaDir: String, corpus: DataFrame, threshold: Double,
       outDir: String, compactEvery: Int = 8): Unit = {
     import graft.operators.Dedup
-    val sc = spark.sparkContext
-    val pre = sc.getPersistentRDDs.keySet
-    var ps = Dedup.prepareParagraphStore(corpus, "doc_id", "text",
-      graft.operators.ParagraphSplitter.FixedWindow(), threshold,
-      shingleN = 2, maxBucket = Dedup.AutoBucket)
-    val storeDir = new org.apache.hadoop.fs.Path(s"$outDir/store")
-    val fs = storeDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(storeDir) && fs.listStatus(storeDir).nonEmpty)
-      ps = Dedup.appendSpansToStore(ps,
-        spark.read.parquet(s"$outDir/store/batch=*"))
-    // blocks the evolving store currently owns — released at each
-    // compaction once the rewritten frames supersede them
-    var owned = sc.getPersistentRDDs.keySet -- pre
-    var batches = 0
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
-      val before = sc.getPersistentRDDs.keySet
-      val ing = Dedup.paragraphDedupIngest(batch, ps, "doc_id", "text")
-      ing.appended.write.mode("overwrite")
-        .parquet(s"$outDir/store/batch=$batchId")
-      ing.cleaned.write.mode("overwrite")
-        .parquet(s"$outDir/batch=$batchId")
-      ps = ing.next
-      owned ++= sc.getPersistentRDDs.keySet -- before
-      batches += 1
-      if (batches % compactEvery == 0) {
-        val preCompact = sc.getPersistentRDDs.keySet
-        ps = Dedup.compactParagraphStore(ps)
-        val kept = sc.getPersistentRDDs.keySet -- preCompact
-        sc.getPersistentRDDs
-          .filter { case (id, _) => owned(id) && !kept(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        owned = kept
-      }
-    }
+    runStoreStream(spark, deltaDir, docSchema, outDir)(
+      prepare = Dedup.prepareParagraphStore(corpus, "doc_id", "text",
+        graft.operators.ParagraphSplitter.FixedWindow(), threshold,
+        shingleN = 2, maxBucket = Dedup.AutoBucket))(
+      replay = (ps, dirs) =>
+        Dedup.appendSpansToStore(ps, spark.read.parquet(dirs: _*)),
+      ingest = (ps, batch, out) => {
+        val ing = Dedup.paragraphDedupIngest(batch, ps, "doc_id", "text")
+        out.store(ing.appended)
+        out.result(ing.cleaned)
+        ing.next
+      },
+      maintain = (ps, n) =>
+        every(n, compactEvery)(Dedup.compactParagraphStore(ps)))
   }
 
   /** Batch-shape QS8 harness (the oracle entry): ingest `newDocs`
@@ -629,14 +706,11 @@ object Streams {
     var ps = Dedup.prepareParagraphStore(corpus, "doc_id", "text",
       graft.operators.ParagraphSplitter.FixedWindow(), threshold,
       shingleN = 2, maxBucket = Dedup.AutoBucket)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).map { case Seq(lo, hi) =>
-      val ing = Dedup.paragraphDedupIngest(
-        newDocs.where(col("doc_id") >= lo && col("doc_id") < hi),
-        ps, "doc_id", "text")
+    val parts = chunks(newDocs, "doc_id", bounds).map { b =>
+      val ing = Dedup.paragraphDedupIngest(b, ps, "doc_id", "text")
       ps = ing.next
       ing.cleaned
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("doc_id")
   }
 
@@ -645,7 +719,8 @@ object Streams {
     * sink. The streaming face of xd12, with qs8's three structural
     * pieces: durability (each batch's appended gram keys land in
     * `outDir/store/batch=<id>`, idempotent overwrite; a restart
-    * replays them through [[graft.operators.Dedup.appendGramsToStore]]),
+    * replays the checkpoint-committed ones through
+    * [[graft.operators.Dedup.appendGramsToStore]]),
     * LSM compaction every `compactEvery` batches, and the monotone
     * doc_id-arrival contract that makes any chunking equal the
     * one-shot [[graft.operators.Dedup.substringDedup]] over
@@ -655,55 +730,36 @@ object Streams {
       corpus: DataFrame, outDir: String, l: Int = 40,
       compactEvery: Int = 4, tierEvery: Int = 0): Unit = {
     import graft.operators.Dedup
-    val sc = spark.sparkContext
-    val pre = sc.getPersistentRDDs.keySet
-    var gs = Dedup.prepareGramStore(corpus, "doc_id", "text", l)
-    val storeDir = new org.apache.hadoop.fs.Path(s"$outDir/store")
-    val fs = storeDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(storeDir) && fs.listStatus(storeDir).nonEmpty)
-      gs = Dedup.appendGramsToStore(gs,
-        spark.read.parquet(s"$outDir/store/batch=*"))
-    var owned = sc.getPersistentRDDs.keySet -- pre
-    var batches = 0
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
-      val before = sc.getPersistentRDDs.keySet
-      val ing = Dedup.substringDedupIngest(batch, gs, "doc_id", "text")
-      ing.appended.write.mode("overwrite")
-        .parquet(s"$outDir/store/batch=$batchId")
-      ing.result.write.mode("overwrite")
-        .parquet(s"$outDir/batch=$batchId")
-      gs = ing.next
-      owned ++= sc.getPersistentRDDs.keySet -- before
-      batches += 1
-      if (tierEvery > 0 && batches % tierEvery == 0) {
-        // spill the whole store to the parquet cold tier and release
-        // EVERY in-memory store block: memory residency drops to
-        // O(per-batch delta) while cold lookups stream from disk
-        // (Dedup.tierGramStore doc — the store-size retention story).
-        // The tier dir is VERSIONED per tiering: the current store
-        // lazily reads the previous cold tier, and Spark (correctly)
-        // refuses to overwrite a path it is reading from — write the
-        // new tier beside it, then drop the superseded one. Crash
-        // recovery is unchanged: the batch=<id> delta frames remain
-        // the durable record, the cold tier is a cache.
-        gs = Dedup.tierGramStore(gs, s"$outDir/store/cold_$batches")
-        val prev = new org.apache.hadoop.fs.Path(
-          s"$outDir/store/cold_${batches - tierEvery}")
-        if (fs.exists(prev)) fs.delete(prev, true)
-        sc.getPersistentRDDs
-          .filter { case (id, _) => owned(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        owned = Set.empty
-      } else if (batches % compactEvery == 0) {
-        val preCompact = sc.getPersistentRDDs.keySet
-        gs = Dedup.compactGramStore(gs)
-        val kept = sc.getPersistentRDDs.keySet -- preCompact
-        sc.getPersistentRDDs
-          .filter { case (id, _) => owned(id) && !kept(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        owned = kept
-      }
+    // spill the whole store to the parquet cold tier: it holds no
+    // in-memory block after, so memory residency drops to O(per-batch
+    // delta) while cold lookups stream from disk (Dedup.tierGramStore
+    // doc — the store-size retention story). The tier dir is
+    // VERSIONED per tiering: the current store lazily reads the
+    // previous cold tier, and Spark (correctly) refuses to overwrite a
+    // path it is reading from — write the new tier beside it, then
+    // drop the superseded one. Crash recovery is unchanged: the
+    // batch=<id> delta frames remain the durable record, the cold tier
+    // is a cache.
+    def tier(gs: Dedup.GramStore, n: Int): Dedup.GramStore = {
+      val next = Dedup.tierGramStore(gs, s"$outDir/store/cold_$n")
+      val prev = new org.apache.hadoop.fs.Path(
+        s"$outDir/store/cold_${n - tierEvery}")
+      val fs = prev.getFileSystem(spark.sessionState.newHadoopConf())
+      if (fs.exists(prev)) fs.delete(prev, true)
+      next
     }
+    runStoreStream(spark, deltaDir, docSchema, outDir)(
+      prepare = Dedup.prepareGramStore(corpus, "doc_id", "text", l))(
+      replay = (gs, dirs) =>
+        Dedup.appendGramsToStore(gs, spark.read.parquet(dirs: _*)),
+      ingest = (gs, batch, out) => {
+        val ing = Dedup.substringDedupIngest(batch, gs, "doc_id", "text")
+        out.store(ing.appended)
+        out.result(ing.result)
+        ing.next
+      },
+      maintain = (gs, n) => every(n, tierEvery)(tier(gs, n))
+        .orElse(every(n, compactEvery)(Dedup.compactGramStore(gs))))
   }
 
   /** Batch-shape QS10 harness (the oracle entry): ingest `newDocs`
@@ -716,14 +772,11 @@ object Streams {
       bounds: Seq[Long], l: Int = 40): DataFrame = {
     import graft.operators.Dedup
     var gs = Dedup.prepareGramStore(corpus, "doc_id", "text", l)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).map { case Seq(lo, hi) =>
-      val ing = Dedup.substringDedupIngest(
-        newDocs.where(col("doc_id") >= lo && col("doc_id") < hi),
-        gs, "doc_id", "text")
+    val parts = chunks(newDocs, "doc_id", bounds).map { b =>
+      val ing = Dedup.substringDedupIngest(b, gs, "doc_id", "text")
       gs = ing.next
       ing.result
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("doc_id")
   }
 
@@ -731,7 +784,7 @@ object Streams {
     * block dedup against the evolving chunk store → parquet sink. The
     * streaming face of xd15 with qs10's structural pieces: durable
     * per-batch store deltas (`outDir/store/batch=<id>`, idempotent
-    * overwrite; restart replays them through
+    * overwrite; restart replays the checkpoint-committed ones through
     * [[graft.operators.Dedup.appendChunksToStore]]), LSM compaction
     * every `compactEvery` batches, and the monotone doc_id-arrival
     * contract that makes any chunking equal the one-shot
@@ -743,36 +796,18 @@ object Streams {
   def runCdcDedupStream(spark: SparkSession, deltaDir: String,
       corpus: DataFrame, outDir: String, compactEvery: Int = 4): Unit = {
     import graft.operators.Dedup
-    val sc = spark.sparkContext
-    val pre = sc.getPersistentRDDs.keySet
-    var cs = Dedup.prepareChunkStore(corpus, "doc_id", "text")
-    val storeDir = new org.apache.hadoop.fs.Path(s"$outDir/store")
-    val fs = storeDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(storeDir) && fs.listStatus(storeDir).nonEmpty)
-      cs = Dedup.appendChunksToStore(cs,
-        spark.read.parquet(s"$outDir/store/batch=*"))
-    var owned = sc.getPersistentRDDs.keySet -- pre
-    var batches = 0
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
-      val before = sc.getPersistentRDDs.keySet
-      val ing = Dedup.cdcDedupIngest(batch, cs, "doc_id", "text")
-      ing.appended.write.mode("overwrite")
-        .parquet(s"$outDir/store/batch=$batchId")
-      ing.result.write.mode("overwrite")
-        .parquet(s"$outDir/batch=$batchId")
-      cs = ing.next
-      owned ++= sc.getPersistentRDDs.keySet -- before
-      batches += 1
-      if (batches % compactEvery == 0) {
-        val preCompact = sc.getPersistentRDDs.keySet
-        cs = Dedup.compactChunkStore(cs)
-        val kept = sc.getPersistentRDDs.keySet -- preCompact
-        sc.getPersistentRDDs
-          .filter { case (id, _) => owned(id) && !kept(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        owned = kept
-      }
-    }
+    runStoreStream(spark, deltaDir, docSchema, outDir)(
+      prepare = Dedup.prepareChunkStore(corpus, "doc_id", "text"))(
+      replay = (cs, dirs) =>
+        Dedup.appendChunksToStore(cs, spark.read.parquet(dirs: _*)),
+      ingest = (cs, batch, out) => {
+        val ing = Dedup.cdcDedupIngest(batch, cs, "doc_id", "text")
+        out.store(ing.appended)
+        out.result(ing.result)
+        ing.next
+      },
+      maintain = (cs, n) =>
+        every(n, compactEvery)(Dedup.compactChunkStore(cs)))
   }
 
   /** Batch-shape QS19 harness (the oracle entry): ingest `newDocs`
@@ -784,14 +819,11 @@ object Streams {
       bounds: Seq[Long]): DataFrame = {
     import graft.operators.Dedup
     var cs = Dedup.prepareChunkStore(corpus, "doc_id", "text")
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).map { case Seq(lo, hi) =>
-      val ing = Dedup.cdcDedupIngest(
-        newDocs.where(col("doc_id") >= lo && col("doc_id") < hi),
-        cs, "doc_id", "text")
+    val parts = chunks(newDocs, "doc_id", bounds).map { b =>
+      val ing = Dedup.cdcDedupIngest(b, cs, "doc_id", "text")
       cs = ing.next
       ing.result
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("doc_id")
   }
 
@@ -832,47 +864,20 @@ object Streams {
       corpus: DataFrame, threshold: Double, outDir: String,
       compactEvery: Int = 4, reprepareEvery: Int = 0): Unit = {
     import graft.operators.Dedup
-    val sc = spark.sparkContext
-    val pre = sc.getPersistentRDDs.keySet
-    var ix = Dedup.prepareAllPairsIndex(corpus, "doc_id", "text",
-      threshold)
-    // replay ONLY checkpoint-committed store batches (ADVICE r16): a
-    // crash between the store write and the commit would otherwise
-    // double-ingest that batch into a duplicate-sensitive fold
-    val committed = committedStoreBatches(spark, outDir)
-    if (committed.nonEmpty)
-      ix = Dedup.appendShinglesToIndex(ix,
-        spark.read.parquet(committed: _*))
-    var owned = sc.getPersistentRDDs.keySet -- pre
-    var batches = 0
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
-      val before = sc.getPersistentRDDs.keySet
-      val ing = Dedup.allPairsIngest(batch, ix, "doc_id", "text")
-      ing.appended.write.mode("overwrite")
-        .parquet(s"$outDir/store/batch=$batchId")
-      ing.result.write.mode("overwrite")
-        .parquet(s"$outDir/batch=$batchId")
-      ix = ing.next
-      owned ++= sc.getPersistentRDDs.keySet -- before
-      batches += 1
-      if (reprepareEvery > 0 && batches % reprepareEvery == 0) {
-        val preEpoch = sc.getPersistentRDDs.keySet
-        ix = Dedup.reprepareAllPairsIndex(ix)
-        val kept = sc.getPersistentRDDs.keySet -- preEpoch
-        sc.getPersistentRDDs
-          .filter { case (id, _) => owned(id) && !kept(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        owned = kept
-      } else if (batches % compactEvery == 0) {
-        val preCompact = sc.getPersistentRDDs.keySet
-        ix = Dedup.compactAllPairsIndex(ix)
-        val kept = sc.getPersistentRDDs.keySet -- preCompact
-        sc.getPersistentRDDs
-          .filter { case (id, _) => owned(id) && !kept(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        owned = kept
-      }
-    }
+    runStoreStream(spark, deltaDir, docSchema, outDir)(
+      prepare = Dedup.prepareAllPairsIndex(corpus, "doc_id", "text",
+        threshold))(
+      replay = (ix, dirs) =>
+        Dedup.appendShinglesToIndex(ix, spark.read.parquet(dirs: _*)),
+      ingest = (ix, batch, out) => {
+        val ing = Dedup.allPairsIngest(batch, ix, "doc_id", "text")
+        out.store(ing.appended)
+        out.result(ing.result)
+        ing.next
+      },
+      maintain = (ix, n) =>
+        every(n, reprepareEvery)(Dedup.reprepareAllPairsIndex(ix))
+          .orElse(every(n, compactEvery)(Dedup.compactAllPairsIndex(ix))))
   }
 
   /** Batch-shape QS32 harness (the oracle entry): ingest `newDocs`
@@ -887,14 +892,11 @@ object Streams {
     import graft.operators.Dedup
     var ix = Dedup.prepareAllPairsIndex(corpus, "doc_id", "text",
       threshold)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).map { case Seq(lo, hi) =>
-      val ing = Dedup.allPairsIngest(
-        newDocs.where(col("doc_id") >= lo && col("doc_id") < hi),
-        ix, "doc_id", "text")
+    val parts = chunks(newDocs, "doc_id", bounds).map { b =>
+      val ing = Dedup.allPairsIngest(b, ix, "doc_id", "text")
       ix = ing.next
       ing.result
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("a", "b")
   }
 
@@ -916,16 +918,13 @@ object Streams {
     import graft.operators.Dedup
     var ix = Dedup.prepareAllPairsIndex(corpus, "doc_id", "text",
       threshold)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).zipWithIndex.map {
-      case (Seq(lo, hi), i) =>
-        val ing = Dedup.allPairsIngest(
-          newDocs.where(col("doc_id") >= lo && col("doc_id") < hi),
-          ix, "doc_id", "text")
+    val parts = chunks(newDocs, "doc_id", bounds).zipWithIndex.map {
+      case (b, i) =>
+        val ing = Dedup.allPairsIngest(b, ix, "doc_id", "text")
         ix = ing.next
         if (reprepareAfter(i)) ix = Dedup.reprepareAllPairsIndex(ix)
         ing.result
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("a", "b")
   }
 
@@ -949,18 +948,15 @@ object Streams {
     import spark.implicits._
     var ix = Dedup.prepareAllPairsIndex(corpus, "doc_id", "text",
       threshold)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).zipWithIndex.map {
-      case (Seq(lo, hi), i) =>
-        val ing = Dedup.allPairsIngest(
-          newDocs.where(col("doc_id") >= lo && col("doc_id") < hi),
-          ix, "doc_id", "text")
+    val parts = chunks(newDocs, "doc_id", bounds).zipWithIndex.map {
+      case (b, i) =>
+        val ing = Dedup.allPairsIngest(b, ix, "doc_id", "text")
         ix = ing.next
         deletesAfter.get(i).filter(_.nonEmpty).foreach { ids =>
           ix = Dedup.allPairsDelete(ids.toDF("id"), ix)
         }
         ing.result
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("a", "b")
   }
 
@@ -983,10 +979,8 @@ object Streams {
     var gs = Dedup.prepareGramStore(corpus, "doc_id", "text")
     var live = corpus.select(col("doc_id"), col("text"))
       .localCheckpoint(true)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).zipWithIndex.map {
-      case (Seq(lo, hi), i) =>
-        val b = newDocs.where(col("doc_id") >= lo && col("doc_id") < hi)
+    val parts = chunks(newDocs, "doc_id", bounds).zipWithIndex.map {
+      case (b, i) =>
         val ing = Dedup.substringDedupIngest(b, gs, "doc_id", "text")
         gs = ing.next
         live = live.unionByName(b.select("doc_id", "text"))
@@ -999,7 +993,7 @@ object Streams {
             .localCheckpoint(true)
         }
         ing.result
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("doc_id")
   }
 
@@ -1022,51 +1016,37 @@ object Streams {
       corpus: DataFrame, k: Int, outDir: String,
       compactEvery: Int = 4): DataFrame = {
     import graft.operators.Similarity
-    val sc = spark.sparkContext
-    val pre = sc.getPersistentRDDs.keySet
-    var gs = Similarity.prepareKnnGraphStore(corpus, "vec_id",
-      "embedding", k)
-    // replay ONLY checkpoint-committed store batches (ADVICE r16): a
-    // crash between the store write and the commit would otherwise
-    // ingest that batch's vectors twice — two top-k slots per
-    // duplicate, displacing real edges
-    val committed = committedStoreBatches(spark, outDir)
-    if (committed.nonEmpty)
-      gs = Similarity.appendVectorsToStore(gs,
-        spark.read.parquet(committed: _*))
-    var owned = sc.getPersistentRDDs.keySet -- pre
-    var batches = 0
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(deltaDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val before = sc.getPersistentRDDs.keySet
-        val ing = graft.operators.Similarity.knnGraphIngest(
-          batch, gs, "vec_id", "embedding")
-        ing.appended.write.mode("overwrite")
-          .parquet(s"$outDir/store/batch=$batchId")
-        gs = ing.next
-        owned ++= sc.getPersistentRDDs.keySet -- before
-        batches += 1
-        if (batches % compactEvery == 0) {
-          val preCompact = sc.getPersistentRDDs.keySet
-          gs = graft.operators.Similarity.compactKnnGraphStore(gs)
-          val kept = sc.getPersistentRDDs.keySet -- preCompact
-          sc.getPersistentRDDs
-            .filter { case (id, _) => owned(id) && !kept(id) }
-            .values.foreach(_.unpersist(blocking = false))
-          owned = kept
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    Similarity.knnGraphFromStore(gs)
+    Similarity.knnGraphFromStore(
+      runKnnGraphStore(spark, deltaDir, corpus, k, outDir, compactEvery)(
+        (_, _) => ()))
+  }
+
+  /** The QS34 store stream that [[runKnnGraphStream]] and
+    * [[runKnnGraphServeStream]] share: the exact kNN-graph store,
+    * replayed as ONE batch of committed vector appends (the
+    * order-free fold), compacted every `compactEvery` batches.
+    * `afterIngest(store, out)` runs after each batch's fold.
+    */
+  private def runKnnGraphStore(spark: SparkSession, deltaDir: String,
+      corpus: DataFrame, k: Int, outDir: String, compactEvery: Int)(
+      afterIngest: (graft.operators.Similarity.KnnGraphStore,
+        StoreBatch) => Unit)
+      : graft.operators.Similarity.KnnGraphStore = {
+    import graft.operators.Similarity
+    runStoreStream(spark, deltaDir, embeddingSchema, outDir)(
+      prepare = Similarity.prepareKnnGraphStore(corpus, "vec_id",
+        "embedding", k))(
+      replay = (gs, dirs) =>
+        Similarity.appendVectorsToStore(gs, spark.read.parquet(dirs: _*)),
+      ingest = (gs, batch, out) => {
+        val ing = Similarity.knnGraphIngest(batch, gs, "vec_id",
+          "embedding")
+        out.store(ing.appended)
+        afterIngest(ing.next, out)
+        ing.next
+      },
+      maintain = (gs, n) =>
+        every(n, compactEvery)(Similarity.compactKnnGraphStore(gs)))
   }
 
   /** Batch-shape QS34 harness (the oracle entry): fold `newVecs` into
@@ -1081,11 +1061,8 @@ object Streams {
     import graft.operators.Similarity
     var gs = Similarity.prepareKnnGraphStore(corpus, "vec_id",
       "embedding", k)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    edges.sliding(2).foreach { case Seq(lo, hi) =>
-      gs = Similarity.knnGraphIngest(
-        newVecs.where(col("vec_id") >= lo && col("vec_id") < hi),
-        gs, "vec_id", "embedding").next
+    chunks(newVecs, "vec_id", bounds).foreach { b =>
+      gs = Similarity.knnGraphIngest(b, gs, "vec_id", "embedding").next
     }
     Similarity.knnGraphFromStore(gs)
   }
@@ -1113,11 +1090,8 @@ object Streams {
     import spark.implicits._
     var gs = Similarity.prepareKnnGraphStore(corpus, "vec_id",
       "embedding", k)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    edges.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), i) =>
-      gs = Similarity.knnGraphIngest(
-        newVecs.where(col("vec_id") >= lo && col("vec_id") < hi),
-        gs, "vec_id", "embedding").next
+    chunks(newVecs, "vec_id", bounds).zipWithIndex.foreach { case (b, i) =>
+      gs = Similarity.knnGraphIngest(b, gs, "vec_id", "embedding").next
       deletesAfter.get(i).filter(_.nonEmpty).foreach { ids =>
         gs = Similarity.knnGraphDelete(ids.toDF("id"), gs)
       }
@@ -1143,15 +1117,12 @@ object Streams {
     import graft.operators.Similarity
     var gs = Similarity.prepareBlockedGraphStore(corpus, idCol, vecCol,
       cents, probe, k)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
     // delta-proportional maintenance rounds are fixed small plans over
     // checkpointed frames — AQE re-planning is pure driver latency
     // there (guide §1.2); the corpus-scale prepare above keeps AQE
     graft.operators.LoopTuning.withLoopAqeOff(newVecs.sparkSession) {
-      edges.sliding(2).foreach { case Seq(lo, hi) =>
-        gs = Similarity.blockedGraphIngest(
-          newVecs.where(col(idCol) >= lo && col(idCol) < hi),
-          gs, idCol, vecCol)
+      chunks(newVecs, idCol, bounds).foreach { b =>
+        gs = Similarity.blockedGraphIngest(b, gs, idCol, vecCol)
       }
     }
     Similarity.blockedGraphFromStore(gs)
@@ -1208,17 +1179,14 @@ object Streams {
       cents, probe, k)
     val q = queries.select(col(idCol).as("id"), col(vecCol).as("v"))
       .localCheckpoint(true)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
     var serve: DataFrame = null
     // maintain+serve rounds: fixed small plans per chunk (ingest is
     // cell-blocked delta work, the serve a parameter-bounded descent)
     // — AQE waves are the profiled cost (194 jobs / 3.8s driver gap
     // on qs37 at sf0.1); prepare above keeps AQE
     graft.operators.LoopTuning.withLoopAqeOff(newVecs.sparkSession) {
-      edges.sliding(2).foreach { case Seq(lo, hi) =>
-        gs = Similarity.blockedGraphIngest(
-          newVecs.where(col(idCol) >= lo && col(idCol) < hi),
-          gs, idCol, vecCol)
+      chunks(newVecs, idCol, bounds).foreach { b =>
+        gs = Similarity.blockedGraphIngest(b, gs, idCol, vecCol)
         serve = hierServeFromBlockedStore(gs, q, seedM, ef, rounds, kq)
       }
     }
@@ -1254,14 +1222,11 @@ object Streams {
       cents, probe, k)
     val q = queries.select(col(idCol).as("id"), col(vecCol).as("v"),
       col(attrCol)).localCheckpoint(true)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
     var serve: DataFrame = null
     // same AQE-off fold scope as blockedServeChunked (qs37)
     graft.operators.LoopTuning.withLoopAqeOff(newVecs.sparkSession) {
-      edges.sliding(2).foreach { case Seq(lo, hi) =>
-        gs = Similarity.blockedGraphIngest(
-          newVecs.where(col(idCol) >= lo && col(idCol) < hi),
-          gs, idCol, vecCol)
+      chunks(newVecs, idCol, bounds).foreach { b =>
+        gs = Similarity.blockedGraphIngest(b, gs, idCol, vecCol)
         val live = gs.vecs.select(col("id"), col("v"))
         val entries = Similarity.cellMedoids(live, "id", "v", gs.cents)
         val corpusA = live.join(
@@ -1299,14 +1264,11 @@ object Streams {
     import spark.implicits._
     var gs = Similarity.prepareBlockedGraphStore(corpus, idCol, vecCol,
       cents, probe, k)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
     // same AQE-off fold scope as blockedServeChunked (qs37): ingest
     // and delete-repair rounds are fixed delta-proportional plans
     graft.operators.LoopTuning.withLoopAqeOff(newVecs.sparkSession) {
-      edges.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), i) =>
-        gs = Similarity.blockedGraphIngest(
-          newVecs.where(col(idCol) >= lo && col(idCol) < hi),
-          gs, idCol, vecCol)
+      chunks(newVecs, idCol, bounds).zipWithIndex.foreach { case (b, i) =>
+        gs = Similarity.blockedGraphIngest(b, gs, idCol, vecCol)
         deletesAfter.get(i).filter(_.nonEmpty).foreach { ids =>
           gs = Similarity.blockedGraphDelete(ids.toDF("id"), gs)
         }
@@ -1356,12 +1318,9 @@ object Streams {
       "embedding", k)
     val q = queries.select(col("vec_id").as("id"),
       col("embedding").as("v")).localCheckpoint(true)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
     var serve: DataFrame = null
-    edges.sliding(2).foreach { case Seq(lo, hi) =>
-      gs = Similarity.knnGraphIngest(
-        newVecs.where(col("vec_id") >= lo && col("vec_id") < hi),
-        gs, "vec_id", "embedding").next
+    chunks(newVecs, "vec_id", bounds).foreach { b =>
+      gs = Similarity.knnGraphIngest(b, gs, "vec_id", "embedding").next
       serve = serveFromStore(gs, q, entryIds, ef, rounds, kq)
     }
     serve
@@ -1369,78 +1328,31 @@ object Streams {
 
   /** Run the QS35 stream: delta embedding files → per-micro-batch
     * fold into the evolving kNN-graph store ([[runKnnGraphStream]]'s
-    * skeleton verbatim: durable committed-batch appends, order-free
+    * store stream: durable committed-batch appends, order-free
     * restart re-ingest, LSM compaction) PLUS, after each ingested
     * batch, one serving pass of the pinned `queries` over the
     * just-updated store, landing in `outDir/serve/batch=<id>`
     * (idempotent overwrite — a reprocessed batch rebuilds the same
     * prefix store and re-serves identically). The serve's scratch
-    * checkpoints (traversal visited frames, corpus/edge copies)
-    * release immediately after the write — they are per-batch
-    * artifacts, not store state, and left in place they would
-    * accumulate a traversal's worth of blocks every batch, forever.
-    * Returns the final serve over the drained store.
+    * checkpoints release right after the write ([[StoreBatch.serve]]);
+    * left in place they would accumulate a traversal's worth of
+    * blocks every batch, forever. Returns the final serve over the
+    * drained store.
     */
   def runKnnGraphServeStream(spark: SparkSession, deltaDir: String,
       corpus: DataFrame, queries: DataFrame, k: Int,
       entryIds: Seq[Long], ef: Int, rounds: Int, kq: Int,
       outDir: String, compactEvery: Int = 4): DataFrame = {
-    import graft.operators.Similarity
-    val sc = spark.sparkContext
-    // the pinned query set checkpoints BEFORE the ownership snapshot:
-    // it must survive every compaction (the compactor releases owned-
-    // but-not-kept blocks, and the query set is never "kept" by a
-    // store rewrite — caught by the QS35 restart spec)
+    // the pinned query set checkpoints BEFORE the store stream starts:
+    // it must survive every compaction (the store owns, and a rewrite
+    // releases, only blocks created inside the stream — caught by the
+    // QS35 restart spec)
     val qSet = queries.select(col("vec_id").as("id"),
       col("embedding").as("v")).localCheckpoint(true)
-    val pre = sc.getPersistentRDDs.keySet
-    var gs = Similarity.prepareKnnGraphStore(corpus, "vec_id",
-      "embedding", k)
-    val committed = committedStoreBatches(spark, outDir)
-    if (committed.nonEmpty)
-      gs = Similarity.appendVectorsToStore(gs,
-        spark.read.parquet(committed: _*))
-    var owned = sc.getPersistentRDDs.keySet -- pre
-    var batches = 0
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(deltaDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val before = sc.getPersistentRDDs.keySet
-        val ing = graft.operators.Similarity.knnGraphIngest(
-          batch, gs, "vec_id", "embedding")
-        ing.appended.write.mode("overwrite")
-          .parquet(s"$outDir/store/batch=$batchId")
-        gs = ing.next
-        owned ++= sc.getPersistentRDDs.keySet -- before
-        // serve against the just-updated store; release the serve's
-        // scratch blocks right after the sink write
-        val preServe = sc.getPersistentRDDs.keySet
-        serveFromStore(gs, qSet, entryIds, ef, rounds, kq)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/serve/batch=$batchId")
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preServe(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        batches += 1
-        if (batches % compactEvery == 0) {
-          val preCompact = sc.getPersistentRDDs.keySet
-          gs = graft.operators.Similarity.compactKnnGraphStore(gs)
-          val kept = sc.getPersistentRDDs.keySet -- preCompact
-          sc.getPersistentRDDs
-            .filter { case (id, _) => owned(id) && !kept(id) }
-            .values.foreach(_.unpersist(blocking = false))
-          owned = kept
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val gs = runKnnGraphStore(spark, deltaDir, corpus, k, outDir,
+        compactEvery) { (store, out) =>
+      out.serve(serveFromStore(store, qSet, entryIds, ef, rounds, kq))
+    }
     serveFromStore(gs, qSet, entryIds, ef, rounds, kq)
   }
 
@@ -1465,8 +1377,8 @@ object Streams {
     *    duplicate-sensitive fold + the loud tombstone guard both
     *    demand it).
     *  - Serve scratch (traversal visited frames, medoid probes)
-    *    releases immediately after each sink write — per-batch
-    *    artifacts, not store state (the qs35 lesson).
+    *    releases immediately after each sink write
+    *    ([[StoreBatch.serve]], the qs35 lesson).
     *  - LSM compaction every `compactEvery` batches.
     *  - Scheduled RE-BLOCKING EPOCHS every `reblockEvery` applied
     *    batches (0 = never): the centroid refresh that keeps frozen
@@ -1485,18 +1397,12 @@ object Streams {
       compactEvery: Int = 4, reblockEvery: Int = 0)
       : graft.operators.Similarity.BlockedGraphStore = {
     import graft.operators.Similarity
-    val sc = spark.sparkContext
-    // pinned query set checkpoints BEFORE the ownership snapshot —
-    // it must survive every compaction (the qs35 restart-spec lesson)
-    val qSet = queries.select(col("vec_id").as("id"),
-        expr("transform(embedding, x -> cast(x as double))").as("v"))
+    val asDouble = expr("transform(embedding, x -> cast(x as double))")
+    // pinned query set checkpoints BEFORE the store stream starts — it
+    // must survive every compaction (the qs35 restart-spec lesson)
+    val qSet = queries.select(col("vec_id").as("id"), asDouble.as("v"))
       .localCheckpoint(true)
     val nlist0 = cents.length
-    val pre = sc.getPersistentRDDs.keySet
-    var gs = Similarity.prepareBlockedGraphStore(
-      corpus.select(col("vec_id"),
-        expr("transform(embedding, x -> cast(x as double))").as("v")),
-      "vec_id", "v", cents, probe, k)
     // `reblockEvery` > 0 schedules a RE-BLOCKING EPOCH (centroid
     // refresh — Similarity.reblockGraphStoreAuto, the load-aware
     // trainer over the accumulated store, back to the seed nlist)
@@ -1507,10 +1413,11 @@ object Streams {
     // lifecycle (ingest, delete, refresh, serve) restartable in one
     // stream.
     var applied = 0
-    def applyOps(ops: DataFrame): Unit = {
+    def applyOps(store: Similarity.BlockedGraphStore,
+        ops: DataFrame): Similarity.BlockedGraphStore = {
+      var gs = store
       val adds = ops.where(col("op") === "add")
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("v"))
+        .select(col("vec_id"), asDouble.as("v"))
       if (!adds.isEmpty)
         gs = Similarity.blockedGraphIngest(adds, gs, "vec_id", "v")
       val dels = ops.where(col("op") === "del")
@@ -1518,51 +1425,27 @@ object Streams {
       if (!dels.isEmpty)
         gs = Similarity.blockedGraphDelete(dels, gs)
       applied += 1
-      if (reblockEvery > 0 && applied % reblockEvery == 0)
-        gs = Similarity.reblockGraphStoreAuto(gs, nlist0)
+      every(applied, reblockEvery)(
+        Similarity.reblockGraphStoreAuto(gs, nlist0)).getOrElse(gs)
     }
-    // sequential replay, oldest first — see the durability note
-    for (dir <- committedStoreBatches(spark, outDir))
-      applyOps(spark.read.parquet(dir))
-    var owned = sc.getPersistentRDDs.keySet -- pre
-    var batches = 0
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType),
-      StructField("op", StringType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(deltaDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val before = sc.getPersistentRDDs.keySet
-        batch.write.mode("overwrite")
-          .parquet(s"$outDir/store/batch=$batchId")
-        applyOps(spark.read.parquet(s"$outDir/store/batch=$batchId"))
-        owned ++= sc.getPersistentRDDs.keySet -- before
-        val preServe = sc.getPersistentRDDs.keySet
-        hierServeFromBlockedStore(gs, qSet, seedM, ef, rounds, kq)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/serve/batch=$batchId")
-        sc.getPersistentRDDs
-          .filterNot { case (id, _) => preServe(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        batches += 1
-        if (batches % compactEvery == 0) {
-          val preCompact = sc.getPersistentRDDs.keySet
-          gs = Similarity.compactBlockedGraphStore(gs)
-          val kept = sc.getPersistentRDDs.keySet -- preCompact
-          sc.getPersistentRDDs
-            .filter { case (id, _) => owned(id) && !kept(id) }
-            .values.foreach(_.unpersist(blocking = false))
-          owned = kept
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    gs
+    runStoreStream(spark, deltaDir,
+        embeddingSchema.add("op", StringType), outDir)(
+      prepare = Similarity.prepareBlockedGraphStore(
+        corpus.select(col("vec_id"), asDouble.as("v")),
+        "vec_id", "v", cents, probe, k))(
+      // sequential replay, oldest first — see the durability note
+      replay = (gs, dirs) => dirs.foldLeft(gs) { (g, dir) =>
+        applyOps(g, spark.read.parquet(dir))
+      },
+      ingest = (gs, batch, out) => {
+        out.store(batch)
+        val next = applyOps(gs, out.stored)
+        out.serve(hierServeFromBlockedStore(next, qSet, seedM, ef,
+          rounds, kq))
+        next
+      },
+      maintain = (gs, n) =>
+        every(n, compactEvery)(Similarity.compactBlockedGraphStore(gs)))
   }
 
   /** Batch-shape QS20 harness (the oracle entry): C4-clean `newDocs`
@@ -1576,14 +1459,11 @@ object Streams {
       bounds: Seq[Long]): DataFrame = {
     import graft.operators.Quality
     var ls = Quality.prepareLineStore(corpus, "doc_id", "text")
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).map { case Seq(lo, hi) =>
-      val ing = Quality.c4CleanIngest(
-        newDocs.where(col("doc_id") >= lo && col("doc_id") < hi),
-        ls, "doc_id", "text")
+    val parts = chunks(newDocs, "doc_id", bounds).map { b =>
+      val ing = Quality.c4CleanIngest(b, ls, "doc_id", "text")
       ls = ing.next
       ing.result
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("doc_id")
   }
 
@@ -1598,11 +1478,8 @@ object Streams {
       bounds: Seq[Long]): DataFrame = {
     import graft.operators.Sketches
     var rs = Sketches.prepareRegStore(corpus, "source", col("text"))
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    edges.sliding(2).foreach { case Seq(lo, hi) =>
-      rs = Sketches.hllIngest(
-        newDocs.where(col("doc_id") >= lo && col("doc_id") < hi),
-        rs, "source", col("text"))
+    chunks(newDocs, "doc_id", bounds).foreach { b =>
+      rs = Sketches.hllIngest(b, rs, "source", col("text"))
     }
     Sketches.hllEstimates(rs)
       .select(col("g").as("source"), col("v_zero"), col("s_sum"),
@@ -1623,11 +1500,8 @@ object Streams {
     import graft.operators.Scale
     val proj = (df: DataFrame) => df.select(col("doc_id"), col("lang"))
     var ss = Scale.prepareSampleStore(proj(corpus), col("doc_id"), k)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    edges.sliding(2).foreach { case Seq(lo, hi) =>
-      ss = Scale.sampleIngest(
-        proj(newDocs.where(col("doc_id") >= lo && col("doc_id") < hi)),
-        ss, col("doc_id"))
+    chunks(newDocs, "doc_id", bounds).foreach { b =>
+      ss = Scale.sampleIngest(proj(b), ss, col("doc_id"))
     }
     // orderBy + limit = TakeOrderedAndProject (single ordered
     // partition — the xk5 plan shape, so the parquet dump preserves
@@ -1649,16 +1523,14 @@ object Streams {
     import graft.operators.Events
     var st = Events.prepareEwmaStore(corpus, "user_id", "ts",
       "event_id", "value")
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).map { case Seq(lo, hi) =>
-      val ing = Events.ewmaIngest(
-        newEvents.where(col("event_id") >= lo && col("event_id") < hi),
-        st, "user_id", "ts", "event_id", "value")
+    val parts = chunks(newEvents, "event_id", bounds).map { b =>
+      val ing = Events.ewmaIngest(b, st, "user_id", "ts", "event_id",
+        "value")
       // stats reset per chunk (the xd18 lesson — a long-running
       // store-resumption loop multiplies checkpointed size estimates)
       st = Events.resetStoreStats(ing.next)
       ing.result
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("id")
   }
 
@@ -1672,15 +1544,13 @@ object Streams {
     import graft.operators.Events
     var st = Events.prepareCusumStore(corpus, "user_id", "ts",
       "event_id", "value")
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).map { case Seq(lo, hi) =>
-      val ing = Events.cusumIngest(
-        newEvents.where(col("event_id") >= lo && col("event_id") < hi),
-        st, "user_id", "ts", "event_id", "value")
+    val parts = chunks(newEvents, "event_id", bounds).map { b =>
+      val ing = Events.cusumIngest(b, st, "user_id", "ts", "event_id",
+        "value")
       // stats reset per chunk (the xd18 lesson)
       st = Events.resetCusumStoreStats(ing.next)
       ing.result
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("id")
   }
 
@@ -1710,10 +1580,8 @@ object Streams {
       .select(col("t").as("src"), col("t").as("dst"),
         lit(0L).as("n"))
       .localCheckpoint(true)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
     val w = Window.partitionBy("key").orderBy("ts", "id")
-    edges.sliding(2).foreach { case Seq(lo, hi) =>
-      val chunk = ev.where(col("id") >= lo && col("id") < hi)
+    chunks(ev, "id", bounds).foreach { chunk =>
       val aug = chunk.withColumn("__carried", lit(false))
         .unionAll(last.withColumn("__carried", lit(true)))
       val delta = aug
@@ -1741,7 +1609,7 @@ object Streams {
   /** Run the QS20 stream: delta document files → per-micro-batch
     * evolving-line-store C4 cleaning → parquet sink, durable store
     * deltas under `outDir/store/batch=<id>` (restart re-folds the
-    * committed appends instead of replaying data — the
+    * checkpoint-committed appends instead of replaying data — the
     * [[runCdcDedupStream]] recovery contract), LSM compaction every
     * `compactEvery` batches. State is one row per DISTINCT
     * rule-passing line text — the C4 dedup state a trillion-token
@@ -1750,36 +1618,18 @@ object Streams {
   def runC4CleanStream(spark: SparkSession, deltaDir: String,
       corpus: DataFrame, outDir: String, compactEvery: Int = 4): Unit = {
     import graft.operators.Quality
-    val sc = spark.sparkContext
-    val pre = sc.getPersistentRDDs.keySet
-    var ls = Quality.prepareLineStore(corpus, "doc_id", "text")
-    val storeDir = new org.apache.hadoop.fs.Path(s"$outDir/store")
-    val fs = storeDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(storeDir) && fs.listStatus(storeDir).nonEmpty)
-      ls = Quality.appendLinesToStore(ls,
-        spark.read.parquet(s"$outDir/store/batch=*"))
-    var owned = sc.getPersistentRDDs.keySet -- pre
-    var batches = 0
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
-      val before = sc.getPersistentRDDs.keySet
-      val ing = Quality.c4CleanIngest(batch, ls, "doc_id", "text")
-      ing.appended.write.mode("overwrite")
-        .parquet(s"$outDir/store/batch=$batchId")
-      ing.result.write.mode("overwrite")
-        .parquet(s"$outDir/batch=$batchId")
-      ls = ing.next
-      owned ++= sc.getPersistentRDDs.keySet -- before
-      batches += 1
-      if (batches % compactEvery == 0) {
-        val preCompact = sc.getPersistentRDDs.keySet
-        ls = Quality.compactLineStore(ls)
-        val kept = sc.getPersistentRDDs.keySet -- preCompact
-        sc.getPersistentRDDs
-          .filter { case (id, _) => owned(id) && !kept(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        owned = kept
-      }
-    }
+    runStoreStream(spark, deltaDir, docSchema, outDir)(
+      prepare = Quality.prepareLineStore(corpus, "doc_id", "text"))(
+      replay = (ls, dirs) =>
+        Quality.appendLinesToStore(ls, spark.read.parquet(dirs: _*)),
+      ingest = (ls, batch, out) => {
+        val ing = Quality.c4CleanIngest(batch, ls, "doc_id", "text")
+        out.store(ing.appended)
+        out.result(ing.result)
+        ing.next
+      },
+      maintain = (ls, n) =>
+        every(n, compactEvery)(Quality.compactLineStore(ls)))
   }
 
   /** Batch-shape QS24 harness (the oracle entry): fold `newEvents`
@@ -1795,11 +1645,9 @@ object Streams {
     import graft.operators.Events
     var st = Events.prepareFunnelStore(corpus, "user_id", "ts",
       "event_id", "event_type", steps, windowUs)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    edges.sliding(2).foreach { case Seq(lo, hi) =>
-      st = Events.funnelIngest(
-        newEvents.where(col("event_id") >= lo && col("event_id") < hi),
-        st, "user_id", "ts", "event_id", "event_type", steps, windowUs)
+    chunks(newEvents, "event_id", bounds).foreach { b =>
+      st = Events.funnelIngest(b, st, "user_id", "ts", "event_id",
+        "event_type", steps, windowUs)
     }
     Events.funnelCounts(st, steps).orderBy("step")
   }
@@ -1815,11 +1663,8 @@ object Streams {
       bounds: Seq[Long]): DataFrame = {
     import graft.operators.Events
     var st = Events.prepareCohortStore(corpus, "user_id", "ts")
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    edges.sliding(2).foreach { case Seq(lo, hi) =>
-      st = Events.cohortIngest(
-        newEvents.where(col("event_id") >= lo && col("event_id") < hi),
-        st, "user_id", "ts")
+    chunks(newEvents, "event_id", bounds).foreach { b =>
+      st = Events.cohortIngest(b, st, "user_id", "ts")
     }
     Events.cohortCounts(st).orderBy("cohort_week", "week_offset")
   }
@@ -1837,16 +1682,13 @@ object Streams {
     val withTok = docs.select(col("doc_id"),
       size(graft.functions.TextFns.tokens(col("text"))).as("n_tok"))
     var base = 0L
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).map { case Seq(lo, hi) =>
-      val chunk = withTok
-        .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val parts = chunks(withTok, "doc_id", bounds).map { chunk =>
       val packed = graft.operators.Scale.packShards(chunk, "doc_id",
         "n_tok", budget, base = base)
       base += chunk.agg(coalesce(sum("n_tok"), lit(0L)))
         .head.getLong(0)
       packed
-    }.toSeq
+    }
     parts.reduce(_.unionAll(_)).orderBy("doc_id")
   }
 
@@ -1868,15 +1710,12 @@ object Streams {
       graft.functions.TextFns.tokens(col("text")).as("fw"))
       .withColumn("w", size(col("fw")).cast("long"))
     var base = 0L
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    val parts = edges.sliding(2).map { case Seq(lo, hi) =>
-      val chunk = withTok
-        .where(col("doc_id") >= lo && col("doc_id") < hi)
+    val parts = chunks(withTok, "doc_id", bounds).map { chunk =>
       val packed = graft.operators.Scale.packSequences(chunk, "doc_id",
         "w", seqLen, base = base)
       base += chunk.agg(coalesce(sum("w"), lit(0L))).head.getLong(0)
       packed
-    }.toSeq
+    }
     val pieces = parts.reduce(_.unionAll(_))
       .select(col("sample"), col("doc_id"),
         array_join(slice(col("fw"), col("piece_from").cast("int"),
@@ -1926,7 +1765,7 @@ object Streams {
       capacity: Int = 4096): DataFrame = {
     require(capacity + 1 > denom,
       "runHeavyHittersStream: need capacity+1 > denom (MG no-miss)")
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
+    fileStream(spark, deltaDir, docSchema, outDir) { (batch, batchId) =>
       batch.select(
           explode(graft.functions.TextFns.tokens(col("text"))).as("g"))
         .agg(graft.operators.Sketches
@@ -1987,11 +1826,9 @@ object Streams {
       minCount: Long = 10L): DataFrame = {
     val in = java.nio.file.Paths.get(inDir)
     java.nio.file.Files.createDirectories(in)
-    val edges = (Long.MinValue +: bounds.sorted) :+ Long.MaxValue
-    for ((Seq(lo, hi), i) <- edges.sliding(2).zipWithIndex) {
+    for ((slice, i) <- chunks(docs, "doc_id", bounds).zipWithIndex) {
       val sliceDir = in.resolve(s"__slice_$i")
-      docs.where(col("doc_id") >= lo && col("doc_id") < hi)
-        .coalesce(1).write.mode("overwrite")
+      slice.coalesce(1).write.mode("overwrite")
         .parquet(sliceDir.toString)
       val parts = sliceDir.toFile.listFiles
         .filter(_.getName.endsWith(".parquet"))
@@ -1999,7 +1836,8 @@ object Streams {
       // instead of throwing an opaque NoSuchElementException (the
       // isNullAt discipline of the qs30 watermark fix)
       require(parts.nonEmpty, s"runWordCountUpdateStream: doc_id " +
-        s"slice $i [$lo, $hi) is empty — no parquet part written")
+        s"slice $i of bounds ${bounds.sorted.mkString("[", ", ", "]")} " +
+        "is empty — no parquet part written")
       val part = parts.head
       val dst = in.resolve(f"slice_$i%02d.parquet")
       java.nio.file.Files.move(part.toPath, dst,
@@ -2051,7 +1889,7 @@ object Streams {
       outDir: String, groupCol: String = "source",
       valueCol: String = "n_chars",
       ps: Seq[Double] = Seq(0.5, 0.9, 0.99), s: Int = 512): DataFrame = {
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
+    fileStream(spark, deltaDir, docSchema, outDir) { (batch, batchId) =>
       graft.operators.Quantiles
         .sketchByGroup(batch, Seq(groupCol), valueCol, s)
         .write.mode("overwrite")
@@ -2112,41 +1950,55 @@ object Streams {
     * combining pieces from adjacent batches.
     */
   def runPackSequencesStream(spark: SparkSession, deltaDir: String,
-      seqLen: Long, outDir: String): Unit = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val offDir = s"$outDir/offsets"
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
-      val before = sc.getPersistentRDDs.keySet
-      val offPath = new org.apache.hadoop.fs.Path(offDir)
-      val fs = offPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val committed =
-        if (!fs.exists(offPath)) Array.empty[String]
-        else fs.listStatus(offPath).filter(_.isDirectory).map(_.getPath)
-          .filter(p => p.getName.startsWith("batch=") &&
-            p.getName.stripPrefix("batch=").toLong < batchId &&
-            fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-          .map(_.toString)
-      val base =
-        if (committed.isEmpty) 0L
-        else spark.read.parquet(committed.toIndexedSeq: _*)
-          .agg(coalesce(sum("tok"), lit(0L))).head.getLong(0)
-      val withTok = batch.select(col("doc_id"),
-        graft.functions.TextFns.tokens(col("text")).as("fw"))
-        .withColumn("w", size(col("fw")).cast("long"))
-      graft.operators.Scale
-        .packSequences(withTok, "doc_id", "w", seqLen, base = base)
-        .select(col("doc_id"), col("sample"),
-          array_join(slice(col("fw"), col("piece_from").cast("int"),
-            col("piece_len").cast("int")), " ").as("piece"),
-          col("piece_len"))
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      val tok = withTok.agg(coalesce(sum("w"), lit(0L))).head.getLong(0)
-      Seq((batchId, tok)).toDF("batch_id", "tok")
-        .write.mode("overwrite").parquet(s"$offDir/batch=$batchId")
-      sc.getPersistentRDDs.filterNot { case (id, _) => before(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      seqLen: Long, outDir: String): Unit =
+    fileStream(spark, deltaDir, docSchema, outDir) { (batch, batchId) =>
+      releasing(spark.sparkContext) {
+        val base = earlierTokens(spark, outDir, batchId)
+        val withTok = batch.select(col("doc_id"),
+          graft.functions.TextFns.tokens(col("text")).as("fw"))
+          .withColumn("w", size(col("fw")).cast("long"))
+        graft.operators.Scale
+          .packSequences(withTok, "doc_id", "w", seqLen, base = base)
+          .select(col("doc_id"), col("sample"),
+            array_join(slice(col("fw"), col("piece_from").cast("int"),
+              col("piece_len").cast("int")), " ").as("piece"),
+            col("piece_len"))
+          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        recordTokens(spark, outDir, batchId,
+          withTok.agg(coalesce(sum("w"), lit(0L))).head.getLong(0))
+      }
     }
+
+  /** The token count of every batch before `batchId`, summed from the
+    * durable per-batch counts in `outDir/offsets/batch=<id>`: the
+    * `base` a QS9/QS12 batch packs from. Hadoop FS, not java.io.File —
+    * outDir may be HDFS/S3. Only COMMITTED offset dirs count (_SUCCESS
+    * filter: a crash mid-write leaves a dir whose parquet read would
+    * wedge every restart), and only strictly earlier batches (a
+    * replayed batch must not see its own crashed attempt's offset).
+    */
+  private def earlierTokens(spark: SparkSession, outDir: String,
+      batchId: Long): Long = {
+    val offPath = new org.apache.hadoop.fs.Path(s"$outDir/offsets")
+    val fs = offPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val committed =
+      if (!fs.exists(offPath)) Array.empty[String]
+      else fs.listStatus(offPath).filter(_.isDirectory).map(_.getPath)
+        .filter(p => p.getName.startsWith("batch=") &&
+          p.getName.stripPrefix("batch=").toLong < batchId &&
+          fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+        .map(_.toString)
+    if (committed.isEmpty) 0L
+    else spark.read.parquet(committed.toIndexedSeq: _*)
+      .agg(coalesce(sum("tok"), lit(0L))).head.getLong(0)
+  }
+
+  /** Record batch `batchId`'s token count (idempotent overwrite). */
+  private def recordTokens(spark: SparkSession, outDir: String,
+      batchId: Long, tok: Long): Unit = {
+    import spark.implicits._
+    Seq((batchId, tok)).toDF("batch_id", "tok")
+      .write.mode("overwrite").parquet(s"$outDir/offsets/batch=$batchId")
   }
 
   /** Run the QS9 stream: delta document files → per-micro-batch shard
@@ -2162,46 +2014,21 @@ object Streams {
     * qs8 evolving store.
     */
   def runShardPackStream(spark: SparkSession, deltaDir: String,
-      budget: Long, outDir: String): Unit = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val offDir = s"$outDir/offsets"
-    docStream(spark, deltaDir, outDir) { (batch, batchId) =>
-      val before = sc.getPersistentRDDs.keySet
-      // Hadoop FS, not java.io.File — outDir may be HDFS/S3 (the qs8
-      // store replay uses the same API); only COMMITTED offset dirs
-      // count (_SUCCESS filter: a crash mid-write leaves a dir whose
-      // parquet read would wedge every restart), and only strictly
-      // earlier batches (a replayed batch must not see its own
-      // crashed attempt's offset)
-      val offPath = new org.apache.hadoop.fs.Path(offDir)
-      val fs = offPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val committed =
-        if (!fs.exists(offPath)) Array.empty[String]
-        else fs.listStatus(offPath).filter(_.isDirectory).map(_.getPath)
-          .filter(p => p.getName.startsWith("batch=") &&
-            p.getName.stripPrefix("batch=").toLong < batchId &&
-            fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-          .map(_.toString)
-      val base =
-        if (committed.isEmpty) 0L
-        else spark.read.parquet(committed.toIndexedSeq: _*)
-          .agg(coalesce(sum("tok"), lit(0L))).head.getLong(0)
-      val withTok = batch.select(col("doc_id"),
-        size(graft.functions.TextFns.tokens(col("text"))).as("n_tok"))
-      graft.operators.Scale
-        .packShards(withTok, "doc_id", "n_tok", budget, base = base)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      val tok = withTok.agg(coalesce(sum("n_tok"), lit(0L)))
-        .head.getLong(0)
-      Seq((batchId, tok)).toDF("batch_id", "tok")
-        .write.mode("overwrite").parquet(s"$offDir/batch=$batchId")
-      // release the blocks packShards' materialize-once checkpoint
-      // created for THIS batch (same hygiene as runDocBatchStream)
-      sc.getPersistentRDDs.filterNot { case (id, _) => before(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      budget: Long, outDir: String): Unit =
+    fileStream(spark, deltaDir, docSchema, outDir) { (batch, batchId) =>
+      // releases the blocks packShards' materialize-once checkpoint
+      // creates for THIS batch
+      releasing(spark.sparkContext) {
+        val base = earlierTokens(spark, outDir, batchId)
+        val withTok = batch.select(col("doc_id"),
+          size(graft.functions.TextFns.tokens(col("text"))).as("n_tok"))
+        graft.operators.Scale
+          .packShards(withTok, "doc_id", "n_tok", budget, base = base)
+          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        recordTokens(spark, outDir, batchId,
+          withTok.agg(coalesce(sum("n_tok"), lit(0L))).head.getLong(0))
+      }
     }
-  }
 
   /** Stateful dedup bounded by the watermark (SURVEY §2.10). */
   def dedupWithinWatermark(events: DataFrame): DataFrame =

@@ -1145,6 +1145,70 @@ class StreamingSpec extends SparkSpec {
     assert(ex.getMessage.contains("not in the index"))
   }
 
+  test("crash inside the write→commit window: the qs8, qs10, qs19 and " +
+      "qs20 runners restart from the committed store batches to the " +
+      "one-shot answer") {
+    import graft.operators.{Dedup, Quality}
+    val docs = graft.queries.T.t(spark, sf0001, "documents")
+    val delta = docs.where(col("doc_id") >= 400)
+    val corpus = docs.where(col("doc_id") < 400).cache()
+    // (name, run(deltaDir, outDir), one-shot answer over corpus ∪ deltas)
+    val runners: Seq[(String, (String, String) => Unit,
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("qs8", (d, o) => Streams.runEvolvingParagraphDedupStream(spark, d,
+        corpus, 0.8, o, compactEvery = 2),
+        Dedup.paragraphDedup(docs, "doc_id", "text")),
+      ("qs10", (d, o) => Streams.runSubstringDedupStream(spark, d,
+        corpus, o, compactEvery = 2),
+        Dedup.substringDedup(docs, "doc_id", "text")),
+      ("qs19", (d, o) => Streams.runCdcDedupStream(spark, d, corpus, o,
+        compactEvery = 2),
+        Dedup.cdcDedupStats(docs, "doc_id", "text")),
+      ("qs20", (d, o) => Streams.runC4CleanStream(spark, d, corpus, o,
+        compactEvery = 2),
+        Quality.c4Clean(docs, "doc_id", "text")))
+    def crashAndRestart(name: String, run: (String, String) => Unit,
+        oneShotAll: org.apache.spark.sql.DataFrame): Unit = {
+      val base = java.nio.file.Files.createTempDirectory(s"crash_$name")
+      val deltaDir = base.resolve("delta").toString
+      val outDir = base.resolve("out").toString
+      // three slices with distinct mtimes: three batches, in doc_id order
+      for ((lo, hi) <- Seq((Long.MinValue, 470L), (470L, 540L),
+          (540L, Long.MaxValue))) {
+        delta.where(col("doc_id") >= lo && col("doc_id") < hi)
+          .coalesce(1).write.mode("append").parquet(deltaDir)
+        Thread.sleep(20)
+      }
+      run(deltaDir, outDir)
+      // the crash: the last batch's store dir is written, its commit is
+      // lost (the QS34 recipe)
+      val commits = new java.io.File(s"$outDir/_checkpoint/commits")
+      val lastCommit = commits.listFiles.map(_.getName)
+        .filter(_.forall(_.isDigit)).map(_.toLong).max
+      assert(lastCommit == 2L, s"$name: expected three batches")
+      assert(new java.io.File(s"$outDir/store/batch=$lastCommit").exists,
+        s"$name: the last batch's store dir must exist")
+      for (f <- commits.listFiles
+          if f.getName == lastCommit.toString ||
+            f.getName == s".$lastCommit.crc")
+        assert(f.delete())
+      run(deltaDir, outDir)
+      val oneShot = oneShotAll.where(col("doc_id") >= 400)
+      val n = oneShot.columns.length
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.take(n)).toSet
+      assert(rows(spark.read.parquet(s"$outDir/batch=*")) == rows(oneShot),
+        s"$name: restarted output differs from the one-shot answer")
+    }
+    // every runner runs, so one failure does not hide another
+    val failed = runners.flatMap { case (name, run, oneShot) =>
+      scala.util.Try(crashAndRestart(name, run, oneShot)).failed.toOption
+        .map(e => s"$name: $e")
+    }
+    corpus.unpersist()
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
   test("store reconcile REFUSES to wipe durable batches when the " +
       "checkpoint commit log is missing (ADVICE r17: relocated/" +
       "mis-pointed outDir must not read as a fresh start)") {
