@@ -25,8 +25,9 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for t in TABLES:
-        # driver testdata is one file per table; harness-scaled dirs
-        # (tools.RelationalStress) are Spark-written directories
+        # driver testdata is one file per table; the scaled facts the
+        # `relational` leg of graft.tools.ScaleStress writes (under
+        # <its temp dir>/rel_f<f>) are Spark-written directories
         path = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(path):
             path += "/*.parquet"

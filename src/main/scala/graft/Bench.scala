@@ -401,8 +401,8 @@ object Bench {
     // got tight, see bench_sessions/README session_r16_02), is
     // flagged as session-contaminated and re-run ONCE for a tiebreak.
     // Its published trusted value is the MIN across all observations
-    // — the sound estimator under additive noise (the ScaleGate
-    // argument): noise only ever ADDS time, so the fastest
+    // — the sound estimator under additive noise: noise only ever
+    // ADDS time, so the fastest
     // observation is the closest to the true cost.
     val anomalies = {
       var snap = metrics.snapshot()

@@ -60,7 +60,16 @@ object Dedup {
     * geometrically and hang planning around round 25 (observed).
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, pointerJump: Boolean = false): DataFrame = {
+      maxIter: Int = 20, pointerJump: Boolean = false): DataFrame =
+    componentsWithRounds(pairs, aCol, bCol, maxIter, pointerJump)._1
+
+  /** [[connectedComponents]] and the rounds it took to converge — the
+    * O(log n) pointer-jump claim as a number (OperatorsSpec grades its
+    * growth on a doubling chain).
+    */
+  private[graft] def componentsWithRounds(pairs: DataFrame, aCol: String,
+      bCol: String, maxIter: Int, pointerJump: Boolean)
+      : (DataFrame, Int) = {
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .localCheckpoint(true)
@@ -122,16 +131,8 @@ object Dedup {
         s"connectedComponents did not converge in $maxIter rounds " +
           s"($changed labels still improving) — a component with " +
           "diameter > maxIter exists; raise maxIter")
-    lastComponentRounds = i
-    labels.select(col("id"), col("label").as("component"))
+    (labels.select(col("id"), col("label").as("component")), i)
   }
-
-  /** Diagnostic only (SCALE harnesses): rounds the last
-    * [[connectedComponents]] call took to converge — the O(log n)
-    * pointer-jump claim graded as a counter. Driver-side, not
-    * thread-safe; never read by operators.
-    */
-  @volatile private[graft] var lastComponentRounds: Int = 0
 
   /** Cluster-level near-dup dedup: survivors = one representative (the
     * min id) per connected component of the pair graph, plus every
@@ -234,22 +235,6 @@ object Dedup {
         .localCheckpoint(true),
       maxBucket))
 
-  /** Diagnostic for the scale harnesses: total banded candidate-pair
-    * volume Σ m·(m−1)/2 over all (band, key) buckets of the given
-    * banding — the join work the band parameters buy or cost, measured
-    * on the actual corpus (the auto-vs-fixed evidence metric).
-    */
-  private[graft] def minhashCandidateVolume(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, bands: Int, rowsPerBand: Int): Long = {
-    val sh = docs.select(col(idCol).as("__id"),
-      TextFns.wordShingles(col(textCol), shingleN).as("__sh"))
-    minhashBanded(sh, "__id", "__sh", bands, rowsPerBand)
-      .groupBy("__band", "__key").agg(count(lit(1)).as("m"))
-      .agg(coalesce(sum(expr("m * (m - 1) DIV 2")), lit(0L)))
-      .head.getLong(0)
-  }
-
   /** One row per (band index, band-slice bucket key) per document.
     * posexplode_outer: band arrays are fixed-length, never empty, and
     * the outer variant skips the size>0/isnotnull pre-filter that
@@ -301,7 +286,8 @@ object Dedup {
     * ~1.9k CPU-seconds of overhead at 16M banded rows). Hash agg +
     * hash join handle micro-groups at streaming cost.
     */
-  private def capBuckets(banded: DataFrame, maxBucket: Int): DataFrame =
+  private[graft] def capBuckets(banded: DataFrame, maxBucket: Int)
+      : DataFrame =
     if (maxBucket == Int.MaxValue) banded
     else banded.join(
       banded.groupBy("__band", "__key").agg(count(lit(1)).as("__bc"))
@@ -507,8 +493,8 @@ object Dedup {
     * rows on the shingle value. The df-ascending order puts the
     * corpus's RAREST shingles in every prefix, so hot stop-shingles
     * (the xd3 d² blowup) never enter the join; candidate volume is
-    * Σ_w prefix-df(w)² over rare-w only (measured in SCALE_r15: 27
-    * candidates for 25 true pairs at sf0.01; 9× under the
+    * Σ_w prefix-df(w)² over rare-w only (measured: 27 candidates for
+    * 25 true pairs at sf0.01; 9× under the
     * share-any-shingle join at sf0.1, 100× under brute n²/2).
     * Verification is exact Jaccard on candidates only.
     *
@@ -788,10 +774,11 @@ object Dedup {
     * POWER: a shingle that was rare (or absent, df = 0) at prepare
     * but becomes delta-era boilerplate stays in every new document's
     * prefix and generates Σ prefix-df² candidate fanout — the exact
-    * analogue of the stale-centroid hot cell SCALE_r18 leg A
+    * analogue of the stale-centroid hot cell `ScaleStress` leg qs36
     * measures. The refresh ranks it common, it leaves the prefixes,
-    * and pruning is restored (R18Stress leg D counts both sides;
-    * OperatorsSpec gates volume-drop + output-equality).
+    * and pruning is restored (OperatorsSpec's "allpairs re-blocking
+    * epoch" test counts both sides and gates volume-drop,
+    * output-equality and the one-pass epoch cost).
     */
   def reprepareAllPairsIndex(ix: PrefixIndex): PrefixIndex = {
     val sh = ix.sh.localCheckpoint(true)
@@ -911,13 +898,13 @@ object Dedup {
     * corpus (keep n/2^bits bounded) and `bands` re-derived from the
     * recall target: for sign-agreement probability p = 1 − acos(t)/π
     * at threshold t, a pair is missed with (1 − p^bits)^bands.
-    * Measured on the 40k-vector scale corpus (SCALE_r4.json): (96,12)
+    * Measured on the 40k-vector scale corpus (10× sf0.1): (96,12)
     * → 38M candidate-join rows, (128,16) → ~5M, identical output
     * (miss bound 6e-7 per pair at cosine 0.9165). Callers with a known
     * corpus size should prefer [[embeddingNearDupsLSHAuto]], which
     * derives the parameters with [[lshParams]] (the rule as code) —
-    * `graft.tools.LshDiag` measures actual bucket occupancy / pair
-    * volume to validate the choice on a given corpus.
+    * `graft.tools.ScaleStress` leg xd6 grades the resulting pair
+    * volume across a corpus and its 2×.
     */
   def embeddingNearDupsLSH(
       emb: DataFrame, idCol: String, vecCol: String,
@@ -1030,9 +1017,9 @@ object Dedup {
     * the ACTUAL corpus size via [[lshParams]] — the production default
     * for embedding near-dup at any scale. Fixed-width banding is
     * quadratic in n once buckets saturate (measured on the 20×
-    * scale corpus: (96,12) 197s vs auto 57s, identical output —
-    * SCALE_r4_f20.json), so the width must track log2(n). Costs one
-    * count() job up front — metadata-cheap on columnar sources and
+    * scale corpus: (96,12) 197s vs auto 57s, identical output; the
+    * `ScaleStress` xd6 leg grades the volume law), so the width must
+    * track log2(n). Costs one count() job up front — metadata-cheap on columnar sources and
     * amortized over the banded self-join it right-sizes.
     */
   def embeddingNearDupsLSHAuto(
@@ -1156,9 +1143,10 @@ object Dedup {
 
   /** Multi-probe SemDedup: [[semDedupAssigned]] finds a near-dup pair
     * only when both rows share a PRIMARY cell, which at k-means-cell
-    * granularity misses boundary-straddling pairs — SCALE_r6 measured
-    * co-cluster recall at 0.20–0.22, an unusable operating point. Here
-    * each row carries `probes` (its p nearest cells,
+    * granularity misses boundary-straddling pairs — measured co-cluster
+    * recall at 0.20–0.22, an unusable operating point (the
+    * `ScaleStress` xd11 leg gates ≥ 0.9 for this operator). Here each
+    * row carries `probes` (its p nearest cells,
     * [[Similarity.assignCellsTwoLevel]] with probe ≥ 2); a candidate
     * pair is generated when EITHER row's probe list contains the
     * other's primary cell. Probing is candidate generation only: the
@@ -1201,22 +1189,6 @@ object Dedup {
         col("__dup").isNull.as("kept"))
   }
 
-  /** Probe count for [[semDedupMultiProbe]] on a STRUCTURE-FREE
-    * (isotropic) corpus — the worst case for cell blocking. When
-    * embeddings carry no cluster structure, all nCells cell scores are
-    * near-ties, so a near-dup pair's partner cell sits deep in the
-    * probe ranking and the probe count needed for a fixed recall grows
-    * with the cell count: measured p ≈ 2.1·nCells^0.4 for recall 0.9 at
-    * threshold 0.9 (SCALE_r7 fit: 80 cells → 12 probes / 160 → 16, both
-    * landing 0.90–0.91 on the planted corpus). On CLUSTERED corpora —
-    * SemDedup's actual domain — probe=2 with wCoarse=2 already clears
-    * 0.9 (the clustered SCALE leg); this law is the honest upper bound
-    * to fall back on when nothing is known about the embedding space.
-    */
-  def semDedupIsotropicProbes(nCells: Int): Int =
-    math.max(2, math.min(nCells,
-      math.ceil(2.1 * math.pow(nCells.toDouble, 0.4)).toInt))
-
   /** Derive (bands, bitsPerBand) for [[embeddingNearDupsLSH]] from the
     * corpus size and recall target — the measured scaling rule on that
     * method's Scaladoc, as code:
@@ -1241,7 +1213,8 @@ object Dedup {
     * instead — hyperplane LSH is the wrong tool for loose cosine
     * matching at corpus scale.
     *
-    * Reproduces the SCALE_r4 measured point: (40000, 0.9165) → 16-bit
+    * Reproduces the measured 10×-sf0.1 point (OperatorsSpec "lshParams
+    * reproduces the measured scaling points"): (40000, 0.9165) → 16-bit
     * bands, ~7× less candidate-join volume than the (96,12) default at
     * identical output (miss bound ≤1e-6 per pair).
     */
@@ -1285,7 +1258,8 @@ object Dedup {
     * are the true near-dup clusters the operator must keep, unbounded
     * classes are mass boilerplate that collides in EVERY band and
     * whose m² candidate volume is the measured superlinear term
-    * (SCALE_r5_dedup.json: 327s at 10×, all in hot buckets). The cap
+    * (327s at 10× sf0.1, all in hot buckets; the `ScaleStress` xd10
+    * leg grades the capped volume as sub-quadratic). The cap
     * grows with log₂ n so legit clusters sit far below it at any
     * plausible scale, while retained per-band volume is bounded by
     * cap·n — O(n log n) worst case, ~O(n) in practice.
@@ -1404,7 +1378,7 @@ object Dedup {
   /** Per-doc counted-span totals (`n_para`) straight from the text
     * column — a narrow scan, NOT a second explode+aggregate.
     */
-  private def paraCounts(docs: DataFrame, idCol: String,
+  private[graft] def paraCounts(docs: DataFrame, idCol: String,
       textCol: String, splitter: ParagraphSplitter): DataFrame =
     splitter match {
       case ParagraphSplitter.FixedWindow(pw) =>
@@ -1451,9 +1425,9 @@ object Dedup {
     *     threshold (span pairs sit at exactly t by construction), and
     *     the default hot-bucket cap from [[autoMaxBucket]] — identical
     *     shingle-set classes collide in every band, so without the cap
-    *     boilerplate-heavy corpora go superlinear (SCALE_r5_dedup:
-    *     327s at 10× uncapped). Non-recursive by design: p drops iff
-    *     SOME earlier exact-survivor is near-identical, whether or not
+    *     boilerplate-heavy corpora go superlinear (measured 327s at
+    *     10× sf0.1 uncapped; `ScaleStress` leg xd10). Non-recursive
+    *     by design: p drops iff SOME earlier exact-survivor is near-identical, whether or not
     *     that survivor itself drops — deterministic without a
     *     fixpoint, and exactly replayable in SQL.
     *  4. Reassemble: surviving spans re-concatenate in idx order with
@@ -1773,56 +1747,6 @@ object Dedup {
       shingled = ps.shingled.localCheckpoint(true),
       banded = ps.banded.localCheckpoint(true))
 
-  /** Deterministic work counters for the xd10 paragraph-dedup plan
-    * (VERDICT r8 #2 — the xd12/xd11 r8 discipline: quantities the
-    * plan ENUMERATES, replayed from the operator's own
-    * intermediates, graded by [[graft.tools.ScaleGate]] across
-    * factors instead of cpu-seconds). Returns (spanRows, survivors,
-    * bandedRows, candPairs, cap):
-    *
-    *  - spanRows: the explode volume — asserted INSIDE equal to the
-    *    narrow closed form Σ ceil(words/paraWords) (two derivations,
-    *    one number — xd12's occ discipline); linear in corpus words
-    *    by construction;
-    *  - survivors: exact-stage output (the near-stage population);
-    *  - bandedRows: signature rows surviving the auto hot-bucket cap;
-    *  - candPairs: Σ over (band, key) buckets of m·(m−1)/2 — the
-    *    pre-verify candidate volume the capped band self-join
-    *    enumerates, the quantity the cap bounds (each surviving row
-    *    pairs with ≤ cap−1 bucket-mates, also asserted inside).
-    */
-  private[graft] def paragraphDedupWork(docs: DataFrame, idCol: String,
-      textCol: String, paraWords: Int = 6, threshold: Double = 0.8,
-      shingleN: Int = 2, maxBucket: Int = AutoBucket)
-      : (Long, Long, Long, Long, Int) = {
-    val splitter = ParagraphSplitter.FixedWindow(paraWords)
-    val spanRows = explodeSpans(docs, idCol, textCol, splitter).count()
-    val closed = paraCounts(docs, idCol, textCol, splitter)
-      .agg(sum(col("n_para"))).head.getLong(0)
-    require(spanRows == closed,
-      s"span explode $spanRows != closed form $closed")
-    val s1 = paragraphSpanStore(docs, idCol, textCol, splitter)
-    val nearInput = s1.where(col("nw") >= shingleN)
-      .select(col("pid").as("__id"),
-        TextFns.wordShingles(col("ptext"), shingleN).as("__sh"))
-      .localCheckpoint(true)
-    val n = math.max(1L, nearInput.count())
-    val cap = if (maxBucket == AutoBucket) autoMaxBucket(n) else maxBucket
-    val (bands, rows) = minhashParams(n, recallAt = threshold)
-    val banded = capBuckets(
-      minhashBanded(nearInput, "__id", "__sh", bands, rows), cap)
-      .localCheckpoint(true)
-    val bandedRows = banded.count()
-    val candPairs = banded.groupBy("__band", "__key")
-      .agg(count(lit(1)).as("__m"))
-      .agg(sum(col("__m") * (col("__m") - 1))).head.getLong(0) / 2
-    require(cap == Int.MaxValue ||
-      candPairs <= bandedRows * (cap - 1L) / 2,
-      s"cand pairs $candPairs exceed the cap bound " +
-        s"$bandedRows*(${cap}-1)/2")
-    (spanRows, n, bandedRows, candPairs, cap)
-  }
-
   /** Deterministic work counters for one qs8 evolving-store ingest
     * step, with the evolved store for the next step. Returns
     * (storeProbePairs, lawProbePairs, intraBatchPairs, next):
@@ -1963,21 +1887,6 @@ object Dedup {
     (occRows, candRows, dupRows)
   }
 
-  /** Deterministic work counter for [[semDedupMultiProbe]]: the exact
-    * candidate-pair volume its probe×primary SMJ enumerates (join on
-    * the cell, self-pairs excluded, BEFORE the cosine filter) — the
-    * quantity the occupancy law Σ probe-load·cell-load predicts and
-    * the scale gates ratio across factors.
-    */
-  private[graft] def semDedupMultiProbeWork(asg: DataFrame,
-      idCol: String, probesCol: String, primaryCol: String): Long = {
-    val pr = asg.select(col(idCol).as("__wp"),
-      explode(col(probesCol)).as("__cell"))
-    val an = asg.select(col(idCol).as("__wa"),
-      col(primaryCol).as("__cell"))
-    pr.join(an, "__cell").where(col("__wp") =!= col("__wa")).count()
-  }
-
   /** Rolling-key gram occurrences of `d` = (__id, __txt): one row per
     * position — (__id, __pos 1-based, __gk 62-bit key, __key global
     * (doc_id, pos) order as one comparable long). 1e9 bounds positions
@@ -2097,19 +2006,6 @@ object Dedup {
     */
   def compactGramStore(store: GramStore): GramStore =
     store.copy(grams = store.grams.localCheckpoint(true))
-
-  /** The store-size law's exact right-hand side: the one-shot count
-    * of distinct l-gram keys over a corpus. After ANY ingest order /
-    * chunking / tiering, the evolving [[GramStore]] holds exactly
-    * this many rows (min-merge never adds or drops keys) — the SCALE
-    * gram-store leg asserts the identity and publishes the curve
-    * (rows ∝ distinct content chars; duplicate content adds zero).
-    */
-  def gramStoreSizeLaw(corpus: DataFrame, idCol: String,
-      textCol: String, l: Int = 40): Long =
-    gramOcc(corpus.select(col(idCol).cast(LongType).as("__id"),
-        col(textCol).as("__txt")), l)
-      .select("__gk").distinct().count()
 
   /** Tier the gram store to DISK (the qs10 retention story, VERDICT
     * r11 #8): compaction bounds plan depth and REWRITE cost but not

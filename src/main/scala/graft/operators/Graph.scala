@@ -744,13 +744,6 @@ object Graph {
       k += 1
     }
     }
-    lastSsspRounds = k - 1
     dist.select(col("id"), coalesce(col("cost"), lit(-1L)).as("cost"))
   }
-
-  /** Rounds the last [[sssp]] call executed before convergence or the
-    * cap (the scale-gate counter — the Dedup.lastComponentRounds
-    * pattern).
-    */
-  @volatile private[graft] var lastSsspRounds: Int = 0
 }

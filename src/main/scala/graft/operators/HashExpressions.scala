@@ -398,9 +398,9 @@ case class NearestCentroids(child: Expression, ids: Seq[Long],
 /** Two-level (coarse-quantized) nearest-centroid search: the flat
   * [[NearestCentroids]] scan is n·K work per corpus — quadratic when
   * the cell count K grows with the corpus (the SemDedup occupancy law
-  * sets K ∝ n/target; SCALE_r6 measured the flat argmax at 2.36× CPU
-  * for 2× data). Here the K fine centroids are grouped under ~√K
-  * coarse cells; a vector scores the √K coarse centroids, descends
+  * sets K ∝ n/target; the flat argmax measured 2.36× CPU for 2× data
+  * in the xd11 leg of `graft.tools.ScaleStress`). Here the K fine
+  * centroids are grouped under ~√K coarse cells; a vector scores the √K coarse centroids, descends
   * into the `wCoarse` best groups, and scans only their fine members —
   * O(√K·w·load) per row instead of O(K). Same narrow-map shape: the
   * whole two-level table ships as a plan constant (K×dim doubles — a

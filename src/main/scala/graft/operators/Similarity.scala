@@ -215,8 +215,8 @@ object Similarity {
     * never shuffles. (A first cut modeled the argmax as
     * crossJoin+groupBy: that ships n·nlist candidate rows each
     * carrying the full vector through a shuffle, grouped on an ARRAY
-    * key — at nlist ∝ n it is quadratic shuffle volume, and the f20
-    * SelectStress leg measured it as a wall-clock cliff.)
+    * key — at nlist ∝ n it is quadratic shuffle volume, and the xd11
+    * scale leg measured it as a wall-clock cliff at 20×.)
     *
     * Ties go to the smaller `clabel` — the fold scans centroids in
     * ascending clabel order with a strict `>`, matching the oracle's
@@ -263,7 +263,7 @@ object Similarity {
     * (deterministic pseudo-random spread, single pass, no full sort),
     * id-sorted, ragged rows dropped.
     */
-  private def boundedSample(corpus: DataFrame, idCol: String,
+  private[graft] def boundedSample(corpus: DataFrame, idCol: String,
       vecCol: String, cap: Int): Array[(Long, Array[Double])] = {
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -292,51 +292,19 @@ object Similarity {
       .map { case (id, v) => (id, v.toSeq) }.toSeq
   }
 
-  /** Convergence/work record of one [[lloydLocal]] run (VERDICT r11
-    * #9 — the xs10 published-counters discipline applied to xs2's
-    * production trainer): `shifts(i)` = Σ‖c_new − c_old‖₂ over
-    * centroids surviving iteration i, `nonEmpty(i)` = cells with ≥1
-    * assigned sample vector. `sampleSize` is the BOUNDED work unit —
-    * capped at max(128·nlist, 2048) regardless of corpus size, which
-    * is the whole 100 TB story: training cost is a constant, not a
-    * corpus scan (the one corpus job is the TakeOrdered sample).
-    */
-  final case class LloydDiag(sampleSize: Int, dim: Int, nlist: Int,
-      itersRun: Int, converged: Boolean, shifts: Seq[Double],
-      nonEmpty: Seq[Int])
-
-  /** [[kmeansCentroidsSeq]] with the convergence record published. */
-  def kmeansCentroidsDiag(corpus: DataFrame, idCol: String,
-      vecCol: String, nlist: Int, iters: Int = 3)
-      : (Seq[(Long, Seq[Double])], LloydDiag) = {
-    val sample = boundedSample(corpus, idCol, vecCol,
-      math.max(128 * nlist, 2048))
-    if (sample.isEmpty)
-      return (Seq.empty, LloydDiag(0, 0, nlist, 0, true, Nil, Nil))
-    val diag = new scala.collection.mutable.ArrayBuffer[(Double, Int)]
-    val cents = lloydLocal(sample, sample.head._2.length, nlist, iters,
-      diagOut = diag)
-    (cents.map { case (id, v) => (id, v.toSeq) }.toSeq,
-      LloydDiag(sample.length, sample.head._2.length, nlist,
-        diag.length, diag.length < iters || diag.lastOption.exists(_._1 == 0.0),
-        diag.map(_._1).toSeq, diag.map(_._2).toSeq))
-  }
-
   /** The deterministic Lloyd refinement itself, over an in-memory
     * sample (see [[kmeansCentroids]] for the contract). Also reused by
     * [[coarsenCentroids]], where the "sample" is the fine centroid
     * table — a second-level k-means over k-means cells.
     */
   private def lloydLocal(sample: Array[(Long, Array[Double])], dim: Int,
-      nlist: Int, iters: Int,
-      euclid: Boolean = false,
-      diagOut: scala.collection.mutable.ArrayBuffer[(Double, Int)] = null)
+      nlist: Int, iters: Int, euclid: Boolean = false)
       : Array[(Long, Array[Double])] =
     // init = lowest-id sample vectors, cell id = position (0..nlist-1)
     lloydIterate(sample,
       sample.take(nlist).zipWithIndex.map { case ((_, v), i) =>
         (i.toLong, v.clone())
-      }, dim, iters, euclid, diagOut)
+      }, dim, iters, euclid)
 
   /** The Lloyd refinement loop over EXPLICIT initial centroids — the
     * body [[lloydLocal]] always ran, factored out so the load-aware
@@ -345,9 +313,7 @@ object Similarity {
     */
   private def lloydIterate(sample: Array[(Long, Array[Double])],
       init: Array[(Long, Array[Double])], dim: Int, iters: Int,
-      euclid: Boolean = false,
-      diagOut: scala.collection.mutable.ArrayBuffer[(Double, Int)] = null)
-      : Array[(Long, Array[Double])] = {
+      euclid: Boolean = false): Array[(Long, Array[Double])] = {
     var cents: Array[(Long, Array[Double])] = init
     def norm(v: Array[Double]): Double = {
       var s = 0.0; var i = 0
@@ -393,20 +359,6 @@ object Similarity {
           while (j < dim) { m(j) = sums(ci)(j) / counts(ci); j += 1 }
           (cents(ci)._1, m)
         }.toArray
-      if (diagOut != null) {
-        // Σ L2 shift over centroids surviving this iteration + the
-        // non-empty cell count — the published convergence curve
-        val oldById = cents.toMap
-        var shift = 0.0
-        next.foreach { case (id, nv) =>
-          oldById.get(id).foreach { ov =>
-            var s = 0.0; var j = 0
-            while (j < dim) { val t = nv(j) - ov(j); s += t * t; j += 1 }
-            shift += math.sqrt(s)
-          }
-        }
-        diagOut += ((shift, next.length))
-      }
       moved = !(next.length == cents.length &&
         next.indices.forall(i => next(i)._1 == cents(i)._1 &&
           java.util.Arrays.equals(next(i)._2, cents(i)._2)))
@@ -532,9 +484,9 @@ object Similarity {
     * .embeddingNearDups]] argument): this is the small-corpus /
     * gated-entry construction. At 100 TB, build the edge list with a
     * blocked method instead — [[ivfSeededGraph]] (cell-blocked
-    * candidates, MEASURED linear-in-n at nlist ∝ n: the SCALE_r17
-    * construction law, recall-gated through the same traversal in
-    * OperatorsSpec) or [[knnGraph]] (LSH-thresholded — right when a
+    * candidates, MEASURED linear-in-n at nlist ∝ n: the construction
+    * law of `graft.tools.ScaleStress` leg xs17, recall-gated through
+    * the same traversal in OperatorsSpec) or [[knnGraph]] (LSH-thresholded — right when a
     * similarity floor exists, e.g. near-dup graphs; unnavigable on a
     * corpus whose true neighbors sit below LSH's usable threshold) —
     * and feed it to the SAME [[beamSearchTopK]] traversal, which is
@@ -561,7 +513,8 @@ object Similarity {
     * (qid, id, sim, rank) — the [[beamSearchTopK]] traversal is
     * construction-agnostic, and OperatorsSpec recall-gates the
     * composition (blocked graph + [[cellMedoids]] entry tier) ≥ 0.9
-    * against brute force; SCALE_r17 measures the candidate-volume law.
+    * against brute force; `ScaleStress` leg xs17 grades the
+    * candidate-volume law.
     *
     * Approximate in the usual blocked sense: a true neighbor outside
     * every shared probe cell is missed; recall restores through probe
@@ -844,8 +797,8 @@ object Similarity {
     * survives (drifted cluster-mates still share their nearest stale
     * cell), the COST law does not — per-cell load balloons and the
     * candidate volume Σ_c load₁(c)·load_p(c) with it (OperatorsSpec
-    * measures exactly this on a planted drifted corpus; SCALE_r18
-    * carries the law at two sizes).
+    * measures exactly this on a planted drifted corpus; `ScaleStress`
+    * leg qs36 carries the law at two sizes).
     *
     * The epoch is ONE blocked rebuild over the accumulated store
     * under the new centroids: reassign every stored vector (narrow
@@ -1129,8 +1082,8 @@ object Similarity {
     * and SQL-replayable by unrolled CTEs (the xs15b twin).
     *
     * Scale shape: state per query is the visited set — bounded by
-    * entries + rounds·ef·maxdeg, CORPUS-INDEPENDENT (the SCALE_r16
-    * touched-node law; brute force pays |corpus| per query). Each
+    * entries + rounds·ef·maxdeg, CORPUS-INDEPENDENT (the touched-node
+    * law of `ScaleStress` leg xs15; brute force pays |corpus| per query). Each
     * round is one bounded top-ef aggregate, one edge equi-join, one
     * anti-join, one narrow sim map — queries ride one shuffle key
     * (qid / node id), never a cartesian. localCheckpoint + freshStats
@@ -1158,7 +1111,7 @@ object Similarity {
     * hierarchical half of the HNSW analogy (xs18): the upper-layer
     * search is itself a tiny exact top-k, and per-query seed count
     * drops from nlist to seedM, shrinking the visited set the
-    * SCALE_r16 law bounds. Both shapes share every downstream round.
+    * xs15 touched-node law bounds. Both shapes share every downstream round.
     */
   def beamSearchVisitedSeeded(corpus: DataFrame, queries: DataFrame,
       edges: DataFrame, idCol: String, vecCol: String,
@@ -1187,10 +1140,10 @@ object Similarity {
     var visited = (if (seedM <= 0) layer
       else rankTopK(layer, seedM).select("qid", "id", "sim"))
       .localCheckpoint(true)
-    // per-round SCORING-EVENT counter (SCALE_r17's navigation-cost
-    // leg): the seed entry records every row the seed phase scored —
-    // the full |queries|×|entryIds| layer, INCLUDING (when seedM > 0)
-    // medoids the top-seedM cut then drops (ADVICE r17: counting only
+    // per-round SCORING-EVENT counter (`ScaleStress` leg xs16, the
+    // navigation-cost law): the seed entry records every row the seed
+    // phase scored — the full |queries|×|entryIds| layer, INCLUDING
+    // (when seedM > 0) medoids the top-seedM cut then drops (ADVICE r17: counting only
     // the kept seeds under-reported hierarchical navigation cost; an
     // unkept medoid re-reached via an edge is genuinely scored a
     // second time and lands in that round's frontier count). Counts
@@ -1386,7 +1339,7 @@ object Similarity {
         c.where(col("id").isin(entryIds: _*)).select(col("id"))))
       .localCheckpoint(true)
     // per-round Hamming-comparison counter — the beamSearchVisited
-    // counter's integer-navigation twin (SCALE_r17)
+    // counter's integer-navigation twin (`ScaleStress` leg xs16)
     if (diagOut != null) diagOut += visited.count()
     var r = 0
     var grew = true
@@ -1427,7 +1380,7 @@ object Similarity {
     * integer compares on scores the traversal ALREADY computed — and
     * pay exact cosine only there, so dot-product count drops from
     * |visited| to |queries|·shortlist. That is the measured
-    * navigation-cost story in SCALE_r17: popcounts navigate, a
+    * navigation-cost law of `ScaleStress` leg xs16: popcounts navigate, a
     * parameter-bounded shortlist pays the dim-length dots.
     */
   def beamSearchTopKBQ(corpus: DataFrame, queries: DataFrame,
@@ -1526,7 +1479,7 @@ object Similarity {
     * sample; cell assignment + residual + encode are narrow maps (the
     * centroid matrix and codebooks are plan literals); the candidate
     * join touches Σ load(probed cells) ≈ (nprobe/nlist)·n rows — the
-    * SelectStress leg asserts candidate volume == that sum exactly —
+    * OperatorsSpec's xs10 test grades that volume's probe-proportionality —
     * carrying m ints per row, not dim doubles; ranking is the bounded
     * top-k aggregate; the exact rerank reads |queries|·shortlist full
     * vectors through a broadcast join. No corpus-sized shuffle

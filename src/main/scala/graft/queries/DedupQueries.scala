@@ -56,11 +56,11 @@ object DedupQueries {
 
   /** Corpus with PLANTED embedding near-dups (original ∪ +0.05-shifted
     * copies; see the xd6 Scaladoc for the cosine bound) — shared by
-    * the xd6 pair query, the xd9 component query, and the scale
-    * harnesses (ScaleStress/LshDiag). THE single definition of the
-    * planted construction: the +100000 id offset and +0.05 shift here
-    * must mirror [[embeddingPairsOracleSql]], and the SCALE_r4
-    * evidence is only valid while harness and oracle agree.
+    * the xd6 pair query, the xd9 component query, and the scale runner
+    * (`graft.tools.ScaleStress` legs xd6/xd11/xd14). THE single
+    * definition of the planted construction: the +100000 id offset and
+    * +0.05 shift here must mirror [[embeddingPairsOracleSql]], and the
+    * runner's laws are only evidence while runner and oracle agree.
     */
   def plantedEmbeddingCorpus(emb: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -69,6 +69,83 @@ object DedupQueries {
     base.select(col("vec_id").as("id"), col("v"))
       .unionAll(base.select((col("vec_id") + 100000).as("id"),
         transform(col("v"), x => x + lit(0.05d)).as("v")))
+  }
+
+  /** DRIFTED embedding corpus — the re-blocking epoch's premise
+    * ([[graft.operators.Similarity.reblockGraphStore]]): the INITIAL
+    * region reuses the clustered recipe (each base vector a cluster
+    * center, `mInit` members at center + 0.25·perm — real embedding
+    * spaces cluster), while the DELTA region's `deltaCids` clusters
+    * all concentrate around ONE direction u = the lowest-id base
+    * vector (center_c = u + 0.35·perm(base_c), members at center +
+    * 0.25·perm) — a genuinely NEW region the initial corpus never
+    * saw, tight enough that under centroids trained on the initial
+    * region alone the whole delta region lands in its few nearest
+    * stale cells (per-cell load balloons — the measured refresh-cost
+    * law) while within-cluster cosine ≈ 0.95 still dominates
+    * in-region cross-cluster ≈ 0.84, so true top-k stays the cluster
+    * mates. Geometry margins: members are u + 0.35·p_c + 0.25·q_m
+    * with u, p, q norm-equal and quasi-orthogonal → within-cluster
+    * cos ≈ 1.1225/1.185 ≈ 0.947, in-region cross ≈ 1/1.185 ≈ 0.844,
+    * initial-vs-delta ≈ 0.3 of that. Ids INTERLEAVE per base cid
+    * (block of mInit initial then mDelta delta members) so
+    * bounded-sample trainers that seed from low ids see both regions
+    * after accumulation — the property that lets a refresh actually
+    * split the new region into multiple cells.
+    *
+    * Columns: (vec_id, embedding float[], label, is_delta). Initial =
+    * `is_delta = false`; the drift delta = `is_delta = true`.
+    */
+  def driftedEmbeddings(spark: org.apache.spark.sql.SparkSession,
+      baseDir: String, outDir: String, mInit: Int, mDelta: Int,
+      deltaCids: Int): Long = {
+    import spark.implicits._
+    val base = spark.read.parquet(s"$baseDir/embeddings.parquet")
+    val u = base.orderBy("vec_id").limit(1)
+      .select("embedding").head.getSeq[Float](0).toArray
+    val block = mInit + mDelta
+    val maxId = base.agg(max(col("vec_id"))).head.getLong(0)
+    require((maxId + 1) * block < 1000000L,
+      s"drifted ids would overflow the offset space: " +
+        s"($maxId+1)*$block")
+    val uB = spark.sparkContext.broadcast(u)
+    spark.range(block).crossJoin(base)
+      .select(col("id").as("j"), col("vec_id"), col("embedding"))
+      .as[(Long, Long, Seq[Float])]
+      .flatMap { case (j, cid, v) =>
+        val id = cid * block + j
+        if (j < mInit) {
+          val q = shuffled(v.toArray, id)
+          val m = v.toArray.zip(q).map { case (x, y) => x + 0.25f * y }
+          Some((id, m.toSeq, 0, false))
+        } else if (cid < deltaCids) {
+          val p = shuffled(v.toArray, cid * 7 + 3)
+          val q = shuffled(v.toArray, id)
+          val m = uB.value.lazyZip(p).lazyZip(q)
+            .map((a, b, c) => a + 0.35f * b + 0.25f * c)
+          Some((id, m.toSeq, 1, true))
+        } else None
+      }
+      .toDF("vec_id", "embedding", "label", "is_delta")
+      .write.mode("overwrite")
+      .parquet(s"$outDir/embeddings_drifted.parquet")
+    spark.read.parquet(s"$outDir/embeddings_drifted.parquet").count()
+  }
+
+  /** Fisher–Yates shuffle of a copy of `xs`, deterministic per seed —
+    * the permutation of every synthetic corpus recipe here and in the
+    * scale runner (`graft.tools.ScaleStress`).
+    */
+  private[graft] def shuffled[T](xs: Array[T], seed: Long): Array[T] = {
+    val a = xs.clone()
+    val r = new java.util.Random(seed)
+    var i = a.length - 1
+    while (i > 0) {
+      val j = r.nextInt(i + 1)
+      val tmp = a(i); a(i) = a(j); a(j) = tmp
+      i -= 1
+    }
+    a
   }
 
   private def plantedCorpus(s: org.apache.spark.sql.SparkSession,
@@ -187,7 +264,8 @@ object DedupQueries {
     // hash match proves the LSH blocking loses nothing. The band
     // parameters are DERIVED from the actual corpus size (lshParams) —
     // fixed-width banding goes quadratic once buckets saturate
-    // (SCALE_r4_f20.json: 197s fixed vs 57s auto, identical rows).
+    // (197s fixed vs 57s auto at 20× sf0.1, identical rows; the
+    // `ScaleStress` xd6 leg grades the volume law).
     Q("xd6_embedding_lsh", embeddingPairsOracleSql()) { (s, d) =>
       Dedup.embeddingNearDupsLSHAuto(plantedCorpus(s, d), "id", "v",
           threshold = 0.9)

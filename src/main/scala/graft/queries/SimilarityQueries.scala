@@ -359,7 +359,7 @@ object SimilarityQueries {
     // residuals, decimal-mean codebooks, argmin encode, per-probed-
     // cell LUTs, fixed-order ADC, shortlist, exact-cosine rerank.
     // The Lloyd-trained production config stays recall-gated ≥0.9 in
-    // OperatorsSpec and probe-proportional in the SelectStress leg.
+    // OperatorsSpec, which also grades its probe-proportional volume.
     Q("xs10_ivfpq_ann", ivfPqOracleSql(nQ = 10, nprobe = 3,
       shortlist = 30, k = 3)) { (s, d) =>
       val (cents, books) = xs10PrepModel(s, d)
@@ -541,8 +541,8 @@ object SimilarityQueries {
     // design → rows-only here; recall ≥0.9 vs bruteForceTopK is
     // OperatorsSpec-gated (the xs2 discipline), the traversal itself
     // hash-gates through the pinned twin xs15b (the xs2b discipline),
-    // and SCALE_r16 carries the touched-node law (visited set bounded
-    // by entries + rounds·ef·deg, corpus-independent — brute force
+    // and `ScaleStress` leg xs15 carries the touched-node law (visited
+    // set bounded by entries + rounds·ef·deg, corpus-independent — brute force
     // pays |corpus| per query).
     Q.noOracle("xs15_ann_beam") { (s, d) =>
       val corpus = DedupQueries
@@ -608,8 +608,8 @@ object SimilarityQueries {
     // (beyond the r17 spec gate): label-centroid cells (the xs2b
     // SQL-replayable quantizer) → probe-2 assignment → ivfSeededGraph
     // edges (candidates only from shared cells — the linear-law
-    // construction SCALE_r17 measures; never all-pairs) → cellMedoids
-    // entry points (one per cell, the two-layer HNSW shape) → the
+    // construction `ScaleStress` leg xs17 grades; never all-pairs) →
+    // cellMedoids entry points (one per cell, the two-layer HNSW shape) → the
     // xs15 traversal → exact top-3. Every stage is deterministic SQL
     // arithmetic, so the oracle replays the ENTIRE production stack:
     // a blocked build feeding the construction-agnostic beam search.

@@ -593,8 +593,8 @@ object StreamBatchQueries {
     },
 
     // qs40: qs32 with a RE-BLOCKING EPOCH — the vector store's
-    // centroid-refresh discipline (reblockGraphStore / SCALE_r18 leg
-    // A) applied to the prefix index: after chunk 0 the index
+    // centroid-refresh discipline (reblockGraphStore / `ScaleStress`
+    // leg qs36) applied to the prefix index: after chunk 0 the index
     // re-prepares under FRESH document frequencies over everything
     // accumulated so far (one blocked rebuild — df recount +
     // per-doc prefix re-derivation, never store²). The oracle is
@@ -606,8 +606,8 @@ object StreamBatchQueries {
     // delta-era boilerplate shingle frozen at df=0 sits in every new
     // doc's prefix (Σ prefix-df² fanout, the stale-hot-cell
     // analogue); refreshed df ranks it common and it leaves the
-    // prefixes — the volume law R18Stress leg D measures and
-    // OperatorsSpec gates.
+    // prefixes — the volume law OperatorsSpec's "allpairs re-blocking
+    // epoch" test counts and gates.
     Q("qs40_stream_allpairs_reprepare",
       DedupQueries.jaccardOracleSql(0.5,
         pairCond = "x.doc_id < y.doc_id AND y.doc_id >= 250")) {

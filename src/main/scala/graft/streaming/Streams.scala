@@ -857,8 +857,8 @@ object Streams {
     * any crash/restart boundary (a restart replays committed
     * shingles under the prepare-era order and loses nothing but
     * pruning power until the next epoch). Crash-consistency for this
-    * epoch is therefore free; it buys only cost, which SCALE_r18
-    * leg D measures.
+    * epoch is therefore free; it buys only cost, which OperatorsSpec's
+    * "allpairs re-blocking epoch" test counts.
     */
   def runAllPairsStream(spark: SparkSession, deltaDir: String,
       corpus: DataFrame, threshold: Double, outDir: String,
@@ -909,8 +909,8 @@ object Streams {
     * strongest one available: the oracle is qs32's EXACT brute-force
     * replay, UNCHANGED — df is a pruning model, so an epoch placed
     * anywhere must leave every emitted pair identical; what it buys
-    * is candidate volume under drift (R18Stress leg D measures it,
-    * OperatorsSpec gates it).
+    * is candidate volume under drift (OperatorsSpec's "allpairs
+    * re-blocking epoch" test counts and gates it).
     */
   def allPairsReprepareChunked(newDocs: DataFrame, corpus: DataFrame,
       bounds: Seq[Long], reprepareAfter: Set[Int],

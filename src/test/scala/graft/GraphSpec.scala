@@ -132,6 +132,52 @@ class GraphSpec extends SparkSpec {
     assert(r4.getLong(2) == 45L && r4.getLong(3) == 0L, s"star: $r4")
   }
 
+  test("hub + ring at 20k nodes: degree orientation suppresses the " +
+      "hub's wedges 1000x, and every interior ring edge closes one " +
+      "triangle") {
+    // hub 0 touches every node, plus the ring i -> i+1: raw wedge volume
+    // sum deg(deg-1)/2 is the hub's (n-1)(n-2)/2; oriented (out-degree)
+    // volume stays ~1 per node because every edge orients into the hub
+    val n = 20000L
+    val nodes = spark.range(n)
+    val edges = nodes.where(col("id") > 0)
+      .select(lit(0L).as("src"), col("id").as("dst"))
+      .unionAll(nodes.select(col("id").as("src"),
+        pmod(col("id") + 1, lit(n)).as("dst")))
+    val und = edges.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .where(col("a") =!= col("b")).distinct().localCheckpoint(true)
+    val deg = und.select(col("a").as("id")).unionAll(und.select(col("b")))
+      .groupBy("id").agg(count(lit(1)).as("deg"))
+    def wedges(d: org.apache.spark.sql.DataFrame, c: String) =
+      d.agg(sum((col(c) * (col(c) - 1) / 2).cast("long"))).head.getLong(0)
+    val raw = wedges(deg, "deg")
+    val oriented = wedges(und
+      .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
+      .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
+      .select(when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
+        col("a")).otherwise(col("b")).as("u"))
+      .groupBy("u").agg(count(lit(1)).as("od")), "od")
+    assert(oriented * 1000 < raw, s"oriented $oriented vs raw $raw")
+    // the two ring edges touching the hub duplicate hub edges: n - 2
+    assert(Graph.triangles(edges).head.getLong(3) == n - 2)
+  }
+
+  test("lineage stays flat: the executed plan does not grow with the " +
+      "iteration count (pageRank 10 vs 2, hyperBall 4 vs 2 rounds)") {
+    def planLen(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.length
+    val pr10 = planLen(Graph.pageRank(toyNodes, toyEdges, iters = 10))
+    val pr2 = planLen(Graph.pageRank(toyNodes, toyEdges, iters = 2))
+    assert(pr10 <= (pr2 * 1.5).toInt, s"pageRank plan $pr2 -> $pr10")
+    import spark.implicits._
+    val nodes = (1L to 8L).toDF("id")
+    val chain = (1L to 7L).map(i => (i, i + 1)).toDF("src", "dst")
+    val hb4 = planLen(Graph.hyperBall(nodes, chain, iters = 4))
+    val hb2 = planLen(Graph.hyperBall(nodes, chain, iters = 2))
+    assert(hb4 <= (hb2 * 1.5).toInt, s"hyperBall plan $hb2 -> $hb4")
+  }
+
   test("output is partitioning-invariant (exact Long sums)") {
     val base = Graph.pageRank(toyNodes, toyEdges, iters = 10)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq

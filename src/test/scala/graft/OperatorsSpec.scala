@@ -489,6 +489,11 @@ class OperatorsSpec extends SparkSpec {
         s"refreshed-only ${oRef -- oStale}")
     assert(oRef.map(p => (p._1, p._2)) == Set((400L, 401L)),
       s"batch-2 planted pair wrong: $oRef")
+    // the epoch is one linear pass: its re-derived prefixes are exactly
+    // the one-shot prepare's over the same stored docs
+    assert(refreshed.pref.count() == Dedup.prepareAllPairsIndex(
+      corpus.unionByName(b1), "doc_id", "text", 0.5, shingleN = 1)
+      .pref.count())
   }
 
   test("minhash signature estimates Jaccard") {
@@ -578,7 +583,8 @@ class OperatorsSpec extends SparkSpec {
     // the traversal must WORK like a traversal: the visited set per
     // query stays a bounded fraction of the corpus (brute force pays
     // |corpus| per query — prototyped ~22% here, ~9% at sf0.1: the
-    // touched fraction FALLS as the corpus grows, the SCALE_r16 law)
+    // touched fraction FALLS as the corpus grows, the touched-node law
+    // `graft.tools.ScaleStress` leg xs15 grades)
     val touchedMax = visited.groupBy("qid").count()
       .agg(org.apache.spark.sql.functions.max("count")).head.getLong(0)
     assert(touchedMax < n / 2,
@@ -878,7 +884,7 @@ class OperatorsSpec extends SparkSpec {
       "re-balances it and keeps recall") {
     val scratch = java.nio.file.Files
       .createTempDirectory("reblock_drift").toString
-    graft.tools.StressUtil.driftedEmbeddings(spark, sf0001, scratch,
+    graft.queries.DedupQueries.driftedEmbeddings(spark, sf0001, scratch,
       mInit = 2, mDelta = 4, deltaCids = 250)
     val all = spark.read
       .parquet(s"$scratch/embeddings_drifted.parquet")
@@ -1047,7 +1053,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("lshParams reproduces the measured scaling points and holds " +
       "the miss bound") {
-    // the SCALE_r4 measured point: 40k vectors at cosine 0.9165 →
+    // the measured 10×-sf0.1 point: 40k vectors at cosine 0.9165 →
     // 16-bit bands, ~124 of them (doc: 128 gives 6e-7; smallest B
     // under 1e-6 is a few fewer)
     val (b40k, bits40k) = Dedup.lshParams(40000, 0.9165)
@@ -1091,8 +1097,8 @@ class OperatorsSpec extends SparkSpec {
     // bands · C(n,2) / 2^bits under uniform bucket occupancy; on an
     // isotropic Gaussian corpus hyperplane bits are balanced coin
     // flips, so the measured volume must sit near the prediction —
-    // this is the spec-scale anchor of the SCALE_r5 curve point
-    // (LshScale validates the same quantity at 200k vectors).
+    // this is the spec-scale anchor of the volume law the xd6 leg of
+    // `graft.tools.ScaleStress` grades across a corpus and its 2×.
     import spark.implicits._
     val n = 4096
     val rnd = new java.util.Random(77L)
@@ -1352,7 +1358,8 @@ class OperatorsSpec extends SparkSpec {
       df.collect().map(_.toSeq).toList
     // the auto cap must never engage on a healthy corpus — default ==
     // explicitly-uncapped on the real spec corpus (this plus the
-    // SCALE_r6 capped-vs-uncapped delta is the oracle-exactness story)
+    // capped volume law of the `ScaleStress` xd10 leg is the
+    // oracle-exactness story)
     assert(rows(Dedup.paragraphDedup(docs, "doc_id", "text")) ==
       rows(Dedup.paragraphDedup(docs, "doc_id", "text",
         maxBucket = Int.MaxValue)))
@@ -2904,5 +2911,214 @@ class OperatorsSpec extends SparkSpec {
     assert(got(5L) == ((1, 1, 0, 0, "<EMAIL> then <UUID>")))
     assert(got(6L) == ((0, 0, 0, 0,
       "no pii here, just 42 plain words and v1.2 notation")))
+  }
+
+  test("sorted-neighborhood on one global hot key: window-bounded pair " +
+      "volume n(w-1) - (w-1)w/2, one survivor, and pointer-jump rounds " +
+      "grow by <= 3 when n doubles") {
+    // hash blocking would enumerate ~n^2/2 pairs here; the pair graph
+    // is one n-node chain that plain propagation needs ~n/(w-1) rounds for
+    val w = 8
+    def hot(n: Long) = spark.range(n).select(col("id").as("doc_id"),
+      lit("the exact same document text repeated on every row").as("text"))
+    val legs = Seq(500L, 1000L).map { n =>
+      val pairs = Dedup.sortedNeighborPairs(hot(n), "doc_id", "text",
+        window = w).localCheckpoint(true)
+      val np = pairs.count()
+      assert(np == n * (w - 1) - (w - 1).toLong * w / 2, s"n=$n: $np pairs")
+      val kept = Dedup.sortedNeighborDedup(hot(n), "doc_id", "text",
+        window = w).where(col("kept") === 1).count()
+      assert(kept == 1L, s"n=$n: all-identical corpus kept $kept")
+      (np, Dedup.componentsWithRounds(pairs, "a", "b", 30,
+        pointerJump = true)._2)
+    }
+    val ratio = legs(1)._1.toDouble / legs(0)._1
+    assert(ratio > 1.99 && ratio < 2.01, s"pair volume ratio $ratio")
+    assert(legs(1)._2 - legs(0)._2 <= 3,
+      s"rounds ${legs(0)._2} -> ${legs(1)._2}: not logarithmic")
+  }
+
+  test("allpairs ppjoin where every doc shares a boilerplate tail: " +
+      "output == the planted pairs, and candidates grow ~2x per " +
+      "doubling (share-any would grow 4x)") {
+    // 8 hash-derived unique words + a 5-word shared tail; docs
+    // id % 10 == 0 get a partner (id + n) differing in one word:
+    // J = 9/15, the only pairs >= 0.5
+    def uw(of: org.apache.spark.sql.Column, tag: String) =
+      concat(lit(tag), Scale.hashBucket16(concat(of.cast("string"),
+        lit(s":$tag"))).cast("string"))
+    def text(of: org.apache.spark.sql.Column, last: String) =
+      concat_ws(" ", (0 until 8).map(j => uw(of, s"t$j")) ++ Seq(
+        concat(lit(last), Scale.hashBucket16(concat(of.cast("string"),
+          lit(":8"))).cast("string")), lit("lorem ipsum dolor sit amet")): _*)
+    val cand = Seq(500L, 1000L).map { n =>
+      val d = spark.range(n)
+        .select(col("id").as("doc_id"), text(col("id"), "t8").as("text"))
+        .unionAll(spark.range(0, n, 10).select((col("id") + n).as("doc_id"),
+          text(col("id"), "x8").as("text")))
+        .localCheckpoint(true)
+      val out = Dedup.allPairsJaccard(d, "doc_id", "text", threshold = 0.5)
+      val planted = spark.range(0, n, 10).select(col("id").as("a"),
+        (col("id") + n).as("b"), lit(9.0 / 15.0).as("j"))
+      assert(out.exceptAll(planted).count() == 0 &&
+        planted.exceptAll(out).count() == 0, s"n=$n: output != planted")
+      Dedup.allPairsCandidates(d.select(col("doc_id").as("__id"),
+        TextFns.wordShingles(col("text"), 3).as("__sh")), 0.5).count()
+    }
+    val ratio = cand(1).toDouble / cand(0)
+    assert(ratio > 1.7 && ratio < 2.5, s"candidate ratio $ratio")
+  }
+
+  test("xe1 ts-bucketed fold with one key owning 90% of 20k events: " +
+      "== the one-shot fold, and the largest per-(key, bucket) array " +
+      "is ~1/16 of the hot key") {
+    val buckets = 16
+    val ev = spark.range(20000).select(col("id").as("event_id"),
+        expr("timestamp_micros(1700000000000000 + id * 1000000)").as("ts"),
+        when(pmod(col("id"), lit(10L)) =!= 0L, lit(7777L))
+          .otherwise(col("id")).as("user_id"),
+        (pmod(Scale.hashBucket16(col("id").cast("string")).cast("long"),
+          lit(10000L)) / lit(100.0)).as("value"))
+      .localCheckpoint(true)
+    val out = Events.ewmaAnomalies(ev, "user_id", "ts", "event_id",
+      "value", tsBuckets = buckets)
+    val one = Events.ewmaAnomalies(ev, "user_id", "ts", "event_id", "value")
+    assert(out.exceptAll(one).count() == 0 && one.exceptAll(out).count() == 0)
+    // the in-task array = the largest (key, ts-bucket) group
+    val mm = ev.agg(min(expr("unix_micros(ts)")),
+      max(expr("unix_micros(ts)"))).head
+    val w = math.max(1L, (mm.getLong(1) - mm.getLong(0)) / buckets + 1L)
+    val maxArray = ev.groupBy(col("user_id"), ((expr("unix_micros(ts)") -
+        lit(mm.getLong(0))) / lit(w)).cast("long"))
+      .count().agg(max("count")).head.getLong(0)
+    val hot = ev.where(col("user_id") === 7777L).count()
+    assert(maxArray <= hot / buckets + hot / 50,
+      s"max task array $maxArray vs hot key $hot / $buckets")
+  }
+
+  test("beyond the broadcast threshold (broadcast off, AQE off) the " +
+      "xd1, xd6 and qs8-ingest candidate joins plan as shuffle joins, " +
+      "never nested-loop or cartesian") {
+    val emb = graft.queries.DedupQueries.plantedEmbeddingCorpus(
+      T.t(spark, sf0001, "embeddings"))
+    val ps = Dedup.prepareParagraphStore(docs.where(col("doc_id") < 400),
+      "doc_id", "text", ParagraphSplitter.FixedWindow(), threshold = 0.8,
+      shingleN = 2, maxBucket = Dedup.AutoBucket)
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.enabled")
+    val prev = keys.map(spark.conf.get)
+    keys.zip(Seq("-1", "false")).foreach { case (k, v) => spark.conf.set(k, v) }
+    val plans = try Seq(
+        Dedup.minhashNearDupsAuto(docs, "doc_id", "text", 0.5),
+        Dedup.embeddingNearDupsLSHAuto(emb, "id", "v", 0.9),
+        Dedup.paragraphDedupIngest(docs.where(col("doc_id") >= 400), ps,
+          "doc_id", "text").cleaned)
+      .map(_.queryExecution.executedPlan.toString)
+    finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
+    plans.foreach(p => assert(!p.contains("CartesianProduct") &&
+      !p.contains("BroadcastNestedLoopJoin"), p))
+  }
+
+  test("xd6/xd9 on the planted corpus: exactly one pair per vector, " +
+      "all planted, and every pair is its own component") {
+    val emb = T.t(spark, sf0001, "embeddings")
+    val n = emb.count()
+    val pairs = Dedup.embeddingNearDupsLSHAuto(graft.queries.DedupQueries
+      .plantedEmbeddingCorpus(emb), "id", "v", threshold = 0.9)
+      .localCheckpoint(true)
+    assert(pairs.count() == n)
+    assert(pairs.where(col("b") === col("a") + 100000).count() == n)
+    val comps = Dedup.connectedComponents(pairs, "a", "b")
+    assert(comps.count() == 2 * n &&
+      comps.select("component").distinct().count() == n)
+  }
+
+  test("xd10 over the corpus plus marked replicas (every 50th doc + one " +
+      "token): no cartesian, kept <= total, and a marked replica keeps " +
+      "at most its altered tail (<= 2 spans)") {
+    val marked = docs.where(col("doc_id") % 50 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat(col("text"), lit(" graftdupmark")).as("text"))
+    val df = Dedup.paragraphDedup(docs.select("doc_id", "text")
+      .unionByName(marked), "doc_id", "text", paraWords = 6,
+      threshold = 0.8, shingleN = 2)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct") &&
+      !plan.contains("BroadcastNestedLoopJoin"), plan)
+    val out = df.localCheckpoint(true)
+    val s = out.agg(sum("n_para"), sum("n_kept")).head
+    assert(s.getLong(1) <= s.getLong(0))
+    assert(out.where(col("doc_id") >= 1000000L && col("n_kept") > 2)
+      .count() == 0)
+  }
+
+  test("xd12 on sf0.001: removed chars == the corpus text-length " +
+      "difference (disjoint islands), and no cartesian product") {
+    val df = Dedup.substringDedup(docs, "doc_id", "text", l = 40)
+    assert(!df.queryExecution.executedPlan.toString
+      .contains("CartesianProduct"))
+    val a = df.agg(sum("n_spans"), sum("removed_chars"),
+      sum(length(col("clean_text")))).head
+    val chars = docs.agg(sum(length(col("text")))).head.getLong(0)
+    assert(a.getLong(0) > 0, "no dup spans at sf0.001: law untested")
+    assert(a.getLong(1) == chars - a.getLong(2))
+  }
+
+  test("xs2 k-means reads a bounded sample (at the cap for a corpus and " +
+      "its 2x), and the centroid shift decays over Lloyd iterations") {
+    import spark.implicits._
+    val cap = math.max(128 * 16, 2048)
+    val rnd = new java.util.Random(5L)
+    val base = Seq.tabulate(cap + 500)(i =>
+      (i.toLong, Seq.fill(16)(rnd.nextGaussian()))).toDF("id", "v")
+    val doubled = base.unionByName(
+      base.select((col("id") + 100000L).as("id"), col("v")))
+    for (c <- Seq(base, doubled))
+      assert(Similarity.boundedSample(c, "id", "v", cap).length == cap)
+    // below the cap the sample is the whole corpus
+    val emb = T.t(spark, sf0001, "embeddings")
+    assert(Similarity.boundedSample(emb, "vec_id", "embedding", cap)
+      .length == emb.count())
+    // shift(i) = sum over surviving centroids of |c_i - c_(i-1)|
+    val cs = (0 to 12).map(i => Similarity.kmeansCentroidsSeq(emb,
+      "vec_id", "embedding", nlist = 16, iters = i).toMap)
+    assert(cs.last.nonEmpty)
+    val shifts = cs.sliding(2).map { case Seq(a, b) =>
+      b.collect { case (id, v) if a.contains(id) =>
+        math.sqrt(v.zip(a(id)).map { case (x, y) => (x - y) * (x - y) }.sum)
+      }.sum
+    }.toSeq
+    assert(shifts.last <= shifts.head, s"shift curve did not decay: $shifts")
+  }
+
+  test("xs10 IVF×PQ at 80 cells: k rows per query, no cartesian, and the " +
+      "probed volume is sub-corpus and probe-proportional (8 vs 4 " +
+      "probes: 1.5x..2.5x)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    val centers = Array.fill(80, 64)(rnd.nextGaussian())
+    val corpus = (for (l <- 0 until 80; i <- 0 until 25) yield
+        (l * 25L + i, centers(l).map(_ + 0.25 * rnd.nextGaussian()).toSeq))
+      .toDF("id", "v").localCheckpoint(true)
+    val n = corpus.count()
+    val queries = corpus.where(col("id") % 25 === 0 && col("id") < 250)
+    val out = Similarity.ivfPqTopK(corpus, queries, "id", "v", k = 10,
+      nlist = 80, nprobe = 4, m = 8, ksub = 16, shortlist = 60)
+    assert(!out.queryExecution.executedPlan.toString
+      .contains("CartesianProduct"))
+    assert(out.count() == 10 * 10)
+    val cents = Similarity.kmeansCentroidsSeq(corpus, "id", "v", 80)
+    val (ids, vs) = (cents.map(_._1), cents.map(_._2))
+    val loads = corpus.withColumn("cell", element_at(
+        HashFns.nearestCentroids(col("v"), ids, vs, 1), 1))
+      .groupBy("cell").count().localCheckpoint(true)
+    def probed(p: Int) = queries.withColumn("cell",
+        explode(HashFns.nearestCentroids(col("v"), ids, vs, p)))
+      .select("cell").join(loads, "cell")
+      .agg(coalesce(sum("count"), lit(0L))).head.getLong(0)
+    val (w4, w8) = (probed(4), probed(8))
+    assert(w4 > 0 && w4 < n, s"probed volume $w4 vs corpus $n")
+    assert(w8.toDouble / w4 >= 1.5 && w8.toDouble / w4 <= 2.5,
+      s"volume(8)/volume(4) = ${w8.toDouble / w4}")
   }
 }

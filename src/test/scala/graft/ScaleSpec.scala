@@ -521,4 +521,35 @@ class ScaleSpec extends SparkSpec {
           s"proportional 1.0 and uniform-target $fu")
     }
   }
+
+  test("selection entries at sf0.001: xt14 keeps an absolute 100-doc " +
+      "budget through broadcast model joins; xt15, xt16 and xs8 are " +
+      "join-free maps; xt17/xt18 never cartesian, xt17 covers >= 95% of " +
+      "docs, xt18 predicts both classes; xk6 conserves tokens") {
+    def q(name: String) = graft.SparkEntry.queries(name)(spark, sf0001)
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
+    val xt14 = q("xt14_dsir")
+    assert(xt14.agg(sum("sel")).head.getLong(0) == 100L)
+    assert(plan(xt14).contains("BroadcastHashJoin"), plan(xt14))
+    for (name <- Seq("xt15_gopher_rules", "xt16_repetition_lines"))
+      assert(!plan(q(name)).contains("Join"), s"$name: ${plan(q(name))}")
+    val xs8 = q("xs8_random_projection")
+    assert(Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+      "CartesianProduct").forall(j => !plan(xs8).contains(j)), plan(xs8))
+    assert(xs8.count() == 16 * T.t(spark, sf0001, "embeddings").count())
+    val nDocs = T.t(spark, sf0001, "documents").count()
+    val xt17 = q("xt17_lm_perplexity")
+    assert(!plan(xt17).contains("CartesianProduct"))
+    assert(xt17.count() >= nDocs * 95 / 100)
+    val xt18 = q("xt18_nb_quality")
+    assert(!plan(xt18).contains("CartesianProduct"))
+    val npos = xt18.agg(sum("pred")).head.getLong(0)
+    assert(npos > 0 && npos < xt18.count(), s"degenerate classifier: $npos")
+    val toks = T.t(spark, sf0001, "documents").select(col("doc_id"),
+      size(graft.functions.TextFns.tokens(col("text"))).as("n_tok"))
+    assert(Scale.packShards(toks, "doc_id", "n_tok", budget = 4096)
+      .agg(sum("n_tok")).head.getLong(0) ==
+      toks.agg(sum("n_tok")).head.getLong(0))
+  }
 }

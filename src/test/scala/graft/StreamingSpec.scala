@@ -1960,4 +1960,59 @@ class StreamingSpec extends SparkSpec {
     corpus.unpersist()
     assert(reversed == oneShot, "reversed-order fold diverged")
   }
+
+  test("QS8 compaction is a physical rewrite: compacting every batch, " +
+      "every 2 or never, over 3 chunks or 1, gives the same cleaned " +
+      "output and the same final store") {
+    import graft.operators.{Dedup, ParagraphSplitter}
+    val docs = graft.queries.T.t(spark, sf0001, "documents")
+    val corpus = docs.where(col("doc_id") < 400)
+    def run(bounds: Seq[Long], compactEvery: Int) = {
+      var ps = Dedup.prepareParagraphStore(corpus, "doc_id", "text",
+        ParagraphSplitter.FixedWindow(), threshold = 0.8, shingleN = 2,
+        maxBucket = Dedup.AutoBucket)
+      val cleaned = ((400L +: bounds) :+ Long.MaxValue).sliding(2)
+        .zipWithIndex.map { case (Seq(lo, hi), i) =>
+          val ing = Dedup.paragraphDedupIngest(docs.where(
+            col("doc_id") >= lo && col("doc_id") < hi), ps, "doc_id", "text")
+          val rows = ing.cleaned
+            .select("doc_id", "clean_text", "n_para", "n_kept").collect()
+            .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+              r.getLong(3))).toSet
+          ps = ing.next
+          if ((i + 1) % compactEvery == 0)
+            ps = Dedup.compactParagraphStore(ps)
+          rows
+        }.reduce(_ ++ _)
+      (cleaned, ps.store.count())
+    }
+    val base = run(Seq(470L, 540L), Int.MaxValue)
+    assert(base._1.nonEmpty)
+    assert(run(Seq(470L, 540L), 1) == base)
+    assert(run(Seq(470L, 540L), 2) == base)
+    assert(run(Seq.empty, 1) == base)
+  }
+
+  test("QS10 gram-store size law: after chunked ingest the store holds " +
+      "exactly the one-shot distinct l-gram keys of corpus and deltas, " +
+      "flat or tiered to parquet after every batch") {
+    import graft.operators.{Dedup, HashFns}
+    val docs = graft.queries.T.t(spark, sf0001, "documents")
+    val dir = java.nio.file.Files.createTempDirectory("qs10law").toString
+    def storeRows(tier: Boolean) = {
+      var gs = Dedup.prepareGramStore(docs.where(col("doc_id") < 400),
+        "doc_id", "text")
+      for (((lo, hi), i) <- Seq((400L, 470L), (470L, 540L),
+          (540L, Long.MaxValue)).zipWithIndex) {
+        gs = Dedup.substringDedupIngest(docs.where(col("doc_id") >= lo &&
+          col("doc_id") < hi), gs, "doc_id", "text").next
+        if (tier) gs = Dedup.tierGramStore(gs, s"$dir/tier_$i")
+      }
+      gs.grams.count()
+    }
+    val law = docs.select(posexplode(HashFns.gramKeys(col("text"), 40)))
+      .select("col").distinct().count()
+    assert(storeRows(tier = false) == law)
+    assert(storeRows(tier = true) == law)
+  }
 }
