@@ -511,7 +511,7 @@ object Dedup {
       .localCheckpoint(true)
     val cand = allPairsCandidates(shArr, threshold)
     val (tNum, tDen) = ppjoinRational(threshold)
-    ppjoinVerify(cand, shArr, shArr, tNum, tDen)
+    ppjoinVerify(cand, shArr, shArr, tNum, tDen, batchBounded = false)
   }
 
   /** The xd19 candidate stage (prefix + length + positional filters)
@@ -568,7 +568,7 @@ object Dedup {
     val cand = ppjoinCandidateJoin(
       ppjoinPrefixes(exC, dfreq, tNum, tDen),
       ppjoinPrefixes(exN, dfreq, tNum, tDen), tNum, tDen)
-    ppjoinVerify(cand, shC, shN, tNum, tDen)
+    ppjoinVerify(cand, shC, shN, tNum, tDen, batchBounded = true)
   }
 
   /** Exact-Jaccard verification of candidate (a, b) pairs via the
@@ -589,21 +589,28 @@ object Dedup {
     * rounds UP to the grid — making the output depend on which stage
     * saw a boundary pair first, and silently breaking the
     * equals-brute-force contract for off-grid thresholds.
+    *
+    * `batchBounded`: every candidate pairs with a batch-sized `shB`
+    * (a delta against a store), so the candidate a-ids are bounded by
+    * the batch and their semi-join broadcasts. On the full all-pairs
+    * path they grow with the corpus, and Spark picks the join by size.
     */
   private def ppjoinVerify(cand0: DataFrame, shA: DataFrame,
-      shB: DataFrame, tNum: Long, tDen: Long): DataFrame = {
+      shB: DataFrame, tNum: Long, tDen: Long,
+      batchBounded: Boolean): DataFrame = {
     // Candidate-proportional verify (guide §2.3 — filter before the
     // explode): the a-side store grows with the corpus, and exploding
     // ALL of it per verify made the stage store-proportional — at
     // 100 TB every ingested batch would re-scan-and-explode the whole
     // accumulated shingle store. The candidate a-ids are bounded by
     // the candidate join's output (the prefix filter's whole point),
-    // so a broadcast SEMI join cuts the explode to candidate docs
-    // only. `cand0` materializes once (it is read twice: ids + join);
-    // the b side is the batch — already delta-sized, left as is.
+    // so a SEMI join cuts the explode to candidate docs only.
+    // `cand0` materializes once (it is read twice: ids + join); the
+    // b side is left as is.
     val cand = cand0.localCheckpoint(true)
-    val aIds = broadcast(cand.select(col("a").as("__id")).distinct())
-    val shAc = shA.join(aIds, Seq("__id"), "left_semi")
+    val aIds = cand.select(col("a").as("__id")).distinct()
+    val shAc = shA.join(if (batchBounded) broadcast(aIds) else aIds,
+      Seq("__id"), "left_semi")
     def ex(sh: DataFrame, id: String) =
       sh.select(col("__id").as(id), explode(col("__sh")).as("__s"))
     def sizes(sh: DataFrame, id: String, n: String) =
@@ -703,9 +710,6 @@ object Dedup {
     PrefixIndex(dfreq, pref, shC, tNum, tDen, shingleN)
   }
 
-  final case class AllPairsIngest(result: DataFrame,
-      appended: DataFrame, next: PrefixIndex)
-
   /** One ingested batch of the AllPairs stream: all pairs (a, b) with
     * J ≥ t, b in THIS batch, and a.__id < b.__id over corpus ∪
     * deltas-so-far ∪ batch — so under the monotone doc_id-arrival
@@ -722,7 +726,7 @@ object Dedup {
     * through [[appendShinglesToIndex]] into an equivalent store.
     */
   def allPairsIngest(batch: DataFrame, ix: PrefixIndex,
-      idCol: String, textCol: String): AllPairsIngest = {
+      idCol: String, textCol: String): Ingest[PrefixIndex] = {
     val shB = batch.select(col(idCol).as("__id"),
       TextFns.wordShingles(col(textCol), ix.shingleN).as("__sh"))
       .localCheckpoint(true)
@@ -733,8 +737,9 @@ object Dedup {
     val cand = ppjoinCandidateJoin(prefAll, prefB, ix.tNum, ix.tDen,
       extraCond = col("x.__id") < col("y.__id"))
     val shAll = ix.sh.unionByName(shB)
-    val result = ppjoinVerify(cand, shAll, shB, ix.tNum, ix.tDen)
-    AllPairsIngest(result, shB,
+    val result = ppjoinVerify(cand, shAll, shB, ix.tNum, ix.tDen,
+      batchBounded = true)
+    Ingest(result, shB,
       ix.copy(pref = prefAll, sh = shAll))
   }
 
@@ -751,9 +756,17 @@ object Dedup {
       sh = ix.sh.unionByName(sh))
   }
 
-  /** LSM-style rewrite — the [[compactGramStore]] contract. */
+  /** LSM-style rewrite — the [[compactGramStore]] contract. EVERY
+    * frame re-checkpoints, the prepare-era `dfreq` included: the
+    * runner's unpersist-after-compaction bookkeeping releases every
+    * block not created BY the compaction, and the next batch ranks its
+    * shingles against `dfreq` (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the
+    * first batch after a compaction otherwise — caught by the
+    * StreamingSpec crash-window table).
+    */
   def compactAllPairsIndex(ix: PrefixIndex): PrefixIndex =
-    ix.copy(pref = ix.pref.localCheckpoint(true),
+    ix.copy(dfreq = ix.dfreq.localCheckpoint(true),
+      pref = ix.pref.localCheckpoint(true),
       sh = ix.sh.localCheckpoint(true))
 
   /** RE-BLOCKING EPOCH for the prefix index (qs40) — the
@@ -1618,15 +1631,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** One ingested batch from [[paragraphDedupIngest]]: the cleaned
-    * batch documents, the spans the store absorbed (the batch's
-    * exact-stage survivors — persist this frame to replay the store
-    * after a restart, as the streaming runner does), and the evolved
-    * store for the next batch.
-    */
-  final case class ParagraphIngest(cleaned: DataFrame,
-      appended: DataFrame, next: ParagraphStore)
-
   /** EVOLVING-store incremental paragraph dedup (the qs8 continuous-
     * ingestion shape): each batch's spans dedup against everything
     * seen so far — the initial corpus plus every earlier batch — and
@@ -1656,9 +1660,13 @@ object Dedup {
     * Batch appends bypass the cap until then (a delta-sized batch
     * cannot make a bucket hot faster than the re-preparation cadence
     * bounds).
+    *
+    * Returns the cleaned batch documents, the spans the store absorbed
+    * (the batch's exact-stage survivors — the delta a restart
+    * replays), and the evolved store.
     */
   def paragraphDedupIngest(batch: DataFrame, ps: ParagraphStore,
-      idCol: String, textCol: String): ParagraphIngest = {
+      idCol: String, textCol: String): Ingest[ParagraphStore] = {
     val spans = explodeSpans(batch, idCol, textCol, ps.splitter)
       .withColumn("pid", struct(col("doc_id"), col("idx")))
     // exact stage vs everything seen: first-in-batch per span text
@@ -1701,7 +1709,7 @@ object Dedup {
       .select(col("doc_id"), col("clean_text"), col("n_para"),
         col("n_kept"))
       .orderBy("doc_id")
-    ParagraphIngest(cleaned, e1, appendFrames(ps, e1, shD, bandedD))
+    Ingest(cleaned, e1, appendFrames(ps, e1, shD, bandedD))
   }
 
   /** Absorb already-determined exact-survivor spans — e.g. the durable
@@ -1963,11 +1971,8 @@ object Dedup {
     * restricted to the delta docs, because every store key is smaller
     * than every batch key and min-merge is associative.
     */
-  final case class SubstringIngest(result: DataFrame,
-      appended: DataFrame, next: GramStore)
-
   def substringDedupIngest(batch: DataFrame, store: GramStore,
-      idCol: String, textCol: String): SubstringIngest = {
+      idCol: String, textCol: String): Ingest[GramStore] = {
     val l = store.l
     val d = batch.select(col(idCol).cast(LongType).as("__id"),
       col(textCol).as("__txt")).localCheckpoint(true)
@@ -1989,7 +1994,7 @@ object Dedup {
         Seq("__gk"), "left_anti")
       .select(col("__gk"), col("__bmk").as("__mk"))
       .localCheckpoint(true)
-    SubstringIngest(spansToClean(d, dup, l, idCol), appended,
+    Ingest(spansToClean(d, dup, l, idCol), appended,
       GramStore(store.grams.unionByName(appended), l))
   }
 
@@ -2207,9 +2212,6 @@ object Dedup {
       .agg(min(struct(col("doc_id"), col("pos"))).as("__mk"))
       .localCheckpoint(true))
 
-  final case class CdcIngest(result: DataFrame, appended: DataFrame,
-      next: ChunkStore)
-
   /** One ingested batch of the CDC stream: per-doc dedup stats for
     * the batch (identical to the one-shot [[cdcDedupStats]] row for
     * those docs over corpus ∪ deltas-so-far), the store delta (chunk
@@ -2220,7 +2222,7 @@ object Dedup {
     * to the delta docs.
     */
   def cdcDedupIngest(batch: DataFrame, store: ChunkStore,
-      idCol: String, textCol: String): CdcIngest = {
+      idCol: String, textCol: String): Ingest[ChunkStore] = {
     val occ = cdcOcc(batch, idCol, textCol).localCheckpoint(true)
     val bmin = occ.groupBy("k")
       .agg(min(struct(col("doc_id"), col("pos"))).as("__bmk"))
@@ -2237,7 +2239,7 @@ object Dedup {
         Seq("k"), "left_anti")
       .select(col("k"), col("__bmk").as("__mk"))
       .localCheckpoint(true)
-    CdcIngest(result, appended,
+    Ingest(result, appended,
       ChunkStore(store.chunks.unionByName(appended)))
   }
 

@@ -189,8 +189,6 @@ object Events {
     CusumStore(org.apache.spark.sql.graftbridge.Bridge
       .freshStats(s.state))
 
-  final case class CusumIngest(result: DataFrame, next: CusumStore)
-
   /** Seed the store by folding `corpus` from empty state. */
   def prepareCusumStore(corpus: DataFrame, keyCol: String,
       tsCol: String, idCol: String, valCol: String,
@@ -209,7 +207,7 @@ object Events {
     */
   def cusumIngest(batch: DataFrame, store: CusumStore, keyCol: String,
       tsCol: String, idCol: String, valCol: String,
-      kE2: Long = 4000L, hE2: Long = 30000L): CusumIngest = {
+      kE2: Long = 4000L, hE2: Long = 30000L): Ingest[CusumStore] = {
     val q = batch
       .where(col(valCol).isNotNull && col(keyCol).isNotNull &&
         col(tsCol).isNotNull)
@@ -269,7 +267,7 @@ object Events {
         coalesce(col("__nsn"), col("__osn")).as("sn"),
         coalesce(col("__nv1"), col("__ov1")).as("v1"))
       .localCheckpoint(true)
-    CusumIngest(rows, CusumStore(next))
+    Ingest(rows, batch, CusumStore(next))
   }
 
   /** Weekly cohort-retention matrix (xe2) — the product-analytics
@@ -598,8 +596,6 @@ object Events {
     EwmaStore(org.apache.spark.sql.graftbridge.Bridge
       .freshStats(s.state))
 
-  final case class EwmaIngest(result: DataFrame, next: EwmaStore)
-
   /** Seed the store by folding `corpus` from empty state. */
   def prepareEwmaStore(corpus: DataFrame, keyCol: String, tsCol: String,
       idCol: String, valCol: String, threshE2: Long = 16000L)
@@ -620,7 +616,7 @@ object Events {
     */
   def ewmaIngest(batch: DataFrame, store: EwmaStore, keyCol: String,
       tsCol: String, idCol: String, valCol: String,
-      threshE2: Long = 16000L): EwmaIngest = {
+      threshE2: Long = 16000L): Ingest[EwmaStore] = {
     val q = batch
       .where(col(valCol).isNotNull && col(keyCol).isNotNull &&
         col(tsCol).isNotNull)
@@ -663,6 +659,6 @@ object Events {
         Seq("key"), "full_outer")
       .select(col("key"), coalesce(col("__new"), col("__old")).as("s"))
       .localCheckpoint(true)
-    EwmaIngest(rows, EwmaStore(next))
+    Ingest(rows, batch, EwmaStore(next))
   }
 }

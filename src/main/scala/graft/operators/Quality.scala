@@ -203,9 +203,6 @@ object Quality {
     */
   final case class LineStore private[operators] (lines: DataFrame)
 
-  final case class C4Ingest(result: DataFrame, appended: DataFrame,
-      next: LineStore)
-
   def prepareLineStore(corpus: DataFrame, idCol: String,
       textCol: String, window: Int = 12, minWords: Int = 3): LineStore =
     LineStore(c4Lines(c4D0(corpus, idCol, textCol), window, minWords)
@@ -221,7 +218,7 @@ object Quality {
     */
   def c4CleanIngest(batch: DataFrame, store: LineStore, idCol: String,
       textCol: String, window: Int = 12, minWords: Int = 3,
-      minKept: Int = 3): C4Ingest = {
+      minKept: Int = 3): Ingest[LineStore] = {
     val d0 = c4D0(batch, idCol, textCol)
     val lines = c4Lines(d0, window, minWords)
     val bmin = lines.where(col("pass"))
@@ -245,7 +242,7 @@ object Quality {
         Seq("ptext"), "left_anti")
       .select(col("ptext"), col("__bmk").as("__mk"))
       .localCheckpoint(true)
-    C4Ingest(result, appended,
+    Ingest(result, appended,
       LineStore(store.lines.unionByName(appended)))
   }
 

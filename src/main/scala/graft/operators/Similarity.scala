@@ -622,9 +622,6 @@ object Similarity {
       .select(col("qid"), explode(col("top")).as("t"))
       .select(col("qid"), col("t.id").as("id"), col("t.sim").as("sim"))
 
-  final case class KnnGraphIngest(appended: DataFrame,
-      next: KnnGraphStore)
-
   /** Fold one vector batch into the store: new→all and old→new pairs
     * merge with the existing lists through one bounded top-k
     * aggregate. `appended` is the batch's (id, v, n) rows — the
@@ -662,7 +659,7 @@ object Similarity {
   }
 
   def knnGraphIngest(batch: DataFrame, store: KnnGraphStore,
-      idCol: String, vecCol: String): KnnGraphIngest = {
+      idCol: String, vecCol: String): Ingest[KnnGraphStore] = {
     val b = batch.select(col(idCol).as("id"), col(vecCol).as("v"),
       TextFns.l2norm(col(vecCol)).as("n"))
       .repartition(store.tiles).localCheckpoint(true)
@@ -672,7 +669,7 @@ object Similarity {
       .unionByName(directedPairs(store.vecs, b))
     val top = topFold(store.top.unionByName(fresh), store.k)
       .localCheckpoint(true)
-    KnnGraphIngest(b, KnnGraphStore(vecsAll, top, store.k, store.tiles))
+    Ingest(b, b, KnnGraphStore(vecsAll, top, store.k, store.tiles))
   }
 
   /** Crash recovery: the order-free fold makes one combined re-ingest

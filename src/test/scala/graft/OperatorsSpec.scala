@@ -3012,11 +3012,33 @@ class OperatorsSpec extends SparkSpec {
         Dedup.minhashNearDupsAuto(docs, "doc_id", "text", 0.5),
         Dedup.embeddingNearDupsLSHAuto(emb, "id", "v", 0.9),
         Dedup.paragraphDedupIngest(docs.where(col("doc_id") >= 400), ps,
-          "doc_id", "text").cleaned)
+          "doc_id", "text").result)
       .map(_.queryExecution.executedPlan.toString)
     finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
     plans.foreach(p => assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p))
+  }
+
+  test("ppjoin verify broadcasts its candidate-id semi-join only where " +
+      "a batch bounds it: with size-chosen broadcasts off, full " +
+      "all-pairs (xd19) plans no broadcast, the qs32 ingest keeps one") {
+    val ix = Dedup.prepareAllPairsIndex(docs.where(col("doc_id") < 250),
+      "doc_id", "text", 0.5)
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.enabled")
+    val prev = keys.map(spark.conf.get)
+    keys.zip(Seq("-1", "false")).foreach { case (k, v) => spark.conf.set(k, v) }
+    val Seq(full, ingest) = try Seq(
+        Dedup.allPairsJaccard(docs, "doc_id", "text", 0.5),
+        Dedup.allPairsIngest(docs.where(col("doc_id") >= 250), ix,
+          "doc_id", "text").result)
+      .map(_.queryExecution.executedPlan.toString)
+    finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
+    def semiJoins(plan: String) =
+      plan.linesIterator.filter(_.contains("LeftSemi")).toSeq
+    assert(!full.contains("Broadcast") && semiJoins(full).nonEmpty, full)
+    assert(semiJoins(ingest).exists(_.contains("BroadcastHashJoin")),
+      ingest)
   }
 
   test("xd6/xd9 on the planted corpus: exactly one pair per vector, " +

@@ -656,27 +656,9 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(deltaDir)
     got = Streams.runKnnGraphStream(spark, deltaDir, corpus, 6,
       outDir, compactEvery = 2)
-    assert(rows(got) == oneShot)
-    // crash INSIDE the write→commit window (ADVICE r16): the store
-    // dir for a batch exists but its checkpoint commit is lost. The
-    // restart must NOT replay that dir (the stream reprocesses the
-    // batch itself — replaying both would ingest those vectors twice
-    // into a duplicate-sensitive fold, displacing real edges; the
-    // knnGraphIngest disjointness guard would trip). Simulated by
-    // deleting the last commit marker after a clean run.
-    val commits = new java.io.File(s"$outDir/_checkpoint/commits")
-    val lastCommit = commits.listFiles.map(_.getName)
-      .filter(_.forall(_.isDigit)).map(_.toLong).max
-    assert(new java.io.File(s"$outDir/store/batch=$lastCommit").exists,
-      "crash-window setup: last batch's store dir must exist")
-    for (f <- commits.listFiles
-        if f.getName == lastCommit.toString ||
-          f.getName == s".$lastCommit.crc")
-      assert(f.delete())
-    got = Streams.runKnnGraphStream(spark, deltaDir, corpus, 6,
-      outDir, compactEvery = 2)
     corpus.unpersist()
     assert(rows(got) == oneShot)
+    // a crash inside the write→commit window: the crash-window table
   }
 
   test("QS35 serve-while-ingest: final serve == one-shot beam search " +
@@ -1145,43 +1127,150 @@ class StreamingSpec extends SparkSpec {
     assert(ex.getMessage.contains("not in the index"))
   }
 
-  test("crash inside the write→commit window: the qs8, qs10, qs19 and " +
-      "qs20 runners restart from the committed store batches to the " +
-      "one-shot answer") {
-    import graft.operators.{Dedup, Quality}
+  test("crash inside the write→commit window: every store-stream " +
+      "runner (qs8, qs10, qs19, qs20, qs32, qs34, qs35, qs37/38) " +
+      "restarts from the committed store batches to the one-shot answer") {
+    import graft.operators.{Dedup, Quality, Similarity}
+    type DF = org.apache.spark.sql.DataFrame
     val docs = graft.queries.T.t(spark, sf0001, "documents")
-    val delta = docs.where(col("doc_id") >= 400)
-    val corpus = docs.where(col("doc_id") < 400).cache()
-    // (name, run(deltaDir, outDir), one-shot answer over corpus ∪ deltas)
-    val runners: Seq[(String, (String, String) => Unit,
-        org.apache.spark.sql.DataFrame)] = Seq(
-      ("qs8", (d, o) => Streams.runEvolvingParagraphDedupStream(spark, d,
-        corpus, 0.8, o, compactEvery = 2),
-        Dedup.paragraphDedup(docs, "doc_id", "text")),
-      ("qs10", (d, o) => Streams.runSubstringDedupStream(spark, d,
-        corpus, o, compactEvery = 2),
-        Dedup.substringDedup(docs, "doc_id", "text")),
-      ("qs19", (d, o) => Streams.runCdcDedupStream(spark, d, corpus, o,
-        compactEvery = 2),
-        Dedup.cdcDedupStats(docs, "doc_id", "text")),
-      ("qs20", (d, o) => Streams.runC4CleanStream(spark, d, corpus, o,
-        compactEvery = 2),
-        Quality.c4Clean(docs, "doc_id", "text")))
-    def crashAndRestart(name: String, run: (String, String) => Unit,
-        oneShotAll: org.apache.spark.sql.DataFrame): Unit = {
-      val base = java.nio.file.Files.createTempDirectory(s"crash_$name")
+    val emb = graft.queries.T.t(spark, sf0001, "embeddings")
+    val vv = emb.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("v"))
+      .localCheckpoint(true)
+    val corpus400 = docs.where(col("doc_id") < 400).cache()
+    val corpus250 = docs.where(col("doc_id") < 250).cache()
+    val embCorpus = emb.where(col("vec_id") < 250).cache()
+    val queries = emb.where(col("vec_id") < 5)
+    def slices(df: DF, id: String, bounds: Seq[Long]) =
+      ((Long.MinValue +: bounds) :+ Long.MaxValue).sliding(2).map {
+        case Seq(lo, hi) => df.where(col(id) >= lo && col(id) < hi)
+      }.toSeq
+    val docSlices = slices(docs.where(col("doc_id") >= 400), "doc_id",
+      Seq(470L, 540L))
+    val vecSlices = slices(emb.where(col("vec_id") >= 250), "vec_id",
+      Seq(350L, 430L))
+    def sunk(o: String) = spark.read.parquet(s"$o/batch=*")
+    def serveRows(df: DF) = df.select("qid", "rank", "id", "sim")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        math.round(r.getDouble(3) * 1e9))).toSet
+    def graphRows(df: DF) = df.select("qid", "id", "sim", "rank")
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        math.round(r.getDouble(2) * 1e9), r.getInt(3))).toSet
+    // the answer restricted to the delta docs, on the columns it has
+    def docCheck(oneShotAll: DF)(got: DF): Unit = {
+      val oneShot = oneShotAll.where(col("doc_id") >= 400)
+      val n = oneShot.columns.length
+      def rows(df: DF) = df.collect().map(_.toSeq.take(n)).toSet
+      assert(rows(got) == rows(oneShot))
+    }
+    // qs35: the final serve and every per-batch serve == the one-shot
+    // beam over the exact graph of its prefix corpus
+    def beam(c: DF) = serveRows(Similarity.beamSearchTopK(c, queries,
+      Similarity.knnGraphExact(c, "vec_id", "embedding", k = 6),
+      "vec_id", "embedding", entryIds = 0L to 3L, ef = 8, rounds = 6,
+      k = 3))
+    // qs37/38: op batches 0 = adds [250,350) + del {10 (corpus-era),
+    // 300 (added THIS batch)}; 1 = adds [350,430) + del {311}; 2 =
+    // adds [430,...)
+    val cents = Similarity.kmeansCentroidsSeq(
+      vv.where(col("vec_id") < 250), "vec_id", "v", 8)
+    val opPlan = Seq((350L, Seq(10L, 300L)), (430L, Seq(311L)),
+      (Long.MaxValue, Seq.empty[Long]))
+    val opSlices = vecSlices.zip(opPlan).map { case (adds, (_, dels)) =>
+      adds.select(col("vec_id"), col("embedding"), col("label"),
+          lit("add").as("op"))
+        .unionByName(emb.where(col("vec_id").isin(dels: _*))
+          .select(col("vec_id"), col("embedding"), col("label"),
+            lit("del").as("op")))
+    }
+    def liveAt(b: Int) = vv.where(col("vec_id") < opPlan(b)._1 &&
+      !col("vec_id").isin(opPlan.take(b + 1).flatMap(_._2): _*))
+    def hier(live: DF) = serveRows(Similarity.beamSearchTopKHier(live,
+      vv.where(col("vec_id") < 5),
+      Similarity.ivfSeededGraph(live, "vec_id", "v", cents, probe = 2,
+        k = 6), "vec_id", "v",
+      Similarity.cellMedoids(live, "vec_id", "v", cents), seedM = 3,
+      ef = 8, rounds = 6, k = 3))
+    def servesMatch(o: String)(oneShot: Int => Set[_]): Unit =
+      for (b <- 0 to 2)
+        assert(serveRows(spark.read.parquet(s"$o/serve/batch=$b")) ==
+          oneShot(b), s"serve/batch=$b diverges from the one-shot " +
+            "serve over its prefix")
+    // (runner and its store, delta slices in arrival order,
+    //  run(deltaDir, outDir) → the runner's answer, check(outDir, answer))
+    val runners: Seq[(String, Seq[DF], (String, String) => DF,
+        (String, DF) => Unit)] = Seq(
+      ("qs8 paragraphStore", docSlices, (d, o) => {
+        Streams.runEvolvingParagraphDedupStream(spark, d, corpus400, 0.8,
+          o, compactEvery = 2); sunk(o) },
+        (_, got) => docCheck(Dedup.paragraphDedup(docs, "doc_id", "text"))(
+          got)),
+      ("qs10 gramStore", docSlices, (d, o) => {
+        Streams.runSubstringDedupStream(spark, d, corpus400, o,
+          compactEvery = 2); sunk(o) },
+        (_, got) => docCheck(Dedup.substringDedup(docs, "doc_id", "text"))(
+          got)),
+      ("qs19 chunkStore", docSlices, (d, o) => {
+        Streams.runCdcDedupStream(spark, d, corpus400, o,
+          compactEvery = 2); sunk(o) },
+        (_, got) => docCheck(Dedup.cdcDedupStats(docs, "doc_id", "text"))(
+          got)),
+      ("qs20 lineStore", docSlices, (d, o) => {
+        Streams.runC4CleanStream(spark, d, corpus400, o,
+          compactEvery = 2); sunk(o) },
+        (_, got) => docCheck(Quality.c4Clean(docs, "doc_id", "text"))(got)),
+      // a replayed uncommitted dir would ingest its shingles twice:
+      // duplicated shingle rows inflate ppjoin's __ix overlap counts →
+      // false-positive pairs above threshold
+      ("qs32 prefixIndex", slices(docs.where(col("doc_id") >= 250),
+        "doc_id", Seq(350L, 430L)), (d, o) => {
+        Streams.runAllPairsStream(spark, d, corpus250, 0.5, o,
+          compactEvery = 2); sunk(o) },
+        (_, got) => {
+          def rows(df: DF) = df.collect().map(r => (r.getLong(0),
+            r.getLong(1), math.round(r.getDouble(2) * 1e9))).toSet
+          assert(rows(got) == rows(Dedup.allPairsJaccard(docs, "doc_id",
+            "text", threshold = 0.5).where(col("b") >= 250)))
+        }),
+      // a replayed uncommitted dir would ingest its vectors twice into a
+      // duplicate-sensitive fold, displacing real edges (the
+      // knnGraphIngest disjointness guard would trip)
+      ("qs34 knnStore", vecSlices, (d, o) => Streams.runKnnGraphStream(
+        spark, d, embCorpus, 6, o, compactEvery = 2),
+        (_, got) => assert(graphRows(got) == graphRows(
+          Similarity.knnGraphExact(emb, "vec_id", "embedding", k = 6)))),
+      ("qs35 knnStore + serve", vecSlices, (d, o) =>
+        Streams.runKnnGraphServeStream(spark, d, embCorpus, queries, 6,
+          0L to 3L, 8, 6, 3, o, compactEvery = 2),
+        (o, got) => {
+          assert(serveRows(got) == beam(emb))
+          servesMatch(o)(b => beam(emb.where(col("vec_id") <
+            Seq(350L, 430L, Long.MaxValue)(b))))
+        }),
+      ("qs37/38 blockedStore op log + serve", opSlices, (d, o) =>
+        Similarity.blockedGraphFromStore(
+          Streams.runBlockedMaintainServeStream(spark, d, embCorpus,
+            queries, cents, probe = 2, k = 6, seedM = 3, ef = 8,
+            rounds = 6, kq = 3, o, compactEvery = 2)),
+        (o, got) => {
+          assert(graphRows(got) == graphRows(Similarity.ivfSeededGraph(
+            liveAt(2), "vec_id", "v", cents, probe = 2, k = 6)))
+          servesMatch(o)(b => hier(liveAt(b)))
+        }))
+    def crashAndRestart(name: String, in: Seq[DF],
+        run: (String, String) => DF, check: (String, DF) => Unit): Unit = {
+      val base = java.nio.file.Files.createTempDirectory("crash")
       val deltaDir = base.resolve("delta").toString
       val outDir = base.resolve("out").toString
-      // three slices with distinct mtimes: three batches, in doc_id order
-      for ((lo, hi) <- Seq((Long.MinValue, 470L), (470L, 540L),
-          (540L, Long.MaxValue))) {
-        delta.where(col("doc_id") >= lo && col("doc_id") < hi)
-          .coalesce(1).write.mode("append").parquet(deltaDir)
+      // three slices with distinct mtimes: three batches, in id order
+      for (slice <- in) {
+        slice.coalesce(1).write.mode("append").parquet(deltaDir)
         Thread.sleep(20)
       }
       run(deltaDir, outDir)
-      // the crash: the last batch's store dir is written, its commit is
-      // lost (the QS34 recipe)
+      // the crash: the last batch's store dir is written, its
+      // checkpoint commit is lost. The restart must NOT replay that dir
+      // — the stream reprocesses the batch itself
       val commits = new java.io.File(s"$outDir/_checkpoint/commits")
       val lastCommit = commits.listFiles.map(_.getName)
         .filter(_.forall(_.isDigit)).map(_.toLong).max
@@ -1192,20 +1281,14 @@ class StreamingSpec extends SparkSpec {
           if f.getName == lastCommit.toString ||
             f.getName == s".$lastCommit.crc")
         assert(f.delete())
-      run(deltaDir, outDir)
-      val oneShot = oneShotAll.where(col("doc_id") >= 400)
-      val n = oneShot.columns.length
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toSeq.take(n)).toSet
-      assert(rows(spark.read.parquet(s"$outDir/batch=*")) == rows(oneShot),
-        s"$name: restarted output differs from the one-shot answer")
+      check(outDir, run(deltaDir, outDir))
     }
     // every runner runs, so one failure does not hide another
-    val failed = runners.flatMap { case (name, run, oneShot) =>
-      scala.util.Try(crashAndRestart(name, run, oneShot)).failed.toOption
-        .map(e => s"$name: $e")
+    val failed = runners.flatMap { case (name, in, run, check) =>
+      scala.util.Try(crashAndRestart(name, in, run, check)).failed
+        .toOption.map(e => s"$name: $e")
     }
-    corpus.unpersist()
+    Seq(corpus400, corpus250, embCorpus).foreach(_.unpersist())
     assert(failed.isEmpty, failed.mkString("\n"))
   }
 
@@ -1286,6 +1369,44 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("QS33 reads its update sink without a glob path: no " +
+      "FileNotFoundException WARN from the file-sink metadata probe") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val docs = graft.queries.T.t(spark, sf0001, "documents")
+    val base = java.nio.file.Files.createTempDirectory("qs33warn")
+    val out = base.resolve("out").toString
+    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("qs33-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN && e.getThrown != null &&
+            e.getThrown.isInstanceOf[java.io.FileNotFoundException])
+          probes.add(e.getThrown.getMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    val (fromRun, fromGlob) = try {
+      Streams.runWordCountUpdateStream(spark, docs,
+        base.resolve("in").toString, out, Seq(200L, 400L)).collect()
+      val n = probes.size
+      // control: a single glob path does log the probe's WARN
+      spark.read.parquet(s"$out/upd/batch=*").count()
+      (n, probes.size - n)
+    } finally {
+      root.removeAppender("qs33-probe")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(fromGlob > 0, "the log capture saw no probe WARN at all")
+    assert(fromRun == 0, s"qs33 logged $fromRun probe WARN(s): $probes")
+  }
+
   test("QS32 AllPairs stream face: any chunking == one-shot xd19 " +
       "restricted to delta-max pairs, and the real runner restarts " +
       "from the durable shingle appends") {
@@ -1334,23 +1455,9 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(deltaDir)
     Streams.runAllPairsStream(spark, deltaDir, corpus, 0.5, outDir,
       compactEvery = 2)
-    assert(rows(spark.read.parquet(s"$outDir/batch=*")) == oneShot)
-    // crash INSIDE the write→commit window (ADVICE r16): drop the
-    // last commit marker — the restart must skip (and delete) that
-    // store dir and reprocess the batch itself, instead of ingesting
-    // its shingles twice (duplicated shingle rows inflate ppjoin's
-    // __ix overlap counts → false-positive pairs above threshold)
-    val commits = new java.io.File(s"$outDir/_checkpoint/commits")
-    val lastCommit = commits.listFiles.map(_.getName)
-      .filter(_.forall(_.isDigit)).map(_.toLong).max
-    for (f <- commits.listFiles
-        if f.getName == lastCommit.toString ||
-          f.getName == s".$lastCommit.crc")
-      assert(f.delete())
-    Streams.runAllPairsStream(spark, deltaDir, corpus, 0.5, outDir,
-      compactEvery = 2)
     corpus.unpersist()
     assert(rows(spark.read.parquet(s"$outDir/batch=*")) == oneShot)
+    // a crash inside the write→commit window: the crash-window table
   }
 
   test("QS40 runner face: df re-blocking epochs inside the real " +
@@ -1975,7 +2082,7 @@ class StreamingSpec extends SparkSpec {
         .zipWithIndex.map { case (Seq(lo, hi), i) =>
           val ing = Dedup.paragraphDedupIngest(docs.where(
             col("doc_id") >= lo && col("doc_id") < hi), ps, "doc_id", "text")
-          val rows = ing.cleaned
+          val rows = ing.result
             .select("doc_id", "clean_text", "n_para", "n_kept").collect()
             .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
               r.getLong(3))).toSet
