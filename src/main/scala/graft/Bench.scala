@@ -15,6 +15,14 @@ import org.apache.spark.sql.SparkSession
   *  - `runs`: ALL four wall times `[warmup, r1, r2, r3]` — so a
   *    cross-round drift can be attributed to noise (runs disagree) vs
   *    a real slowdown (runs agree) from artifacts alone
+  *  - `driver_cpu_sec`: per-query median over the 3 timed runs of the
+  *    CPU time of the calling (driver) thread around `fn` and the
+  *    action: the eager DataFrame builds, planning and AQE re-planning
+  *    that `cpu_sec` (executor task CPU only) cannot see. It excludes
+  *    every other driver thread, stream-execution threads included,
+  *    so a streaming entry's micro-batch planning is not in it.
+  *    Entries whose run failed, or a JVM without thread CPU time, have
+  *    no value
   *  - `stages`: per-query task-metric deltas over the 3 timed runs
   *    (shuffle read/write bytes, memory/disk spill, JVM GC ms) — the
   *    "is it the plan or the machine" signal
@@ -187,20 +195,25 @@ object Bench {
     // toRdd.count materializes every output row through the full plan;
     // a plain count() would let Catalyst prune the projections away and
     // time only scan+count. Returns (wall sec, after-snapshot, per-run
-    // task-metric deltas) — the caller THREADS each run's
+    // task-metric deltas, calling-thread CPU sec where the JVM has
+    // thread CPU time) — the caller THREADS each run's
     // after-snapshot in as the next run's before (they are identical
     // reads: nothing runs between), halving the 50ms listener-drain
     // sleeps, which otherwise total ~half a minute across a session.
     // All snapshots sit OUTSIDE the timed region.
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
     def timeOnceFrom(
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        before: Seq[Long]): (Double, Seq[Long], Seq[Long]) = {
+        before: Seq[Long]): (Double, Seq[Long], Seq[Long], Option[Double]) = {
+      val c0 = threads.getCurrentThreadCpuTime
       val t0 = System.nanoTime()
       fn(spark, sfDir).queryExecution.toRdd.count()
       val sec = (System.nanoTime() - t0) / 1e9
+      val c1 = threads.getCurrentThreadCpuTime
       dropPersisted()
       val after = metrics.snapshot()
-      (sec, after, after.zip(before).map { case (a, b) => a - b })
+      (sec, after, after.zip(before).map { case (a, b) => a - b },
+        Option.when(c0 >= 0 && c1 >= 0)((c1 - c0) / 1e9))
     }
 
     /** Physical-plan fingerprint, stable across JVMs/rounds iff the
@@ -292,7 +305,7 @@ object Bench {
       .filterNot(benchExclude).filter(keep)
     final case class QResult(name: String, runs: Seq[Double],
         perRun: Seq[Seq[Long]], stages: Seq[Long], fp: String,
-        host: String = "{}") {
+        host: String = "{}", driverCpuSecs: Seq[Option[Double]] = Nil) {
       // per-run executor CPU seconds (snapshot index 6 = cpuNs delta)
       def cpuSecs: Seq[Double] = perRun.map(_(6) / 1e9)
     }
@@ -312,14 +325,15 @@ object Bench {
         dropPersisted()
         var snap = metrics.snapshot()
         val timed = Seq.fill(3) {
-          val (sec, after, deltas) = timeOnceFrom(fn, snap)
+          val (sec, after, deltas, driverSec) = timeOnceFrom(fn, snap)
           snap = after
-          (sec, deltas)
+          (sec, deltas, driverSec)
         }
         // host snapshot AFTER the timed runs: PSI avg10 is a trailing
         // 10s average, so this reading covers the measurement window
         QResult(name, w +: timed.map(_._1), timed.map(_._2),
-          timed.map(_._2).transpose.map(_.sum), fp, hostLoad())
+          timed.map(_._2).transpose.map(_.sum), fp, hostLoad(),
+          timed.map(_._3))
       } catch {
         case NonFatal(_) => QResult(name, Seq(-1.0), Nil, Nil, "error")
       }
@@ -380,7 +394,7 @@ object Bench {
       pass2Names.map { name =>
         val fn = SparkEntry.queries(name)
         try {
-          val (sec, after, deltas) = timeOnceFrom(fn, snap)
+          val (sec, after, deltas, _) = timeOnceFrom(fn, snap)
           snap = after
           (name, sec, deltas(6) / 1e9)
         } catch {
@@ -416,7 +430,7 @@ object Bench {
                (fl > 0 && math.min(m, p2) >= 0.3 &&
                 math.min(m, p2) > 2.0 * fl)) =>
             val rerun = try {
-              val (sec, after, _) = timeOnceFrom(
+              val (sec, after, _, _) = timeOnceFrom(
                 SparkEntry.queries(r.name), snap)
               snap = after
               sec
@@ -441,7 +455,7 @@ object Bench {
         dropPersisted()
         var snap = metrics.snapshot()
         val qRuns = Seq.fill(3) {
-          val (sec, after, _) = timeOnceFrom((s, d) =>
+          val (sec, after, _, _) = timeOnceFrom((s, d) =>
             graft.queries.SimilarityQueries
               .xs10QueryWith(s, d, cents, books), snap)
           snap = after
@@ -483,30 +497,22 @@ object Bench {
           // batch of any plausible bench corpus is retained
           spark.conf.set(
             "spark.sql.streaming.numRecentProgressUpdates", "10000")
-          // Size the STATEFUL shuffle to state volume, not CPU count:
-          // a stream-stream join opens 4 state stores per partition,
-          // so 32 partitions = 128 RocksDB instances each paying
-          // open/commit/changelog-upload PER BATCH while holding a few
-          // hundred KB of state at this SF — fixed overhead, not work.
-          // 8 partitions keeps per-partition state far under memory
-          // while quartering the per-batch store overhead; at 100 TB
-          // the same sizing rule (state bytes / target partition size)
-          // raises it back. The partition count is pinned into the
-          // checkpoint at first batch, so this is a per-deployment
-          // sizing decision exactly like shuffle.partitions for batch.
-          val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions", "8")
-          try graft.streaming.Streams.withRocksDBStateStore(spark) {
-            val stream = spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", "2").parquet(tmp.toString)
-            val q = graft.streaming.Streams.viewPurchaseJoin(stream)
-              .writeStream.outputMode("append").format("noop").start()
-            try q.processAllAvailable() finally {
-              progress = q.recentProgress.toSeq
-              q.stop()
+          // the STATEFUL shuffle sized to state volume, not CPU count
+          // (see withStatefulShufflePartitions)
+          import graft.streaming.Streams.{withRocksDBStateStore,
+            withStatefulShufflePartitions}
+          withStatefulShufflePartitions(spark, 8) {
+            withRocksDBStateStore(spark) {
+              val stream = spark.readStream.schema(ev.schema)
+                .option("maxFilesPerTrigger", "2").parquet(tmp.toString)
+              val q = graft.streaming.Streams.viewPurchaseJoin(stream)
+                .writeStream.outputMode("append").format("noop").start()
+              try q.processAllAvailable() finally {
+                progress = q.recentProgress.toSeq
+                q.stop()
+              }
             }
-          } finally
-            spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          }
           val total = (System.nanoTime() - t0) / 1e9
           // steady state = mean batch duration EXCLUDING the first
           // batch (which absorbs stream init + state-store open)
@@ -573,6 +579,8 @@ object Bench {
     // the contention-immune trend metric
     val cpuSec = results.map(r => r.name ->
       (if (r.perRun.size == 3) r.cpuSecs.sorted.apply(1) else -1.0))
+    val driverCpuSec = results.map(r => r.name -> r.driverCpuSecs.flatten)
+      .collect { case (n, d) if d.size == 3 => n -> d.sorted.apply(1) }
     val total = medians.map(_._2).filter(_ >= 0).sum
     val minTotal = mins.map(_._2).filter(_ >= 0).sum
     val cpuTotal = cpuSec.map(_._2).filter(_ >= 0).sum
@@ -602,6 +610,8 @@ object Bench {
       s""""queries":${jmap(medians.map { case (k, v) => k -> r3(v) })},""" +
       s""""mins":${jmap(mins.map { case (k, v) => k -> r3(v) })},""" +
       s""""cpu_sec":${jmap(cpuSec.map { case (k, v) => k -> r3(v) })},""" +
+      s""""driver_cpu_sec":${jmap(
+          driverCpuSec.map { case (k, v) => k -> r3(v) })},""" +
       s""""runs":${jmap(results.map(r =>
           r.name -> r.runs.map(r3).mkString("[", ",", "]")))},""" +
       s""""runs_cpu_sec":${jmap(results.filter(_.perRun.nonEmpty).map(r =>

@@ -848,21 +848,12 @@ object Dedup {
     */
   def allPairsDelete(tombstones: DataFrame, ix: PrefixIndex)
       : PrefixIndex = {
-    val del = broadcast(tombstones.select(col("id").as("__id"))
-      .distinct().localCheckpoint(true))
-    val matched = ix.sh.select("__id").join(del, Seq("__id"),
-      "left_semi")
-    val nDel = del.count()
-    if (matched.count() != nDel) {
-      val missing = del.collect().map(_.getLong(0)).toSet --
-        matched.collect().map(_.getLong(0)).toSet
-      throw new IllegalArgumentException(
-        s"allPairsDelete: tombstone doc ${missing.head} is not in " +
-          "the index — a silent no-op takedown hides upstream " +
-          "bookkeeping bugs")
-    }
-    ix.copy(pref = ix.pref.join(del, Seq("__id"), "left_anti"),
-      sh = ix.sh.join(del, Seq("__id"), "left_anti"))
+    val del = tombstones.select(col("id").as("__id"))
+      .distinct().localCheckpoint(true)
+    Ingest.requireAllLive(del, ix.sh.select("__id"), "allPairsDelete",
+      "index")
+    ix.copy(pref = ix.pref.join(broadcast(del), Seq("__id"), "left_anti"),
+      sh = ix.sh.join(broadcast(del), Seq("__id"), "left_anti"))
   }
 
   /** Embedding near-dup pairs with cosine ≥ threshold — EXACT pairwise
@@ -2067,27 +2058,19 @@ object Dedup {
     */
   def gramStoreDelete(tombstones: DataFrame, store: GramStore,
       corpus: DataFrame, idCol: String, textCol: String): GramStore = {
-    val del = broadcast(tombstones
+    val del = tombstones
       .select(col("id").cast(LongType).as("__did")).distinct()
-      .localCheckpoint(true))
-    val matched = corpus
-      .select(col(idCol).cast(LongType).as("__did"))
-      .join(del, Seq("__did"), "left_semi")
-    val nDel = del.count()
-    if (matched.count() != nDel) {
-      val missing = del.collect().map(_.getLong(0)).toSet --
-        matched.collect().map(_.getLong(0)).toSet
-      throw new IllegalArgumentException(
-        s"gramStoreDelete: tombstone doc ${missing.head} is not in " +
-          "the live corpus — a silent no-op takedown hides upstream " +
-          "bookkeeping bugs")
-    }
+      .localCheckpoint(true)
+    Ingest.requireAllLive(del,
+      corpus.select(col(idCol).cast(LongType).as("__did")),
+      "gramStoreDelete", "live corpus")
     val surv = corpus.join(
-      del.select(col("__did").cast(LongType).as("__sid")),
+      broadcast(del).select(col("__did").cast(LongType).as("__sid")),
       col(idCol).cast(LongType) === col("__sid"), "left_anti")
     // affected grams: store rows whose owning doc (key div 1e9) died
     val aff = store.grams
-      .join(del, (col("__mk") / lit(1000000000L)).cast(LongType) ===
+      .join(broadcast(del),
+        (col("__mk") / lit(1000000000L)).cast(LongType) ===
         col("__did"), "left_semi")
       .select("__gk").localCheckpoint(true)
     // re-derived surviving minima, restricted to the affected grams

@@ -984,40 +984,19 @@ object Similarity {
     * the store (a silent no-op delete hides upstream bookkeeping
     * bugs — fail loudly, the ingest-guard discipline).
     */
-  /** Every tombstone id must be live — a silent no-op delete hides
-    * upstream bookkeeping bugs (the ingest-guard discipline). Probe
-    * shape: one broadcast SEMI join of the (batch-sized, already
-    * broadcast-tagged) tombstone set against a scan of the store's id
-    * column — the [[requireFreshIds]] cost class; an anti join with
-    * the tombstones on the left would instead shuffle the store's
-    * ids (the probe shape the r17 bench measured at +3.4 s).
-    */
-  private def requireAllLive(del: DataFrame, storeVecs: DataFrame,
-      op: String): Unit = {
-    val matched = storeVecs.select("id").join(del, Seq("id"),
-      "left_semi")
-    val nDel = del.count()
-    if (matched.count() != nDel) {
-      val missing = del.collect().map(_.getLong(0)).toSet --
-        matched.collect().map(_.getLong(0)).toSet
-      throw new IllegalArgumentException(
-        s"$op: tombstone id ${missing.head} is not in the store — a " +
-          "silent no-op delete hides upstream bookkeeping bugs")
-    }
-  }
-
   def blockedGraphDelete(tombstones: DataFrame,
       store: BlockedGraphStore): BlockedGraphStore = {
-    val del = broadcast(tombstones.select(col("id")).distinct()
-      .localCheckpoint(true))
-    requireAllLive(del, store.vecs, "blockedGraphDelete")
-    val vecs2 = store.vecs.join(del, Seq("id"), "left_anti")
+    val del = tombstones.select(col("id")).distinct()
+      .localCheckpoint(true)
+    Ingest.requireAllLive(del, store.vecs.select("id"),
+      "blockedGraphDelete", "store")
+    val vecs2 = store.vecs.join(broadcast(del), Seq("id"), "left_anti")
       .localCheckpoint(true)
     // affected = surviving qids with a deleted NEIGHBOR in their list
     val affected = store.top
-      .join(del, Seq("id"), "left_semi")         // neighbor deleted
+      .join(broadcast(del), Seq("id"), "left_semi") // neighbor deleted
       .select(col("qid").as("id")).distinct()
-      .join(del, Seq("id"), "left_anti")         // …and qid survives
+      .join(broadcast(del), Seq("id"), "left_anti") // …and qid survives
       .localCheckpoint(true)
     // unaffected surviving lists carry no deleted neighbor by
     // definition — dropping deleted and affected QIDs is the whole cut
@@ -1042,15 +1021,16 @@ object Similarity {
     */
   def knnGraphDelete(tombstones: DataFrame,
       store: KnnGraphStore): KnnGraphStore = {
-    val del = broadcast(tombstones.select(col("id")).distinct()
-      .localCheckpoint(true))
-    requireAllLive(del, store.vecs, "knnGraphDelete")
-    val vecs2 = store.vecs.join(del, Seq("id"), "left_anti")
+    val del = tombstones.select(col("id")).distinct()
+      .localCheckpoint(true)
+    Ingest.requireAllLive(del, store.vecs.select("id"),
+      "knnGraphDelete", "store")
+    val vecs2 = store.vecs.join(broadcast(del), Seq("id"), "left_anti")
       .repartition(store.tiles).localCheckpoint(true)
     val affected = store.top
-      .join(del, Seq("id"), "left_semi")
+      .join(broadcast(del), Seq("id"), "left_semi")
       .select(col("qid").as("id")).distinct()
-      .join(del, Seq("id"), "left_anti")
+      .join(broadcast(del), Seq("id"), "left_anti")
       .localCheckpoint(true)
     // unaffected surviving lists carry no deleted neighbor by
     // definition — dropping deleted and affected QIDs is the whole cut

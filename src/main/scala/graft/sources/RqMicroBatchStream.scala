@@ -23,7 +23,7 @@ final class RqMicroBatchStream(options: Map[String, String],
 
   private def listFiles(): Array[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(RqTableProvider.hadoopConf)
+    val fs = RqTableProvider.fileSystem(p)
     if (!fs.exists(p)) Array.empty
     else if (fs.getFileStatus(p).isDirectory)
       fs.listStatus(p).filter(_.isFile).map(_.getPath.toString)

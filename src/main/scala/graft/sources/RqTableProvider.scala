@@ -5,7 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -57,7 +57,9 @@ import graft.formats.{ByteOut, JsonCodec, MsgPackCodec, Value}
   * Hadoop configuration: the planner, readers, writers, truncate and
   * the micro-batch source all use one `Configuration` per JVM
   * ([[RqTableProvider.hadoopConf]]), not a new one per reader or
-  * writer.
+  * writer, and look filesystems up through
+  * [[RqTableProvider.fileSystem]], which serves `file:` paths from one
+  * fork-free local filesystem.
   */
 class RqTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "rq"
@@ -173,13 +175,21 @@ object RqTableProvider {
   }
 
   /** The one Hadoop `Configuration` of this JVM, for every
-    * `getFileSystem` of the planner, reader, writer, truncate and
-    * micro-batch source. Building one parses `core-default.xml` and
-    * searches the classpath for `core-site.xml`, so it is built once,
-    * not per reader and writer; it is only read after that, so tasks
-    * share it.
+    * filesystem lookup ([[fileSystem]]) of the planner, reader,
+    * writer, truncate and micro-batch source. Building one parses
+    * `core-default.xml` and searches the classpath for `core-site.xml`,
+    * so it is built once, not per reader and writer; it is only read
+    * after that, so tasks share it.
     */
   lazy val hadoopConf: Configuration = new Configuration()
+
+  /** The filesystem of `p`: the fork-free [[LocalFs.fs]] for `file:`
+    * paths (no `chmod` process per shard and `.crc` created), else
+    * `getFileSystem(hadoopConf)`.
+    */
+  def fileSystem(p: Path): FileSystem =
+    if (LocalFs.isLocal(p, hadoopConf)) LocalFs.fs
+    else p.getFileSystem(hadoopConf)
 
   /** Extension→codec mapping is static; share one factory instead of
     * paying a codec registry scan per partition reader (millions of
@@ -239,7 +249,7 @@ final class RqTable(properties: Map[String, String], binary: Boolean)
 
       override def planInputPartitions(): Array[InputPartition] = {
         val (path, fmt, o) = RqTableProvider.opts(merged)
-        val fs = new Path(path).getFileSystem(RqTableProvider.hadoopConf)
+        val fs = RqTableProvider.fileSystem(new Path(path))
         val files = {
           val p = new Path(path)
           if (fs.getFileStatus(p).isDirectory)
@@ -338,7 +348,7 @@ final class RqPartitionReader(part: RqInputPartition)
     extends PartitionReader[InternalRow] {
   private val stream: java.io.InputStream = {
     val p = new Path(part.file)
-    val raw = p.getFileSystem(RqTableProvider.hadoopConf).open(p)
+    val raw = RqTableProvider.fileSystem(p).open(p)
     if (part.end >= 0) {
       // frame-indexed split: seek to the record boundary and read
       // the window only (splits are never compressed — the planner
@@ -392,7 +402,7 @@ final class RqBatchWrite(options: Map[String, String], binary: Boolean,
       // between runs, leaving stale shards that double-read later.
       val (dir, _, _) = RqTableProvider.opts(options)
       val d = new Path(dir)
-      val fs = d.getFileSystem(RqTableProvider.hadoopConf)
+      val fs = RqTableProvider.fileSystem(d)
       // sweep data shards AND .rqx frame sidecars: a stale sidecar
       // surviving a truncate would split the NEXT run's same-named
       // shard at the OLD file's byte offsets (silent mid-record
@@ -467,8 +477,7 @@ final class RqDataWriter(options: Map[String, String], binary: Boolean,
     if (record.isNullAt(0))
       throw new InvalidRowException("rq sink: null `value` row")
     if (enc == null) {
-      val raw = tmpPath.getFileSystem(RqTableProvider.hadoopConf)
-        .create(tmpPath, true)
+      val raw = RqTableProvider.fileSystem(tmpPath).create(tmpPath, true)
       out = if (gzip) new java.util.zip.GZIPOutputStream(raw, 1 << 16)
         else raw
       enc = RqFormat.encoder(fmt, out, options)
@@ -488,7 +497,7 @@ final class RqDataWriter(options: Map[String, String], binary: Boolean,
       enc.finish()
       out.close() // closes the full wrapper chain incl. gzip trailer
       enc = null; out = null
-      val fs = finalPath.getFileSystem(RqTableProvider.hadoopConf)
+      val fs = RqTableProvider.fileSystem(finalPath)
       fs.delete(finalPath, false) // clear any stale shard, then move
       if (!fs.rename(tmpPath, finalPath))
         throw new java.io.IOException(
@@ -509,7 +518,7 @@ final class RqDataWriter(options: Map[String, String], binary: Boolean,
     // the temp must still be deleted and the ORIGINAL task failure
     // must stay visible, so swallow close errors here.
     try out.close() catch { case _: java.io.IOException => () }
-    tmpPath.getFileSystem(RqTableProvider.hadoopConf).delete(tmpPath, false)
+    RqTableProvider.fileSystem(tmpPath).delete(tmpPath, false)
   }
   override def close(): Unit = ()
 }

@@ -38,6 +38,16 @@ import graft.operators.{Dedup, Events, Ingest, LoopTuning, Quality,
   * durable deltas, committed-batch replay and compaction. Under each
   * store's arrival contract (monotone ids, or any order for the
   * order-free folds) any chunking equals the one-shot batch operator.
+  *
+  * Every stream query here starts under [[withForkFreeCheckpoints]].
+  * A micro-batch's fixed cost is mostly checkpoint file I/O: the
+  * offset and commit logs and, per state partition, the state-store
+  * files. Without libhadoop, Spark's default checkpoint manager and
+  * Hadoop's local filesystem fork a `readlink` per rename and a
+  * `chmod` per file or directory created, ~1,150 processes per qs31
+  * run. The scope installs [[ForkFreeCheckpointFileManager]] and a
+  * local filesystem that do the same I/O in process, so a batch costs
+  * its state delta rather than a fixed number of forks.
   */
 object Streams {
 
@@ -195,12 +205,14 @@ object Streams {
     withStatefulShufflePartitions(spark, 8) {
       val stream = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "2").parquet(inDir)
-      val q = viewPurchaseLeftJoin(stream)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckDir)
-        .format("parquet").option("path", sinkDir)
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      withForkFreeCheckpoints(spark) {
+        val q = viewPurchaseLeftJoin(stream)
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", ckDir)
+          .format("parquet").option("path", sinkDir)
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
     }
     spark.read.parquet(sinkDir)
       .where(col("user_id") >= 0) // drop the heartbeat rows
@@ -556,16 +568,18 @@ object Streams {
   private def fileStream(spark: SparkSession, deltaDir: String,
       schema: StructType, outDir: String)(
       onBatch: (DataFrame, Long) => Unit): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(deltaDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onBatch(batch, batchId); ()
-      }
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    withForkFreeCheckpoints(spark) {
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(deltaDir)
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          onBatch(batch, batchId); ()
+        }
+        .option("checkpointLocation", s"$outDir/_checkpoint")
+        .start()
+      try q.processAllAvailable()
+      finally q.stop()
+    }
   }
 
   /** One micro-batch's durable outputs in a store stream. Each is an
@@ -2198,7 +2212,9 @@ object Streams {
 
   /** Run `body` with the RocksDB state store provider configured
     * (changelog checkpointing on — incremental commits instead of
-    * full SST re-uploads), restoring the previous provider after.
+    * full SST re-uploads) and with fork-free checkpoint I/O
+    * ([[withForkFreeCheckpoints]]), restoring the previous provider
+    * after.
     */
   def withRocksDBStateStore[A](spark: SparkSession)(body: => A): A = {
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -2208,7 +2224,7 @@ object Streams {
     val prevC = spark.conf.getOption(ckey)
     spark.conf.set(key, RocksDBProvider)
     spark.conf.set(ckey, "true")
-    try body
+    try withForkFreeCheckpoints(spark)(body)
     finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
@@ -2221,6 +2237,35 @@ object Streams {
     }
   }
 
+  /** Run `body`, which runs stream queries, with fork-free local
+    * I/O (see the [[Streams]] scaladoc for why):
+    * [[ForkFreeCheckpointFileManager]] as the checkpoint file manager,
+    * and [[graft.sources.ForkFreeLocalFileSystem]] as the `file:`
+    * filesystem of the query's own Hadoop lookups (the state store's
+    * file uploads, the sinks' and `foreachBatch` writers). The latter
+    * is built per lookup (`fs.file.impl.disable.cache`): Hadoop's
+    * filesystem cache ignores the conf, so a cached instance would be
+    * the default one. Each key the user has set, in the session conf
+    * or the Hadoop conf, is left as it is. The scope must cover a
+    * query's whole run, not just `start()`: Spark builds a file
+    * source's log in the stream thread, after `start()` returns, with
+    * the conf of the session that read the source.
+    */
+  private[graft] def withForkFreeCheckpoints[A](spark: SparkSession)(
+      body: => A): A = {
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val installs = Seq(
+        "spark.sql.streaming.checkpointFileManagerClass" ->
+          classOf[ForkFreeCheckpointFileManager].getName,
+        "fs.file.impl" ->
+          classOf[graft.sources.ForkFreeLocalFileSystem].getName,
+        "fs.file.impl.disable.cache" -> "true")
+      .filter { case (k, _) => spark.conf.getOption(k).isEmpty &&
+        Option(hadoop.get(k)).forall(_.isEmpty) }
+    installs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally installs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   /** Run a streaming transform of the events table to completion via
     * the memory sink and return the result (used by parity tests; the
     * file-source → transform → sink wiring is the production shape).
@@ -2228,10 +2273,12 @@ object Streams {
   def runToMemory(spark: SparkSession, dir: String,
       transform: DataFrame => DataFrame, name: String,
       mode: String = "append"): DataFrame = {
-    val q = transform(eventsStream(spark, dir))
-      .writeStream.outputMode(mode).format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    withForkFreeCheckpoints(spark) {
+      val q = transform(eventsStream(spark, dir))
+        .writeStream.outputMode(mode).format("memory").queryName(name)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
     spark.table(name)
   }
 }

@@ -1127,6 +1127,80 @@ class StreamingSpec extends SparkSpec {
     assert(ex.getMessage.contains("not in the index"))
   }
 
+  test("takedowns hint the tombstones at their joins, not before the " +
+      "live guard: no HintErrorLogger WARN, and the takedown joins " +
+      "plan as BroadcastHashJoin (qs37 blocked graph, qs32 all-pairs)") {
+    import graft.operators.{Dedup, Similarity}
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val emb = graft.queries.T.t(spark, sf0001, "embeddings")
+    val vv = emb.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("v"))
+      .where(col("vec_id") < 250).localCheckpoint(true)
+    val cents = Similarity.kmeansCentroidsSeq(vv, "vec_id", "v", 8)
+    val gs = Similarity.prepareBlockedGraphStore(vv, "vec_id", "v",
+      cents, probe = 2, k = 6)
+    val docs = graft.queries.T.t(spark, sf0001, "documents")
+    val ix = Dedup.prepareAllPairsIndex(docs.where(col("doc_id") < 250),
+      "doc_id", "text", 0.5)
+    val hints = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("hint-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.contains("HintErrorLogger"))
+          hints.add(e.getMessage.getFormattedMessage)
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution,
+          d: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, org.apache.logging.log4j.Level.WARN, null)
+    ctx.updateLoggers()
+    spark.listenerManager.register(listener)
+    val (fromTakedowns, ix2) = try {
+      Similarity.blockedGraphDelete(Seq(2L, 10L, 200L).toDF("id"), gs)
+      val ix2 = Dedup.allPairsDelete(Seq(5L, 45L).toDF("id"), ix)
+      ix2.pref.count()
+      val n = hints.size
+      // control: a hint on no join does log
+      broadcast(spark.range(3).toDF()).count()
+      (n, ix2)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      root.removeAppender("hint-probe")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(hints.size > fromTakedowns,
+      "the log capture saw no hint WARN at all")
+    assert(fromTakedowns == 0, s"takedowns logged hint errors: $hints")
+    // every semi/anti join the takedowns ran, and the all-pairs
+    // index's lazy anti joins, plan as broadcast hash joins
+    val deadline = System.nanoTime() + 10000000000L
+    def semiAnti = (plans.toArray.map(_.toString) ++ Seq(
+        ix2.pref.queryExecution.executedPlan.toString,
+        ix2.sh.queryExecution.executedPlan.toString))
+      .flatMap(_.split("\n"))
+      .filter(l => l.contains("LeftSemi") || l.contains("LeftAnti"))
+    while (!semiAnti.exists(_.contains("LeftSemi")) &&
+        System.nanoTime() < deadline) Thread.sleep(100)
+    assert(semiAnti.exists(_.contains("LeftSemi")) &&
+      semiAnti.exists(_.contains("LeftAnti")), semiAnti.mkString("\n"))
+    assert(semiAnti.forall(_.contains("BroadcastHashJoin")),
+      semiAnti.filterNot(_.contains("BroadcastHashJoin")).mkString("\n"))
+  }
+
   test("crash inside the write→commit window: every store-stream " +
       "runner (qs8, qs10, qs19, qs20, qs32, qs34, qs35, qs37/38) " +
       "restarts from the committed store batches to the one-shot answer") {
@@ -1851,8 +1925,15 @@ class StreamingSpec extends SparkSpec {
       ("purchase", "view", 1L, 1L)), s"$got")
   }
 
-  test("QS26 fMGWS session automaton: crash mid-stream + restart on " +
-      "the same checkpoint == one-shot batch xe5 rollup") {
+  /** The QS26 crash/restart check: slices 0-3 stream and the query
+    * stops (the "crash"), slices 4-7 arrive and the query restarts on
+    * the same checkpoint; the answer must equal the one-shot batch xe5
+    * rollup. `first` and `second` name the checkpoint file manager of
+    * each run (None: the program's own, installed by
+    * `withRocksDBStateStore`).
+    */
+  private def qs26CrashRestart(first: Option[String],
+      second: Option[String]): Unit = {
     import graft.operators.Events
     val ev = graft.queries.T.t(spark, sf0001, "events")
     val base = java.nio.file.Files.createTempDirectory("qs26")
@@ -1872,21 +1953,25 @@ class StreamingSpec extends SparkSpec {
         java.nio.file.Files.copy(f.toPath, dst)
         dst.toFile.setLastModified(mt0 + i * 60000L)
       }
-    def runOnce(): Unit = Streams.withRocksDBStateStore(spark) {
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2").parquet(in.toString)
-      val q = Streams.sessionStatsTransform(stream).toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ck)
-        .format("parquet").option("path", sink).start()
-      try q.processAllAvailable() finally q.stop()
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    def runOnce(manager: Option[String]): Unit = {
+      manager.foreach(spark.conf.set(key, _))
+      try Streams.withRocksDBStateStore(spark) {
+        val stream = spark.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "2").parquet(in.toString)
+        val q = Streams.sessionStatsTransform(stream).toDF()
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", ck)
+          .format("parquet").option("path", sink).start()
+        try q.processAllAvailable() finally q.stop()
+      } finally manager.foreach(_ => spark.conf.unset(key))
     }
     deliver(slices.take(4).toSeq, 1700000000000L)
-    runOnce() // drains 2 batches, stops — the "crash"
+    runOnce(first) // drains 2 batches, stops — the "crash"
     val mid = Streams.sessionStatsFinal(spark.read.parquet(sink))
       .agg(sum("n_events")).head.getLong(0)
     deliver(slices.drop(4).toSeq, 1700000100000L)
-    runOnce() // restart: RocksDB state + source offsets resume
+    runOnce(second) // restart: RocksDB state + source offsets resume
     val got = Streams.sessionStatsFinal(spark.read.parquet(sink))
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -1897,6 +1982,20 @@ class StreamingSpec extends SparkSpec {
       s"crash was not mid-stream (saw $mid events before restart)")
     assert(got == want,
       "restarted automaton diverged from the one-shot batch rollup")
+  }
+
+  test("QS26 fMGWS session automaton: crash mid-stream + restart on " +
+      "the same checkpoint == one-shot batch xe5 rollup") {
+    qs26CrashRestart(None, None)
+  }
+
+  test("QS26 checkpoint written under Spark's default checkpoint " +
+      "manager restarts under the fork-free one, and vice versa, to " +
+      "the one-shot batch xe5 rollup") {
+    val sparkDefault = classOf[org.apache.spark.sql.execution.streaming
+      .checkpointing.FileContextBasedCheckpointFileManager].getName
+    qs26CrashRestart(Some(sparkDefault), None)
+    qs26CrashRestart(None, Some(sparkDefault))
   }
 
   test("QS31 transformWithState session automaton: crash mid-stream " +
