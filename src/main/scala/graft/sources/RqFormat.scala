@@ -252,7 +252,7 @@ object RqFormat {
         new RecordEncoder(out) {
           // OCF appends records block-by-block — inherently streaming
           private val writer = AvroCodec.openWriter(buf, schema, codec)
-          def write(v: Value): Unit = writer.append(AvroCodec.toAvro(v, schema))
+          def write(v: Value): Unit = writer.write(v)
           override def finish(): Unit = { writer.flush(); super.finish() }
         }
       case "protobuf" => ProtoWire.serializeUnsupported() // K11 parity

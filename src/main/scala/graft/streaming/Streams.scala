@@ -39,7 +39,8 @@ import graft.operators.{Dedup, Events, Ingest, LoopTuning, Quality,
   * store's arrival contract (monotone ids, or any order for the
   * order-free folds) any chunking equals the one-shot batch operator.
   *
-  * Every stream query here starts under [[withForkFreeCheckpoints]].
+  * Every stream query here starts under [[withForkFreeCheckpoints]],
+  * and so does the staging of its input slices.
   * A micro-batch's fixed cost is mostly checkpoint file I/O: the
   * offset and commit logs and, per state partition, the state-store
   * files. Without libhadoop, Spark's default checkpoint manager and
@@ -158,7 +159,7 @@ object Streams {
     */
   def runViewPurchaseLeftJoinStream(spark: SparkSession, ev: DataFrame,
       inDir: String, sinkDir: String, ckDir: String,
-      slices: Int = 8): DataFrame = {
+      slices: Int = 8): DataFrame = withForkFreeCheckpoints(spark) {
     val in = java.nio.file.Paths.get(inDir)
     ev.repartitionByRange(slices, col("ts"))
       .write.mode("overwrite").parquet(inDir)
@@ -205,14 +206,12 @@ object Streams {
     withStatefulShufflePartitions(spark, 8) {
       val stream = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "2").parquet(inDir)
-      withForkFreeCheckpoints(spark) {
-        val q = viewPurchaseLeftJoin(stream)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckDir)
-          .format("parquet").option("path", sinkDir)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      val q = viewPurchaseLeftJoin(stream)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckDir)
+        .format("parquet").option("path", sinkDir)
+        .start()
+      try q.processAllAvailable() finally q.stop()
     }
     spark.read.parquet(sinkDir)
       .where(col("user_id") >= 0) // drop the heartbeat rows
@@ -1759,7 +1758,7 @@ object Streams {
     */
   def runWordCountUpdateStream(spark: SparkSession, docs: DataFrame,
       inDir: String, outDir: String, bounds: Seq[Long],
-      minCount: Long = 10L): DataFrame = {
+      minCount: Long = 10L): DataFrame = withForkFreeCheckpoints(spark) {
     val in = java.nio.file.Paths.get(inDir)
     java.nio.file.Files.createDirectories(in)
     for ((slice, i) <- chunks(docs, "doc_id", bounds).zipWithIndex) {
@@ -2108,7 +2107,7 @@ object Streams {
   def runSessionStatsStreamTws(spark: SparkSession, ev: DataFrame,
       inDir: String, sinkDir: String, ckDir: String,
       gapUs: Long = 14400000000L, slices: Int = 8,
-      maxFilesPerTrigger: Int = 2): DataFrame = {
+      maxFilesPerTrigger: Int = 2): DataFrame = withForkFreeCheckpoints(spark) {
     ev.repartitionByRange(slices, col("ts"))
       .write.mode("overwrite").parquet(inDir)
     new java.io.File(inDir).listFiles
@@ -2143,7 +2142,7 @@ object Streams {
   def runSessionStatsStream(spark: SparkSession, ev: DataFrame,
       inDir: String, sinkDir: String, ckDir: String,
       gapUs: Long = 14400000000L, slices: Int = 8,
-      maxFilesPerTrigger: Int = 2): DataFrame = {
+      maxFilesPerTrigger: Int = 2): DataFrame = withForkFreeCheckpoints(spark) {
     ev.repartitionByRange(slices, col("ts"))
       .write.mode("overwrite").parquet(inDir)
     // modification-time stamping: FileStreamSource replays in mod-time

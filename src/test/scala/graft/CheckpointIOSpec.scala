@@ -182,6 +182,11 @@ class CheckpointIOSpec extends SparkSpec {
     val qs31Ck = qs31.filter { case (_, fr) => checkpointIO(fr) }
     assert(qs31Ck.isEmpty, s"qs31 checkpoint spawns: ${qs31Ck.size} " +
       s"of ${qs31.size}, first ${qs31Ck.headOption}")
+    // the input slices are staged inside the fork-free scope too
+    val staged = qs31.filter { case (cmd, _) =>
+      cmd.startsWith("chmod") && cmd.contains("graft_qs31_in") }
+    assert(staged.isEmpty, s"qs31 staging chmods: ${staged.size}, " +
+      s"first ${staged.headOption}")
     info(s"qs31 at sf0.001 spawned ${qs31.size} processes: " +
       qs31.groupBy(_._1.takeWhile(_ != ' ')).map { case (c, v) =>
         s"$c ${v.size}" }.mkString(", "))

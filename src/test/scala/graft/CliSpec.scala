@@ -2,11 +2,13 @@ package graft
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Cli.{CliError, Options, ProtobufAdd}
+import graft.formats.{AvroCodec, JsonCodec, Value}
+import graft.sources.RqFormat
 
 /** CLI parity tests: a direct port of the reference's ~27 clap parse
   * tests (rq.rs:465-652) onto [[Cli.parse]] (argv without the binary
@@ -383,5 +385,96 @@ class CliSpec extends AnyFunSuite {
       "protobuf")
     assert(Cli.outputFormat(Options(outputCbor = true,
       outputCsv = true), ttyOut = false)._1 == "cbor")
+  }
+
+  test("graft.Cli runs on a classpath of the program, scala-library, " +
+      "snakeyaml and aircompressor only: every input format into JSON, " +
+      "every output format from JSON, avro with each codec, as Cli.run") {
+    val sep = java.io.File.pathSeparator
+    val cp = System.getProperty("java.class.path").split(sep).filter { p =>
+      val f = new java.io.File(p)
+      val n = f.getName
+      (f.isDirectory && n == "classes") || n.startsWith("scala-library-") ||
+        n.matches("snakeyaml-[0-9].*\\.jar") || n.startsWith("aircompressor-")
+    }.distinctBy(p => new java.io.File(p).getName)
+    assert(cp.length == 4, s"classpath entries found: ${cp.mkString(sep)}")
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java")
+    val sysDir = Files.createTempDirectory("graft-cli-min")
+    val proto = sysDir.resolve("person.proto")
+    Files.writeString(proto, """syntax = "proto2";
+      |package example;
+      |message Person { optional string name = 1; optional int32 age = 2; }
+      |""".stripMargin)
+    System.setProperty("graft.system.dir", sysDir.toString)
+    try {
+      Cli.run(Cli.parse(Seq("protobuf", "add", proto.toString)),
+        new ByteArrayInputStream(Array.emptyByteArray),
+        new ByteArrayOutputStream())
+
+      def minimal(args: Seq[String], in: Array[Byte]): Array[Byte] = {
+        val p = new ProcessBuilder((Seq(javaBin.toString, "-Xmx256m",
+          s"-Dgraft.system.dir=$sysDir", "-cp", cp.mkString(sep),
+          "graft.Cli", "-q") ++ args): _*).start()
+        p.getOutputStream.write(in)
+        p.getOutputStream.close()
+        val out = p.getInputStream.readAllBytes()
+        val err = new String(p.getErrorStream.readAllBytes(), UTF_8)
+        assert(p.waitFor() == 0, s"rq ${args.mkString(" ")} failed: $err")
+        out
+      }
+      def inProcess(args: Seq[String], in: Array[Byte]): Array[Byte] =
+        pipe(Cli.parse(args), in)
+
+      val schema = sysDir.resolve("r.avsc")
+      Files.writeString(schema, """{"type":"record","name":"R","fields":[
+        |{"name":"a","type":"long"},{"name":"b","type":["null","string"]},
+        |{"name":"m","type":{"type":"map","values":"double"}}]}""".stripMargin)
+      val recs = (1 to 3).map(i => Value.obj("a" -> Value.I64(i),
+        "b" -> Value.Str("x" * i),
+        "m" -> Value.obj("z" -> Value.F64(i), "y" -> Value.F64(-i))))
+      val json = recs.map(JsonCodec.emit).mkString("\n").getBytes(UTF_8)
+      def encoded(fmt: String): Array[Byte] = {
+        val o = new ByteArrayOutputStream()
+        RqFormat.encode(fmt, recs.iterator, o)
+        o.toByteArray
+      }
+      def avro(codec: String): Array[Byte] = AvroCodec.writeStream(recs,
+        AvroCodec.parseSchema(Files.readString(schema)), codec)
+      val inputs = Seq(
+        Seq("-j") -> json,
+        Seq("-v") -> "a,b\n\"c,d\",e\n".getBytes(UTF_8),
+        Seq("-m") -> encoded("msgpack"),
+        Seq("-c") -> encoded("cbor"),
+        Seq("-t") -> "a = 1\n[t]\nb = \"x\"\n".getBytes(UTF_8),
+        Seq("-y") -> "a: 1\nb: [x, 2.5, null]\n".getBytes(UTF_8),
+        Seq("-r") -> "line one\nline two\n".getBytes(UTF_8),
+        Seq("-p", ".example.Person") ->
+          Array[Byte](0x0a, 0x04, 'J', 'o', 'h', 'n', 0x10, 34),
+        Seq("-a") -> avro("null"), Seq("-a") -> avro("deflate"),
+        Seq("-a") -> avro("snappy"))
+      for ((flags, in) <- inputs) {
+        val args = flags :+ "-J"
+        val got = minimal(args, in)
+        assert(got.nonEmpty && got.sameElements(inProcess(args, in)),
+          s"rq ${args.mkString(" ")}")
+      }
+      val outputs = Seq(Seq("-J"), Seq("-C"), Seq("-M"), Seq("-Y"))
+        .map(_ -> json) ++ Seq(
+        Seq("-T") -> "{\"a\":1,\"t\":{\"b\":\"x\"}}".getBytes(UTF_8),
+        Seq("-R") -> "\"one\" \"two\"".getBytes(UTF_8),
+        Seq("-V") -> "[\"a\",1] [\"b\",2.5]".getBytes(UTF_8))
+      for ((flags, in) <- outputs) {
+        val args = "-j" +: flags
+        assert(minimal(args, in).sameElements(inProcess(args, in)),
+          s"rq ${args.mkString(" ")}")
+      }
+      // an OCF's sync marker is random: compare the records it holds
+      for (codec <- Seq("null", "deflate", "snappy")) {
+        val args = Seq("-j", "-A", schema.toString, "--codec", codec)
+        val got = AvroCodec.readStream(minimal(args, json))
+        assert(got == recs && got == AvroCodec.readStream(
+          inProcess(args, json)), s"rq ${args.mkString(" ")}")
+      }
+    } finally System.clearProperty("graft.system.dir")
   }
 }
