@@ -90,6 +90,98 @@ object Bench {
     }
   }
 
+  /** A physical plan's text with what varies between JVMs and runs
+    * normalized away: expression ids, lambda-variable suffixes, closure
+    * addresses, temp paths, plan and exchange ids, file listings, and
+    * the order of distinct-aggregate groups ([[sortDistinctGroups]]).
+    */
+  private[graft] def planText(plan: String): String =
+    sortDistinctGroups(plan
+      .replaceAll("#\\d+", "#x")
+      // lambda variable names in higher-order functions carry a
+      // SESSION-GLOBAL fresh counter (x_25, y_27, ...) — the id
+      // depends on how many lambdas earlier entries resolved, so
+      // without this an entry's fp changes with its position in
+      // the session (the r10/r11 "fp drift with untouched source";
+      // VERDICT r11 #6). Strip the numeric suffix; a real column
+      // named like_9 coarsens to like#x, which stays deterministic.
+      .replaceAll("([A-Za-z])_\\d+#x", "$1#x")
+      // typed-API nodes (MapPartitions/MapGroups/AppendColumns)
+      // print the closure OBJECT: JVM-global lambda index, hidden-
+      // class address, and identity hashCode — all per-JVM noise
+      // (the 14-entry fp drift between the two r12 quiet sessions)
+      .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-f]+@[0-9a-f]+",
+        "\\$\\$Lambda")
+      .replaceAll("\\$\\$Lambda/0x[0-9a-f]+@[0-9a-f]+", "\\$\\$Lambda")
+      // codec entries construct per-run temp inputs; the BatchScan
+      // node prints the random temp path (qc3/qc7 fp drift)
+      .replaceAll("/tmp/[^\\s)\\],]*", "/tmp/X")
+      .replaceAll("\\[plan_id=\\d+\\]", "")
+      .replaceAll("\\[id=#?\\d+\\]", "")
+      .replaceAll("(?m)^.*(Location|InMemoryFileIndex).*$", ""))
+
+  /** `RewriteDistinctAggregates` plans two or more `COUNT(DISTINCT …)`
+    * groups as one `Expand` with a projection per group, tagged by a
+    * `gid` literal, and orders the groups by a hash over expression ids,
+    * which depend on everything the JVM planned before. This sorts each
+    * such `Expand`'s projections by their text with the tag masked,
+    * hands out the tags in that order, and rewrites the `gid#x = n`
+    * filters of the aggregates above it (the lines between it and the
+    * previous such `Expand`) to match.
+    */
+  private[graft] def sortDistinctGroups(plan: String): String = {
+    val lines = plan.split("\n", -1)
+    var above = 0 // first line of the aggregates above the next Expand
+    for (li <- lines.indices) {
+      val line = lines(li)
+      val at = line.indexOf("Expand [[")
+      if (at >= 0) {
+        splitTop(line.substring(at + "Expand ".length)) match {
+          case Seq(projs, output) =>
+            val gid = splitTop(output.drop(1).dropRight(1)).indexOf("gid#x")
+            val cells = splitTop(projs.drop(1).dropRight(1))
+              .map(p => splitTop(p.drop(1).dropRight(1)))
+            if (gid >= 0 && cells.forall(_.length > gid)) {
+              val masked = cells.map(_.updated(gid, "").mkString(", "))
+              val order = cells.indices.sortBy(masked)
+              val tags = cells.map(_(gid)).sortBy(t => (t.length, t))
+              val remap = order.zip(tags).map { case (k, t) =>
+                cells(k)(gid) -> t }.toMap
+              val sorted = order.zip(tags).map { case (k, t) =>
+                cells(k).updated(gid, t).mkString("[", ", ", "]") }
+              lines(li) = line.substring(0, at) + "Expand " +
+                sorted.mkString("[", ", ", "]") + ", " + output
+              for (k <- above until li)
+                lines(k) = GidFilter.replaceAllIn(lines(k), m =>
+                  java.util.regex.Matcher.quoteReplacement(
+                    m.group(1) + remap.getOrElse(m.group(2), m.group(2))))
+            }
+          case _ =>
+        }
+        above = li + 1
+      }
+    }
+    lines.mkString("\n")
+  }
+
+  private val GidFilter = "(gid#x = )(\\d+)".r
+
+  /** `s` split at its commas outside brackets and parentheses. */
+  private def splitTop(s: String): Vector[String] = {
+    val parts = Vector.newBuilder[String]
+    var depth = 0
+    var from = 0
+    for (i <- s.indices) s.charAt(i) match {
+      case '[' | '(' => depth += 1
+      case ']' | ')' => depth -= 1
+      case ',' if depth == 0 =>
+        parts += s.substring(from, i).trim
+        from = i + 1
+      case _ =>
+    }
+    (parts += s.substring(from).trim).result()
+  }
+
   /** Stdout headline subset + the reverse-order second-pass set. */
   private val benchHeadliners = Seq("q01_project", "q09_agg_having",
     "q14_frame_running", "q16_topk", "q29_star", "q31_tpch_q3",
@@ -226,29 +318,7 @@ object Bench {
     var dumpPlanName: String = ""
     def planFingerprint(df: org.apache.spark.sql.DataFrame): String =
       try {
-        val p = df.queryExecution.executedPlan.toString
-          .replaceAll("#\\d+", "#x")
-          // lambda variable names in higher-order functions carry a
-          // SESSION-GLOBAL fresh counter (x_25, y_27, ...) — the id
-          // depends on how many lambdas earlier entries resolved, so
-          // without this an entry's fp changes with its position in
-          // the session (the r10/r11 "fp drift with untouched source";
-          // VERDICT r11 #6). Strip the numeric suffix; a real column
-          // named like_9 coarsens to like#x, which stays deterministic.
-          .replaceAll("([A-Za-z])_\\d+#x", "$1#x")
-          // typed-API nodes (MapPartitions/MapGroups/AppendColumns)
-          // print the closure OBJECT: JVM-global lambda index, hidden-
-          // class address, and identity hashCode — all per-JVM noise
-          // (the 14-entry fp drift between the two r12 quiet sessions)
-          .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-f]+@[0-9a-f]+",
-            "\\$\\$Lambda")
-          .replaceAll("\\$\\$Lambda/0x[0-9a-f]+@[0-9a-f]+", "\\$\\$Lambda")
-          // codec entries construct per-run temp inputs; the BatchScan
-          // node prints the random temp path (qc3/qc7 fp drift)
-          .replaceAll("/tmp/[^\\s)\\],]*", "/tmp/X")
-          .replaceAll("\\[plan_id=\\d+\\]", "")
-          .replaceAll("\\[id=#?\\d+\\]", "")
-          .replaceAll("(?m)^.*(Location|InMemoryFileIndex).*$", "")
+        val p = planText(df.queryExecution.executedPlan.toString)
         sys.env.get("SPARK_GRAFT_DUMP_PLANS").foreach { dir =>
           val d = java.nio.file.Paths.get(dir)
           java.nio.file.Files.createDirectories(d)

@@ -16,8 +16,9 @@ final class RqEngine(val spark: SparkSession) {
   private val providerClass = classOf[RqTableProvider].getName
 
   /** Record-stream read: one row per record, `value: STRING` holding
-    * canonical JSON (formats: json, csv, msgpack, cbor, toml, yaml,
-    * raw, avro, protobuf — SURVEY §2.1). This is the public row form;
+    * canonical JSON, written as UTF-8 straight into the row (formats:
+    * json, csv, msgpack, cbor, toml, yaml, raw, avro, protobuf — SURVEY
+    * §2.1). This is the public row form;
     * [[run]] reads the binary one instead (see [[RqTableProvider]]).
     */
   def read(format: String, path: String,
@@ -73,8 +74,11 @@ final class RqEngine(val spark: SparkSession) {
   /** The reference's whole program (§2.3): identity map from one
     * format/path to another. Records cross the row boundary as the
     * binary row, msgpack of `JsonCodec.normalize(v)`, instead of JSON
-    * text: no JSON emit and parse per record, and a msgpack sink copies
-    * the row bytes. The output is byte-identical to
+    * text: the reader encodes each decoded record in one pass, with no
+    * JSON emit and parse and no normalized copy of the record; a
+    * msgpack sink copies the row bytes and a JSON sink transcodes them
+    * straight to JSON bytes, neither building a record. The output is
+    * byte-identical to
     * `write(outFormat, read(inFormat, inPath, options), outPath,
     * options)`, since `normalize` yields exactly the values the JSON
     * text parses back to.

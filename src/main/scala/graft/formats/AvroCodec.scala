@@ -91,8 +91,6 @@ object AvroCodec {
     * invalid name, a nested or duplicate union branch.
     */
   def parseSchema(json: String): Schema = {
-    if (nesting(json) > MaxDepth)
-      throw schemaError(s"nested deeper than $MaxDepth levels")
     val doc =
       try JsonCodec.parse(json)
       catch { case NonFatal(e) => throw schemaError(e.getMessage) }
@@ -101,29 +99,6 @@ object AvroCodec {
 
   private def schemaError(msg: String) =
     new IllegalArgumentException(s"avro schema: $msg")
-
-  /** Deepest `[`/`{` nesting of JSON text outside its strings, checked
-    * before the recursive parse sees a (hostile) header schema.
-    */
-  private def nesting(json: String): Int = {
-    var depth = 0
-    var deepest = 0
-    var inString = false
-    var i = 0
-    while (i < json.length) {
-      val c = json.charAt(i)
-      if (inString) {
-        if (c == '\\') i += 1
-        else if (c == '"') inString = false
-      } else if (c == '"') inString = true
-      else if (c == '[' || c == '{') {
-        depth += 1
-        deepest = math.max(deepest, depth)
-      } else if (c == ']' || c == '}') depth -= 1
-      i += 1
-    }
-    deepest
-  }
 
   private final class SchemaParser {
     private val names = scala.collection.mutable.HashMap[String, Type]()
@@ -623,15 +598,7 @@ object AvroCodec {
       * block as it was.
       */
     def write(v: Value): Unit = {
-      val mark = block.position.toInt
-      try encode(v, schema.root, block, 0)
-      catch {
-        case NonFatal(e) =>
-          val kept = java.util.Arrays.copyOf(block.toByteArray, mark)
-          block.reset()
-          block.write(kept)
-          throw e
-      }
+      block.record(encode(v, schema.root, block, 0))
       count += 1
       if (block.position >= SyncInterval) writeBlock()
     }

@@ -114,8 +114,7 @@ object CborCodec {
         else Value.Bytes(in.bytes(len(in, info)))
       case 3 =>
         if (info == 31) indefText(in)
-        else Value.Str(
-          new String(in.bytes(len(in, info)), StandardCharsets.UTF_8))
+        else Value.Str(in.utf8(len(in, info)))
       case 4 =>
         if (info == 31) {
           var items = Vector.empty[Value]
@@ -157,7 +156,7 @@ object CborCodec {
   }
 
   def decodeStream(bytes: Array[Byte], typed: Boolean = false): Vector[Value] =
-    decodeIterator(ByteIn(ByteBuffer.wrap(bytes)), typed).toVector
+    decodeIterator(ByteIn(bytes), typed).toVector
 
   /** Incremental decode from an open stream: one item in flight,
     * constant memory regardless of input size (cbor.rs:18-25).

@@ -16,6 +16,8 @@ import java.nio.charset.StandardCharsets
   */
 object MsgPackCodec {
 
+  import AvroCodec.MaxDepth
+
   // ---- encode ----
 
   def encode(v: Value): Array[Byte] = {
@@ -61,29 +63,90 @@ object MsgPackCodec {
     case Value.U32(x) => writeUnsigned(x, out)
     case Value.F32(f) => out.write(0xca); out.writeFloat(f)
     case Value.Chr(c) => write(Value.Str(c.toString), out) // serde char
-    case Value.Str(s) =>
-      val b = s.getBytes(StandardCharsets.UTF_8)
-      if (b.length < 32) out.write(0xa0 | b.length)
-      else if (b.length < 256) { out.write(0xd9); out.write(b.length) }
-      else if (b.length < 65536) { out.write(0xda); out.writeShort(b.length) }
-      else { out.write(0xdb); out.writeInt(b.length) }
-      out.write(b)
+    case Value.Str(s) => writeStr(s, out)
     case Value.Bytes(b) =>
       if (b.length < 256) { out.write(0xc4); out.write(b.length) }
       else if (b.length < 65536) { out.write(0xc5); out.writeShort(b.length) }
       else { out.write(0xc6); out.writeInt(b.length) }
       out.write(b)
     case Value.Seq(vs) =>
-      if (vs.length < 16) out.write(0x90 | vs.length)
-      else if (vs.length < 65536) { out.write(0xdc); out.writeShort(vs.length) }
-      else { out.write(0xdd); out.writeInt(vs.length) }
+      arrayHeader(vs.length, out)
       vs.foreach(write(_, out))
     case Value.Map(kvs) =>
-      if (kvs.length < 16) out.write(0x80 | kvs.length)
-      else if (kvs.length < 65536) { out.write(0xde); out.writeShort(kvs.length) }
-      else { out.write(0xdf); out.writeInt(kvs.length) }
+      mapHeader(kvs.length, out)
       kvs.foreach { case (k, e) => write(k, out); write(e, out) }
   }
+
+  private def writeStr(s: String, out: ByteOut): Unit = {
+    val b = s.getBytes(StandardCharsets.UTF_8)
+    strHeader(b.length, out)
+    out.write(b)
+  }
+
+  private def strHeader(n: Int, out: ByteOut): Unit =
+    if (n < 32) out.write(0xa0 | n)
+    else if (n < 256) { out.write(0xd9); out.write(n) }
+    else if (n < 65536) { out.write(0xda); out.writeShort(n) }
+    else { out.write(0xdb); out.writeInt(n) }
+
+  private def arrayHeader(n: Int, out: ByteOut): Unit =
+    if (n < 16) out.write(0x90 | n)
+    else if (n < 65536) { out.write(0xdc); out.writeShort(n) }
+    else { out.write(0xdd); out.writeInt(n) }
+
+  private def mapHeader(n: Int, out: ByteOut): Unit =
+    if (n < 16) out.write(0x80 | n)
+    else if (n < 65536) { out.write(0xde); out.writeShort(n) }
+    else { out.write(0xdf); out.writeInt(n) }
+
+  /** Writes `encode(JsonCodec.normalize(v))` to `out` without building
+    * `normalize(v)`: the binary record row ([[isRowValue]]) in one pass
+    * over `v`. Fails past [[AvroCodec.MaxDepth]] nesting levels.
+    */
+  def encodeNormalized(v: Value, out: ByteOut): Unit =
+    writeNormalized(v, out, 0)
+
+  private def writeNormalized(v: Value, out: ByteOut, depth: Int): Unit =
+    v match {
+      case Value.F64(d) =>
+        if (d.isNaN || d.isInfinite) out.write(0xc0)
+        else { out.write(0xcb); out.writeDouble(d + 0.0) } // −0.0 → 0.0
+      case _: Value.F32 => write(JsonCodec.normalize(v), out)
+      case Value.Bytes(b) => // a sequence of numbers, one level deeper
+        if (depth >= MaxDepth) throw tooDeep(s"output byte ${out.position}")
+        arrayHeader(b.length, out)
+        var i = 0
+        while (i < b.length) { writeUnsigned(b(i) & 0xffL, out); i += 1 }
+      case Value.Seq(vs) =>
+        if (depth >= MaxDepth) throw tooDeep(s"output byte ${out.position}")
+        arrayHeader(vs.length, out)
+        val it = vs.iterator
+        while (it.hasNext) writeNormalized(it.next(), out, depth + 1)
+      case Value.Map(kvs) =>
+        if (depth >= MaxDepth) throw tooDeep(s"output byte ${out.position}")
+        mapHeader(kvs.length, out)
+        val it = kvs.iterator
+        while (it.hasNext) {
+          val (k, e) = it.next()
+          k match {
+            case Value.Str(s) => writeStr(s, out)
+            case other =>
+              val text = ByteOut()
+              JsonCodec.emitTo(other, text, depth + 1)
+              val b = text.toByteArray
+              strHeader(b.length, out)
+              out.write(b)
+          }
+          writeNormalized(e, out, depth + 1)
+        }
+      // the rest encode as their normalized form does: tagged integers
+      // and U64 below 2⁶³ minimal-width like I64, Chr as its string,
+      // strings with `?` for a lone surrogate
+      case _ => write(v, out)
+    }
+
+  private def tooDeep(where: String) = new IllegalArgumentException(
+    s"msgpack: nested deeper than $MaxDepth levels at $where")
 
   private def writeUnsigned(n: Long, out: ByteOut): Unit = {
     if (n < 128) out.write(n.toInt)
@@ -102,10 +165,17 @@ object MsgPackCodec {
     * mod.rs:185-372). Default false: the proven minimal-width
     * collapse, byte-for-byte unchanged.
     */
-  def decode(buf: ByteBuffer, typed: Boolean = false): Value =
-    decode(ByteIn(buf), typed)
+  def decode(buf: ByteBuffer, typed: Boolean = false): Value = {
+    val in = ByteIn(buf)
+    val v = decode(in, typed, 0)
+    buf.position(buf.position() + in.position.toInt)
+    v
+  }
 
-  private[formats] def decode(in: ByteIn, typed: Boolean): Value = {
+  /** One value whose containers sit `depth` levels deep; a container
+    * past [[AvroCodec.MaxDepth]] levels fails typed, naming its offset.
+    */
+  private def decode(in: ByteIn, typed: Boolean, depth: Int): Value = {
     val m = in.u8()
     m match {
       case 0xc0 => Value.Unit
@@ -150,12 +220,12 @@ object MsgPackCodec {
       case 0xc4 => bin(in, in.u8())
       case 0xc5 => bin(in, in.s16() & 0xffff)
       case 0xc6 => bin(in, len32(in))
-      case b if b >= 0x90 && b < 0xa0 => arr(in, b & 0x0f, typed)
-      case 0xdc => arr(in, in.s16() & 0xffff, typed)
-      case 0xdd => arr(in, len32(in), typed)
-      case b if b >= 0x80 && b < 0x90 => map(in, b & 0x0f, typed)
-      case 0xde => map(in, in.s16() & 0xffff, typed)
-      case 0xdf => map(in, len32(in), typed)
+      case b if b >= 0x90 && b < 0xa0 => arr(in, b & 0x0f, typed, depth)
+      case 0xdc => arr(in, in.s16() & 0xffff, typed, depth)
+      case 0xdd => arr(in, len32(in), typed, depth)
+      case b if b >= 0x80 && b < 0x90 => map(in, b & 0x0f, typed, depth)
+      case 0xde => map(in, in.s16() & 0xffff, typed, depth)
+      case 0xdf => map(in, len32(in), typed, depth)
       // ext → Bytes, type tag dropped (messagepack.rs:82)
       case 0xd4 => extBytes(in, 1)
       case 0xd5 => extBytes(in, 2)
@@ -175,7 +245,7 @@ object MsgPackCodec {
     * (reference EOF classification, messagepack.rs:45-47).
     */
   def decodeStream(bytes: Array[Byte], typed: Boolean = false): Vector[Value] =
-    decodeIterator(ByteIn(ByteBuffer.wrap(bytes)), typed).toVector
+    decodeIterator(ByteIn(bytes), typed).toVector
 
   /** Incremental decode from an open stream: one record in flight,
     * constant memory regardless of input size (messagepack.rs:40-51).
@@ -187,7 +257,7 @@ object MsgPackCodec {
   private def decodeIterator(bi: ByteIn, typed: Boolean): Iterator[Value] =
     new Iterator[Value] {
       def hasNext: Boolean = !bi.atEnd()
-      def next(): Value = decode(bi, typed)
+      def next(): Value = decode(bi, typed, 0)
     }
 
   /** A 32-bit length or count header, which msgpack defines as
@@ -301,15 +371,137 @@ object MsgPackCodec {
     true
   }
 
-  private def str(in: ByteIn, n: Int): Value =
-    Value.Str(new String(in.bytes(n), StandardCharsets.UTF_8))
+  private def str(in: ByteIn, n: Int): Value = Value.Str(in.utf8(n))
   private def bin(in: ByteIn, n: Int): Value = Value.Bytes(in.bytes(n))
   private def extBytes(in: ByteIn, n: Int): Value = {
     in.u8() // ext type tag, dropped
     bin(in, n)
   }
-  private def arr(in: ByteIn, n: Int, typed: Boolean): Value =
-    Value.Seq(Vector.fill(n)(decode(in, typed)))
-  private def map(in: ByteIn, n: Int, typed: Boolean): Value =
-    Value.Map(Vector.fill(n)((decode(in, typed), decode(in, typed))))
+  private def nested(in: ByteIn, depth: Int): Unit =
+    if (depth >= MaxDepth) throw tooDeep(s"byte ${in.position - 1}")
+  private def arr(in: ByteIn, n: Int, typed: Boolean, depth: Int): Value = {
+    nested(in, depth)
+    val b = Vector.newBuilder[Value]
+    var k = 0
+    while (k < n) { b += decode(in, typed, depth + 1); k += 1 }
+    Value.Seq(b.result())
+  }
+  private def map(in: ByteIn, n: Int, typed: Boolean, depth: Int): Value = {
+    nested(in, depth)
+    val b = Vector.newBuilder[(Value, Value)]
+    var k = 0
+    while (k < n) {
+      val key = decode(in, typed, depth + 1)
+      b += ((key, decode(in, typed, depth + 1)))
+      k += 1
+    }
+    Value.Map(b.result())
+  }
+
+  /** Writes the compact JSON of the value a binary row holds,
+    * `JsonCodec.emitTo(decode(row), out)`, straight from the row bytes.
+    * The row must pass [[isRowValue]]. Fails past [[AvroCodec.MaxDepth]]
+    * nesting levels.
+    */
+  def rowToJson(row: Array[Byte], out: ByteOut): Unit = rowJson(row, 0, out, 0)
+
+  /** Big-endian unsigned `width` bytes of `r` from `at`. */
+  private def be(r: Array[Byte], at: Int, width: Int): Long = {
+    var v = 0L
+    var k = 0
+    while (k < width) { v = v << 8 | (r(at + k) & 0xff); k += 1 }
+    v
+  }
+
+  /** The JSON of the row value at `at`, its containers `depth` levels
+    * deep; returns the offset after it.
+    */
+  private def rowJson(r: Array[Byte], at: Int, out: ByteOut,
+      depth: Int): Int = {
+    val m = r(at) & 0xff
+    val p = at + 1
+    if (m < 0x80) { out.writeDecimal(m); p }
+    else if (m >= 0xe0) { out.writeDecimal(m - 256); p }
+    else if (m >= 0xa0 && m < 0xc0) rowStr(r, p, m & 0x1f, out) // fixstr
+    else if (m < 0x90) rowMap(r, p, m & 0x0f, out, depth) // fixmap
+    else if (m < 0xa0) rowArr(r, p, m & 0x0f, out, depth) // fixarray
+    else m match {
+      case 0xc0 => out.write(JsonCodec.Null); p
+      case 0xc2 => out.write(JsonCodec.False); p
+      case 0xc3 => out.write(JsonCodec.True); p
+      case 0xcc | 0xcd | 0xce =>
+        val w = 1 << (m - 0xcc)
+        out.writeDecimal(be(r, p, w)); p + w
+      case 0xcf =>
+        val v = be(r, p, 8)
+        if (v >= 0) out.writeDecimal(v)
+        else out.write(java.lang.Long.toUnsignedString(v)
+          .getBytes(StandardCharsets.UTF_8))
+        p + 8
+      case 0xd0 => out.writeDecimal(r(p).toLong); p + 1
+      case 0xd1 => out.writeDecimal(be(r, p, 2).toShort.toLong); p + 2
+      case 0xd2 => out.writeDecimal(be(r, p, 4).toInt.toLong); p + 4
+      case 0xd3 => out.writeDecimal(be(r, p, 8)); p + 8
+      case 0xcb =>
+        JsonCodec.emitDouble(java.lang.Double.longBitsToDouble(be(r, p, 8)), out)
+        p + 8
+      case 0xd9 => rowStr(r, p + 1, be(r, p, 1).toInt, out)
+      case 0xda => rowStr(r, p + 2, be(r, p, 2).toInt, out)
+      case 0xdb => rowStr(r, p + 4, be(r, p, 4).toInt, out)
+      case 0xdc => rowArr(r, p + 2, be(r, p, 2).toInt, out, depth)
+      case 0xdd => rowArr(r, p + 4, be(r, p, 4).toInt, out, depth)
+      case 0xde => rowMap(r, p + 2, be(r, p, 2).toInt, out, depth)
+      case 0xdf => rowMap(r, p + 4, be(r, p, 4).toInt, out, depth)
+      case other => throw new IllegalArgumentException(
+        f"msgpack: marker 0x$other%02x at byte $at is not in the row form")
+    }
+  }
+
+  private def rowStr(r: Array[Byte], at: Int, n: Int, out: ByteOut): Int = {
+    JsonCodec.emitUtf8String(r, at, n, out)
+    at + n
+  }
+
+  private def rowNested(at: Int, depth: Int): Unit =
+    if (depth >= MaxDepth) throw tooDeep(s"byte ${at - 1} of the row")
+
+  private def rowArr(r: Array[Byte], at: Int, n: Int, out: ByteOut,
+      depth: Int): Int = {
+    rowNested(at, depth)
+    out.write('[')
+    var p = at
+    var k = 0
+    while (k < n) {
+      if (k > 0) out.write(',')
+      p = rowJson(r, p, out, depth + 1)
+      k += 1
+    }
+    out.write(']')
+    p
+  }
+
+  private def rowMap(r: Array[Byte], at: Int, n: Int, out: ByteOut,
+      depth: Int): Int = {
+    rowNested(at, depth)
+    out.write('{')
+    var p = at
+    var k = 0
+    while (k < n) {
+      if (k > 0) out.write(',')
+      val m = r(p) & 0xff
+      if ((m >= 0xa0 && m < 0xc0) || (m >= 0xd9 && m <= 0xdb))
+        p = rowJson(r, p, out, depth + 1)
+      else { // a non-string key prints as the string of its JSON
+        val text = ByteOut()
+        p = rowJson(r, p, text, depth + 1)
+        val b = text.toByteArray
+        JsonCodec.emitUtf8String(b, 0, b.length, out)
+      }
+      out.write(':')
+      p = rowJson(r, p, out, depth + 1)
+      k += 1
+    }
+    out.write('}')
+    p
+  }
 }

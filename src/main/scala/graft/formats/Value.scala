@@ -108,19 +108,39 @@ object Value {
 /** JSON parse/emit for Value — the engine's canonical text form
   * (reference: JSON is the default source and sink, rq.rs:196-207,216).
   *
+  * Both directions work on UTF-8 bytes, as serde_json's
+  * `StreamDeserializer` and `CompactFormatter` do (json.rs:53-66): the
+  * parser scans the [[ByteIn]] window, decoding each string once from
+  * its UTF-8 run and building integers digit by digit; the emitter
+  * writes straight into a [[ByteOut]]. `parse(String)` and `emit` are
+  * the same codec over a String's bytes.
+  *
   * Emit matches serde_json compact formatting (json.rs:60-66): no
   * whitespace, `Bytes` as array of numbers (serde serializes Vec<u8>
   * that way), Unit as null. Parse accepts any standard JSON; numbers
   * become I64 when integral and in range, U64 for (2^63, 2^64), F64
-  * otherwise (ValueVisitor precedence, mod.rs:185-372).
+  * otherwise (ValueVisitor precedence, mod.rs:185-372). Bytes that are
+  * not UTF-8 read as U+FFFD, as a UTF-8 `Reader` decodes them.
+  *
+  * Both directions stop at [[AvroCodec.MaxDepth]] nesting levels with an
+  * `IllegalArgumentException` naming json and the byte offset, instead
+  * of overflowing the stack on hostile input.
   */
 object JsonCodec {
 
+  import AvroCodec.MaxDepth
+
+  /** `v`'s compact JSON: the bytes of [[emitTo]] as a String. */
   def emit(v: Value): String = {
-    val sb = new StringBuilder
-    emitTo(v, sb)
-    sb.toString
+    val out = ByteOut()
+    emitTo(v, out)
+    new String(out.toByteArray, UTF_8)
   }
+
+  /** Writes `v`'s compact JSON to `out` as UTF-8 (a lone surrogate in a
+    * string becomes `?`, as `String.getBytes` writes it).
+    */
+  def emitTo(v: Value, out: ByteOut): scala.Unit = emitTo(v, out, 0)
 
   /** `parse(emit(v))` computed without the text, UTF-8 hop included:
     * tagged scalars widen, `U64` that fits a Long becomes `I64`,
@@ -129,7 +149,8 @@ object JsonCodec {
     * 0.0, `F32` becomes the `F64` of its f32 decimal form, and lone
     * surrogates become `?` (as in the UTF-8 bytes of the text). These
     * are the values the JSON text row delivers, so a binary row holding
-    * msgpack of `normalize(v)` yields the same output bytes.
+    * msgpack of `normalize(v)` ([[MsgPackCodec.encodeNormalized]])
+    * yields the same output bytes.
     */
   def normalize(v: Value): Value = v match {
     case Value.Str(s) => val t = utf8Safe(s); if (t eq s) v else Value.Str(t)
@@ -152,7 +173,7 @@ object JsonCodec {
     case Value.Map(kvs) => Value.Map(kvs.map { case (k, e) =>
       val key = k match {
         case Value.Str(_) => normalize(k)
-        case other => Value.Str(utf8Safe(emit(other)))
+        case other => Value.Str(emit(other))
       }
       (key, normalize(e))
     })
@@ -173,79 +194,147 @@ object JsonCodec {
     s
   }
 
-  private def emitTo(v: Value, sb: StringBuilder): scala.Unit = v match {
-    case Value.Unit => sb.append("null")
-    case Value.Bool(b) => sb.append(if (b) "true" else "false")
-    case Value.I64(n) => sb.append(n)
-    case Value.U64(bits) => sb.append(java.lang.Long.toUnsignedString(bits))
-    case Value.F64(d) =>
-      if (d.isNaN || d.isInfinite) sb.append("null") // serde_json behavior
-      else if (d == Math.floor(d) && !d.isInfinite && Math.abs(d) < 1e15)
-        sb.append(d.toLong).append(".0")
-      else sb.append(d)
-    // tagged scalars print exactly as their widened value would —
-    // except F32, whose shortest-roundtrip repr is the f32 one
-    // (serde_json prints Value::F32(1.1) as "1.1", not the widened
-    // double 1.100000023841858)
-    case Value.I8(n) => sb.append(n.toInt)
-    case Value.I16(n) => sb.append(n.toInt)
-    case Value.I32(n) => sb.append(n)
-    case Value.U8(n) => sb.append(n)
-    case Value.U16(n) => sb.append(n)
-    case Value.U32(n) => sb.append(n)
-    case Value.F32(f) =>
-      if (f.isNaN || f.isInfinite) sb.append("null")
-      else if (f == Math.floor(f) && Math.abs(f) < 1e15f)
-        sb.append(f.toLong).append(".0")
-      else sb.append(f)
-    case Value.Chr(c) => emitString(c.toString, sb)
-    case Value.Str(s) => emitString(s, sb)
-    case Value.Bytes(b) =>
-      sb.append('[')
-      var i = 0
-      while (i < b.length) {
-        if (i > 0) sb.append(',')
-        sb.append(b(i) & 0xff)
-        i += 1
-      }
-      sb.append(']')
-    case Value.Seq(vs) =>
-      sb.append('[')
-      var first = true
-      vs.foreach { e =>
-        if (!first) sb.append(',')
-        first = false
-        emitTo(e, sb)
-      }
-      sb.append(']')
-    case Value.Map(kvs) =>
-      sb.append('{')
-      var first = true
-      kvs.foreach { case (k, e) =>
-        if (!first) sb.append(',')
-        first = false
-        k match {
-          case Value.Str(s) => emitString(s, sb)
-          case other => emitString(emit(other), sb) // non-string key → stringify
+  private[formats] val Null = "null".getBytes(UTF_8)
+  private[formats] val True = "true".getBytes(UTF_8)
+  private[formats] val False = "false".getBytes(UTF_8)
+  private val PointZero = ".0".getBytes(UTF_8)
+  private val Hex = "0123456789abcdef".getBytes(UTF_8)
+
+  private[formats] def emitTo(v: Value, out: ByteOut, depth: Int): scala.Unit =
+    v match {
+      case Value.Unit => out.write(Null)
+      case Value.Bool(b) => out.write(if (b) True else False)
+      case Value.I64(n) => out.writeDecimal(n)
+      case Value.U64(bits) =>
+        if (bits >= 0) out.writeDecimal(bits)
+        else ascii(java.lang.Long.toUnsignedString(bits), out)
+      case Value.F64(d) => emitDouble(d, out)
+      // tagged scalars print exactly as their widened value would —
+      // except F32, whose shortest-roundtrip repr is the f32 one
+      // (serde_json prints Value::F32(1.1) as "1.1", not the widened
+      // double 1.100000023841858)
+      case Value.I8(n) => out.writeDecimal(n)
+      case Value.I16(n) => out.writeDecimal(n)
+      case Value.I32(n) => out.writeDecimal(n)
+      case Value.U8(n) => out.writeDecimal(n)
+      case Value.U16(n) => out.writeDecimal(n)
+      case Value.U32(n) => out.writeDecimal(n)
+      case Value.F32(f) =>
+        if (f.isNaN || f.isInfinite) out.write(Null)
+        else if (f == Math.floor(f) && Math.abs(f) < 1e15f) {
+          out.writeDecimal(f.toLong)
+          out.write(PointZero)
+        } else ascii(java.lang.Float.toString(f), out)
+      case Value.Chr(c) => emitString(c.toString, out)
+      case Value.Str(s) => emitString(s, out)
+      case Value.Bytes(b) => // a sequence of numbers, one level deeper
+        nested(depth, out)
+        out.write('[')
+        var i = 0
+        while (i < b.length) {
+          if (i > 0) out.write(',')
+          out.writeDecimal(b(i) & 0xff)
+          i += 1
         }
-        sb.append(':')
-        emitTo(e, sb)
-      }
-      sb.append('}')
+        out.write(']')
+      case Value.Seq(vs) =>
+        nested(depth, out)
+        out.write('[')
+        val it = vs.iterator
+        var first = true
+        while (it.hasNext) {
+          if (!first) out.write(',')
+          first = false
+          emitTo(it.next(), out, depth + 1)
+        }
+        out.write(']')
+      case Value.Map(kvs) =>
+        nested(depth, out)
+        out.write('{')
+        val it = kvs.iterator
+        var first = true
+        while (it.hasNext) {
+          val (k, e) = it.next()
+          if (!first) out.write(',')
+          first = false
+          k match {
+            case Value.Str(s) => emitString(s, out)
+            case other => emitString(keyText(other, depth + 1), out)
+          }
+          out.write(':')
+          emitTo(e, out, depth + 1)
+        }
+        out.write('}')
+    }
+
+  private def nested(depth: Int, out: ByteOut): scala.Unit =
+    if (depth >= MaxDepth) throw new IllegalArgumentException(
+      s"json: nested deeper than $MaxDepth levels at output byte " +
+        out.position)
+
+  /** The text a non-string map key prints as: its own JSON. */
+  private def keyText(k: Value, depth: Int): String = {
+    val o = ByteOut()
+    emitTo(k, o, depth)
+    new String(o.toByteArray, UTF_8)
   }
 
-  private def emitString(s: String, sb: StringBuilder): scala.Unit = {
-    sb.append('"')
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+  /** `d` as serde_json prints an f64: integral values below 1e15 as
+    * `n.0`, NaN and ±Inf as null.
+    */
+  private[formats] def emitDouble(d: Double, out: ByteOut): scala.Unit =
+    if (d.isNaN || d.isInfinite) out.write(Null)
+    else if (d == Math.floor(d) && Math.abs(d) < 1e15) {
+      out.writeDecimal(d.toLong)
+      out.write(PointZero)
+    } else ascii(java.lang.Double.toString(d), out)
+
+  private def ascii(s: String, out: ByteOut): scala.Unit =
+    out.write(s.getBytes(UTF_8))
+
+  /** The JSON string of `s`'s UTF-8 bytes (a lone surrogate becomes
+    * `?`, as `getBytes` writes it).
+    */
+  private def emitString(s: String, out: ByteOut): scala.Unit = {
+    val b = s.getBytes(UTF_8)
+    emitUtf8String(b, 0, b.length, out)
+  }
+
+  /** The JSON string of `len` UTF-8 bytes of `b` from `from`: `"`, `\\`
+    * and control chars escaped, the rest copied (no byte of a multi-byte
+    * sequence is ASCII).
+    */
+  private[formats] def emitUtf8String(b: Array[Byte], from: Int, len: Int,
+      out: ByteOut): scala.Unit = {
+    out.write('"')
+    val end = from + len
+    var run = from
+    var i = from
+    while (i < end) {
+      val c = b(i)
+      if (c >= 0 && (c < ' ' || c == '"' || c == '\\')) {
+        out.write(b, run, i - run)
+        escape(c, out)
+        run = i + 1
+      }
+      i += 1
     }
-    sb.append('"')
+    out.write(b, run, end - run)
+    out.write('"')
+  }
+
+  private def escape(c: Int, out: ByteOut): scala.Unit = {
+    out.write('\\')
+    c match {
+      case '"' => out.write('"')
+      case '\\' => out.write('\\')
+      case '\n' => out.write('n')
+      case '\r' => out.write('r')
+      case '\t' => out.write('t')
+      case _ => // other control chars as \u00xx
+        out.write('u'); out.write('0'); out.write('0')
+        out.write(Hex(c >> 4)); out.write(Hex(c & 0xf))
+    }
   }
 
   /** 2-space-indented pretty form (reference K3, `--format indented`:
@@ -366,64 +455,16 @@ object JsonCodec {
     }
   }
 
-  /** Single-char-pushback cursor over a Reader — the parser below works
-    * identically over an in-memory String and an open multi-GB stream
-    * (the reference's constant-memory StreamDeserializer property,
-    * json.rs:53-58): one value in flight, never the whole input.
-    */
-  private sealed abstract class Cursor {
-    def read(): Int
-    def unread(c: Int): scala.Unit
-    def peek(): Int
-    def offset: Int
-  }
 
-  /** Reads `r` through an 8 KiB char window: one bulk `read` (one run
-    * of the charset decoder) per window instead of one per char.
-    */
-  private final class ReaderCursor(r: java.io.Reader) extends Cursor {
-    private val buf = new Array[Char](1 << 13)
-    private var i = 0 // next unread char
-    private var n = 0 // end of the chars held
-    private var pos = 0
-    def read(): Int =
-      if (i < n || fill()) {
-        val c = buf(i)
-        i += 1
-        pos += 1
-        c
-      } else -1
-    // `c` is the char read() just returned, so it is still at buf(i - 1)
-    def unread(c: Int): scala.Unit = if (c >= 0) { i -= 1; pos -= 1 }
-    def peek(): Int = if (i < n || fill()) buf(i) else -1
-    def offset: Int = pos
-    private def fill(): Boolean = {
-      var k = r.read(buf, 0, buf.length)
-      while (k == 0) k = r.read(buf, 0, buf.length)
-      i = 0
-      n = math.max(k, 0)
-      k > 0
-    }
-  }
+  def parse(s: String): Value = parse(s.getBytes(UTF_8))
 
-  /** Offset cursor over an in-memory String — the per-row hot path of
-    * the codec expressions (to_/from_ × 100k+ rows): no Reader lock,
-    * no pushback indirection.
+  /** The one JSON value `bytes` hold, with nothing but whitespace after
+    * it.
     */
-  private final class StringCursor(s: String) extends Cursor {
-    private var pos: Int = 0
-    def read(): Int =
-      if (pos < s.length) { val c = s.charAt(pos); pos += 1; c } else -1
-    def unread(c: Int): scala.Unit = if (c >= 0) pos -= 1
-    def peek(): Int = if (pos < s.length) s.charAt(pos) else -1
-    def offset: Int = pos
-  }
-
-  def parse(s: String): Value = {
-    val cur = new StringCursor(s)
-    val v = parseValue(cur)
-    skipWs(cur)
-    if (cur.peek() >= 0) throw err("trailing content", cur.offset)
+  def parse(bytes: Array[Byte]): Value = {
+    val p = new Parser(ByteIn(bytes))
+    val v = p.value(0)
+    if (p.skipWs() >= 0) throw p.err("trailing content")
     v
   }
 
@@ -431,161 +472,207 @@ object JsonCodec {
     * framing: serde_json StreamDeserializer, json.rs:53-58).
     */
   def parseStream(s: String): Vector[Value] =
-    parseIterator(new StringCursor(s)).toVector
+    iterator(ByteIn(s.getBytes(UTF_8))).toVector
 
-  /** Incremental whitespace-separated value stream from an open reader:
+  /** Incremental whitespace-separated value stream from an open stream:
     * one value in flight, constant memory regardless of input size.
     */
-  def parseIterator(r: java.io.Reader): Iterator[Value] =
-    parseIterator(new ReaderCursor(r))
+  def parseIterator(in: java.io.InputStream): Iterator[Value] =
+    iterator(ByteIn(in))
 
-  private def parseIterator(cur: Cursor): Iterator[Value] = {
+  private def iterator(in: ByteIn): Iterator[Value] = {
+    val p = new Parser(in)
     new Iterator[Value] {
-      def hasNext: Boolean = { skipWs(cur); cur.peek() >= 0 }
-      def next(): Value = parseValue(cur)
+      def hasNext: Boolean = p.skipWs() >= 0
+      def next(): Value = p.value(0)
     }
   }
 
-  private def parseValue(cur: Cursor): Value = {
-    skipWs(cur)
-    val c = cur.peek()
-    if (c < 0) throw err("unexpected end of input", cur.offset)
-    c.toChar match {
-      case 'n' => expect(cur, "null"); Value.Unit
-      case 't' => expect(cur, "true"); Value.Bool(true)
-      case 'f' => expect(cur, "false"); Value.Bool(false)
-      case '"' => Value.Str(parseString(cur))
-      case '[' =>
-        cur.read()
-        skipWs(cur)
-        if (cur.peek() == ']') { cur.read(); Value.Seq(Vector.empty) }
-        else {
-          var items = Vector.empty[Value]
-          var done = false
-          while (!done) {
-            items :+= parseValue(cur)
-            skipWs(cur)
-            val d = cur.read()
-            if (d == ',') ()
-            else if (d == ']') done = true
-            else if (d < 0) throw err("unterminated array", cur.offset)
-            else throw err(s"expected , or ] got ${d.toChar}", cur.offset)
-          }
-          Value.Seq(items)
-        }
-      case '{' =>
-        cur.read()
-        skipWs(cur)
-        if (cur.peek() == '}') { cur.read(); Value.Map(Vector.empty) }
-        else {
-          var items = Vector.empty[(Value, Value)]
-          var done = false
-          while (!done) {
-            skipWs(cur)
-            val k = parseString(cur)
-            skipWs(cur)
-            if (cur.read() != ':') throw err("expected :", cur.offset)
-            val v = parseValue(cur)
-            items :+= ((Value.Str(k): Value, v))
-            skipWs(cur)
-            val d = cur.read()
-            if (d == ',') ()
-            else if (d == '}') done = true
-            else if (d < 0) throw err("unterminated object", cur.offset)
-            else throw err(s"expected , or } got ${d.toChar}", cur.offset)
-          }
-          Value.Map(items)
-        }
-      case ch if ch == '-' || (ch >= '0' && ch <= '9') => parseNumber(cur)
-      case ch => throw err(s"unexpected char $ch", cur.offset)
-    }
-  }
+  /** Recursive descent over the window of `in`: `value(depth)` reads
+    * one value whose containers sit `depth` levels deep.
+    */
+  private final class Parser(in: ByteIn) {
+    private val sb = new java.lang.StringBuilder
 
-  private def skipWs(cur: Cursor): scala.Unit = {
-    var c = cur.read()
-    while (c == ' ' || c == '\n' || c == '\t' || c == '\r') c = cur.read()
-    cur.unread(c)
-  }
+    def err(msg: String) =
+      new IllegalArgumentException(s"json: $msg at byte ${in.position}")
 
-  private def expect(cur: Cursor, lit: String): scala.Unit = {
-    var i = 0
-    while (i < lit.length) {
-      if (cur.read() != lit.charAt(i)) throw err(s"expected $lit", cur.offset)
-      i += 1
-    }
-  }
+    /** Skips whitespace: the next byte, not consumed, or -1 at the end. */
+    def skipWs(): Int = in.peekNonSpace()
 
-  private def parseString(cur: Cursor): String = {
-    if (cur.read() != '"') throw err("expected string", cur.offset)
-    val sb = new StringBuilder
-    var c = cur.read()
-    while (c >= 0 && c != '"') {
-      if (c == '\\') {
-        val e = cur.read()
-        if (e < 0) throw err("bad escape", cur.offset)
-        e.toChar match {
-          case '"' => sb.append('"')
-          case '\\' => sb.append('\\')
-          case '/' => sb.append('/')
-          case 'n' => sb.append('\n')
-          case 't' => sb.append('\t')
-          case 'r' => sb.append('\r')
-          case 'b' => sb.append('\b')
-          case 'f' => sb.append('\f')
-          case 'u' =>
-            val hex = new Array[Char](4)
-            var i = 0
-            while (i < 4) {
-              val h = cur.read()
-              if (h < 0) throw err("bad \\u escape", cur.offset)
-              hex(i) = h.toChar
-              i += 1
-            }
-            sb.append(Integer.parseInt(new String(hex), 16).toChar)
-          case c2 => throw err(s"bad escape \\$c2", cur.offset)
-        }
-      } else sb.append(c.toChar)
-      c = cur.read()
+    def value(depth: Int): Value = {
+      val c = skipWs()
+      if (c == '"') { in.skip(); Value.Str(string()) }
+      else if (c == '{') obj(depth)
+      else if (c == '[') arr(depth)
+      else if (c == '-' || (c >= '0' && c <= '9')) number()
+      else if (c == 'n') { literal(Null); Value.Unit }
+      else if (c == 't') { literal(True); Value.Bool(true) }
+      else if (c == 'f') { literal(False); Value.Bool(false) }
+      else if (c < 0) throw err("unexpected end of input")
+      else throw err(s"unexpected ${show(c)}")
     }
-    if (c < 0) throw err("unterminated string", cur.offset)
-    sb.toString
-  }
 
-  private def parseNumber(cur: Cursor): Value = {
-    val text = new StringBuilder
-    var isFloat = false
-    def digits(): scala.Unit = {
-      var c = cur.read()
-      while (c >= '0' && c <= '9') { text.append(c.toChar); c = cur.read() }
-      cur.unread(c)
+    private def show(c: Int): String =
+      if (c >= ' ' && c < 0x7f) s"char ${c.toChar}"
+      else f"byte 0x$c%02x"
+
+    private def nested(depth: Int): scala.Unit =
+      if (depth >= MaxDepth)
+        throw err(s"nested deeper than $MaxDepth levels")
+
+    /** The byte after a container's item: `,` or `close`, consumed. */
+    private def separator(close: Char, what: String): Boolean = {
+      val d = skipWs()
+      if (d < 0) throw err(s"unterminated $what")
+      in.skip()
+      if (d == close) false
+      else if (d == ',') true
+      else throw err(s"expected , or $close got ${show(d)}")
     }
-    if (cur.peek() == '-') text.append(cur.read().toChar)
-    digits()
-    if (cur.peek() == '.') {
-      isFloat = true
-      text.append(cur.read().toChar)
-      digits()
+
+    private def arr(depth: Int): Value = {
+      nested(depth)
+      in.skip()
+      if (skipWs() == ']') { in.skip(); return Value.Seq(Vector.empty) }
+      val items = Vector.newBuilder[Value]
+      var more = true
+      while (more) {
+        items += value(depth + 1)
+        more = separator(']', "array")
+      }
+      Value.Seq(items.result())
     }
-    if (cur.peek() == 'e' || cur.peek() == 'E') {
-      isFloat = true
-      text.append(cur.read().toChar)
-      if (cur.peek() == '+' || cur.peek() == '-') text.append(cur.read().toChar)
-      digits()
+
+    private def obj(depth: Int): Value = {
+      nested(depth)
+      in.skip()
+      if (skipWs() == '}') { in.skip(); return Value.Map(Vector.empty) }
+      val items = Vector.newBuilder[(Value, Value)]
+      var more = true
+      while (more) {
+        if (skipWs() != '"') throw err("expected string")
+        in.skip()
+        val k = string()
+        if (skipWs() != ':') throw err("expected :")
+        in.skip()
+        items += ((Value.Str(k), value(depth + 1)))
+        more = separator('}', "object")
+      }
+      Value.Map(items.result())
     }
-    val t = text.toString
-    if (isFloat) Value.F64(t.toDouble)
-    else {
-      try Value.I64(t.toLong)
-      catch {
-        case _: NumberFormatException =>
-          if (!t.startsWith("-")) {
-            try Value.U64(java.lang.Long.parseUnsignedLong(t))
-            catch { case _: NumberFormatException => Value.F64(t.toDouble) }
-          } else Value.F64(t.toDouble)
+
+    private def literal(lit: Array[Byte]): scala.Unit = {
+      var k = 0
+      while (k < lit.length) {
+        if (in.peek() != lit(k))
+          throw err(s"expected ${new String(lit, UTF_8)}")
+        in.skip()
+        k += 1
       }
     }
-  }
 
-  private def err(msg: String, at: Int) =
-    new IllegalArgumentException(s"json: $msg at offset $at")
+    /** The rest of a string whose opening quote is consumed. Each run
+      * between escapes decodes once from the window ([[ByteIn.textRun]]).
+      */
+    private def string(): String = {
+      val run = in.textRun()
+      if (in.peek() == '"') { in.skip(); return run }
+      sb.setLength(0)
+      sb.append(run)
+      while (true) {
+        val c = in.peek()
+        if (c == '"') { in.skip(); return sb.toString }
+        if (c < 0) throw err("unterminated string")
+        if (c == '\\') { in.skip(); unescape() }
+        sb.append(in.textRun())
+      }
+      throw new IllegalStateException // unreachable
+    }
+
+    /** One escape, its backslash consumed, appended to `sb`. */
+    private def unescape(): scala.Unit = {
+      val e = in.peek()
+      if (e < 0) throw err("bad escape")
+      in.skip()
+      e match {
+        case '"' => sb.append('"')
+        case '\\' => sb.append('\\')
+        case '/' => sb.append('/')
+        case 'n' => sb.append('\n')
+        case 't' => sb.append('\t')
+        case 'r' => sb.append('\r')
+        case 'b' => sb.append('\b')
+        case 'f' => sb.append('\f')
+        case 'u' =>
+          var cp = 0
+          var k = 0
+          while (k < 4) {
+            val d = Character.digit(in.peek(), 16)
+            if (d < 0) throw err("bad \\u escape")
+            in.skip()
+            cp = cp << 4 | d
+            k += 1
+          }
+          sb.append(cp.toChar)
+        case _ => throw err(s"bad escape \\${show(e)}")
+      }
+    }
+
+    /** A number, its digits accumulated without a text copy; only a
+      * fraction, an exponent or an integer past 2⁶⁴−1 goes through the
+      * text `Double.parseDouble` reads.
+      */
+    private def number(): Value = {
+      val neg = in.peek() == '-'
+      if (neg) in.skip()
+      var acc = 0L // the integer digits, unsigned
+      var digits = 0
+      var text: java.lang.StringBuilder = null // once a double
+      def toText(): scala.Unit = if (text == null) {
+        text = new java.lang.StringBuilder(24)
+        if (neg) text.append('-')
+        if (digits > 0) text.append(java.lang.Long.toUnsignedString(acc))
+      }
+      def run(): scala.Unit = {
+        var c = in.peek()
+        while (c >= '0' && c <= '9') {
+          text.append(c.toChar)
+          in.skip()
+          c = in.peek()
+        }
+      }
+      var c = in.peek()
+      while (c >= '0' && c <= '9') {
+        val d = c - '0'
+        if (text != null) text.append(c.toChar)
+        else if (java.lang.Long.compareUnsigned(acc, 0x1999999999999999L) > 0 ||
+            (acc == 0x1999999999999999L && d > 5)) { // past 2⁶⁴−1
+          toText()
+          text.append(c.toChar)
+        } else acc = acc * 10 + d
+        digits += 1
+        in.skip()
+        c = in.peek()
+      }
+      if (c == '.') {
+        toText(); text.append('.'); in.skip(); run()
+        c = in.peek()
+      }
+      if (c == 'e' || c == 'E') {
+        toText(); text.append(c.toChar); in.skip()
+        c = in.peek()
+        if (c == '+' || c == '-') { text.append(c.toChar); in.skip() }
+        run()
+      }
+      if (text != null) {
+        try Value.F64(java.lang.Double.parseDouble(text.toString))
+        catch { case _: NumberFormatException => throw err(s"bad number $text") }
+      } else if (digits == 0) throw err("bad number -")
+      else if (!neg) if (acc >= 0) Value.I64(acc) else Value.U64(acc)
+      else if (acc >= 0 || acc == Long.MinValue) Value.I64(-acc)
+      else Value.F64(-java.lang.Double.parseDouble(
+        java.lang.Long.toUnsignedString(acc)))
+    }
+  }
 }

@@ -16,8 +16,12 @@ import graft.formats._
   */
 object CodecFns {
 
-  private def json(v: Value): UTF8String = UTF8String.fromString(JsonCodec.emit(v))
-  private def value(s: UTF8String): Value = JsonCodec.parse(s.toString)
+  private def json(v: Value): UTF8String = {
+    val out = ByteOut()
+    JsonCodec.emitTo(v, out)
+    UTF8String.fromBytes(out.toByteArray)
+  }
+  private def value(s: UTF8String): Value = JsonCodec.parse(s.getBytes)
 
   abstract class JsonOutExpr extends UnaryExpression with FusedUnary {
     override def dataType: DataType = StringType

@@ -55,10 +55,7 @@ object RqFormat {
   def decodeStream(format: String, in: InputStream,
       options: Map[String, String] = Map.empty): Iterator[Value] =
     format match {
-      case "json" =>
-        JsonCodec.parseIterator(new java.io.InputStreamReader(
-          new java.io.BufferedInputStream(in, 1 << 16),
-          StandardCharsets.UTF_8))
+      case "json" => JsonCodec.parseIterator(in)
       case "csv" =>
         // headerless; every cell a string; record = Sequence (csv.rs:41-52)
         CsvCodec.parseIterator(new java.io.InputStreamReader(
@@ -115,8 +112,9 @@ object RqFormat {
 
   /** Encode a record stream into `out` (incremental — see [[encoder]]).
     * If decoding or encoding fails, the encoder still finishes, so every
-    * record before the failure reaches `out`, and the failure stands (a
-    * failure to finish rides along as suppressed).
+    * record before the failure reaches `out`, none of the failed one
+    * does, and the failure stands (a failure to finish rides along as
+    * suppressed).
     */
   def encode(format: String, values: Iterator[Value], out: OutputStream,
       options: Map[String, String] = Map.empty): Unit =
@@ -143,7 +141,7 @@ object RqFormat {
   }
 
   private def encodeAll(enc: RecordEncoder, values: Iterator[Value]): Unit = {
-    try values.foreach(enc.write)
+    try values.foreach(enc.writeWhole)
     catch {
       case NonFatal(e) =>
         try enc.finish() catch { case NonFatal(f) => e.addSuppressed(f) }
@@ -161,6 +159,10 @@ object RqFormat {
   abstract class RecordEncoder(out: OutputStream) {
     protected val buf: ByteOut = ByteOut(out)
     def write(v: Value): Unit
+    /** `write(v)` whole or not at all ([[ByteOut.record]]): if it fails,
+      * none of `v`'s bytes reach the output.
+      */
+    final def writeWhole(v: Value): Unit = buf.record(write(v))
     /** Write the record a binary row holds (msgpack of a normalized
       * value, see [[RqTableProvider]]).
       */
@@ -209,7 +211,19 @@ object RqFormat {
         // (rq.rs:216, 323-329; compact is the pipe default); one record
         // per doc + newline (json.rs:110)
         opt(options, "jsonFormat").getOrElse("compact") match {
-          case "compact" => textEncoder(out)(JsonCodec.emit)
+          case "compact" =>
+            new RecordEncoder(out) {
+              def write(v: Value): Unit = {
+                JsonCodec.emitTo(v, buf)
+                buf.write('\n')
+              }
+              // the JSON of a valid row straight from its bytes
+              override def writeMsgPack(row: Array[Byte]): Unit = {
+                checkRow(row)
+                MsgPackCodec.rowToJson(row, buf)
+                buf.write('\n')
+              }
+            }
           case "indented" => textEncoder(out)(JsonCodec.emitIndented)
           case "readable" => textEncoder(out)(JsonCodec.emitReadable)
           case other => throw new IllegalArgumentException(

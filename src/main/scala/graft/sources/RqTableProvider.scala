@@ -29,19 +29,24 @@ import graft.formats.{ByteOut, JsonCodec, MsgPackCodec, Value}
   * Row forms. A frame's schema selects one of two; a read takes the
   * user schema (`.schema(...)`, batch or streaming), a write the schema
   * of the written frame, and any other schema is rejected:
-  *  - `value STRING`, the default: the record's canonical JSON text
-  *    (`JsonCodec.emit`), which the writer parses back.
+  *  - `value STRING`, the default: the record's canonical JSON text,
+  *    emitted as UTF-8 straight into the row (`JsonCodec.emitTo`); the
+  *    writer parses the row's bytes back.
   *  - `value BINARY`: msgpack of `JsonCodec.normalize(v)`, i.e. of the
   *    value the JSON text would parse back to, so both forms write the
-  *    same bytes. `RqEngine.run` uses it to skip the JSON emit and
-  *    parse. The writer hands each row to
+  *    same bytes. The reader writes it in one pass over the decoded
+  *    value, without building the normalized one
+  *    ([[MsgPackCodec.encodeNormalized]]). `RqEngine.run` uses it to
+  *    skip the JSON emit and parse. The writer hands each row to
   *    `RecordEncoder.writeMsgPack`: the msgpack sink copies it
   *    unchanged (encode ∘ decode is the identity on encode's output),
-  *    the other sinks decode it. Both first check that the row is one
-  *    msgpack value in `encode`'s canonical form without bin/ext/f32
-  *    markers ([[MsgPackCodec.isRowValue]]), so the copy is the bytes
-  *    decoding and re-encoding would give, and fail the task with
-  *    [[InvalidRowException]] if it is not, or if the row is null.
+  *    the compact JSON sink transcodes its bytes straight to JSON
+  *    ([[MsgPackCodec.rowToJson]]), the other sinks decode it. All
+  *    first check that the row is one msgpack value in `encode`'s
+  *    canonical form without bin/ext/f32 markers
+  *    ([[MsgPackCodec.isRowValue]]), so the copy and the transcode are
+  *    the bytes decoding and re-encoding would give, and fail the task
+  *    with [[InvalidRowException]] if it is not, or if the row is null.
   *
   * Scale notes: concatenated varlen binary streams (msgpack/cbor) and
   * whole-document formats (toml/yaml) carry no sync markers, so the
@@ -371,15 +376,17 @@ final class RqPartitionReader(part: RqInputPartition)
     val all = RqFormat.decodeStream(part.format, stream, part.options)
     part.limit.fold(all)(all.take)
   }
-  private val toRow: Value => InternalRow =
+  private val buf = ByteOut() // one row buffer per reader
+  private def toRow(v: Value): InternalRow = {
+    buf.reset()
     if (part.binary) {
-      val buf = ByteOut() // one row buffer per reader
-      v => {
-        buf.reset()
-        MsgPackCodec.encodeTo(JsonCodec.normalize(v), buf)
-        InternalRow(buf.toByteArray)
-      }
-    } else v => InternalRow(UTF8String.fromString(JsonCodec.emit(v)))
+      MsgPackCodec.encodeNormalized(v, buf)
+      InternalRow(buf.toByteArray)
+    } else {
+      JsonCodec.emitTo(v, buf)
+      InternalRow(UTF8String.fromBytes(buf.toByteArray))
+    }
+  }
   private var current: InternalRow = _
 
   override def next(): Boolean = {
@@ -483,7 +490,7 @@ final class RqDataWriter(options: Map[String, String], binary: Boolean,
       enc = RqFormat.encoder(fmt, out, options)
     }
     if (binary) enc.writeMsgPack(record.getBinary(0))
-    else enc.write(JsonCodec.parse(record.getUTF8String(0).toString))
+    else enc.write(JsonCodec.parse(record.getUTF8String(0).getBytes))
     // the encoder's position after a record is that record's end, so
     // a mark never depends on when the encoder passes bytes to `out`
     if (framing && enc.position - lastMark >= frameEvery) {

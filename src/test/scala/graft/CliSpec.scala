@@ -477,4 +477,41 @@ class CliSpec extends AnyFunSuite {
       }
     } finally System.clearProperty("graft.system.dir")
   }
+
+  test("hostile nesting exits non-zero with a json: or msgpack: error " +
+      "instead of a StackOverflowError, after every whole record before " +
+      "it and no part of it") {
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java")
+    val stdout = Files.createTempFile("rq-deep", ".out")
+    def rq(args: Seq[String], in: Array[Byte]): (Int, String, String) = {
+      val p = new ProcessBuilder((Seq(javaBin.toString, "-Xmx256m", "-cp",
+        System.getProperty("java.class.path"), "graft.Cli", "-q") ++ args): _*)
+        .redirectOutput(stdout.toFile).start()
+      // the process may fail and close its input before taking it all
+      try { p.getOutputStream.write(in); p.getOutputStream.close() }
+      catch { case _: java.io.IOException => () }
+      val err = new String(p.getErrorStream.readAllBytes(), UTF_8)
+      val code = p.waitFor()
+      (code, new String(Files.readAllBytes(stdout), UTF_8), err)
+    }
+    val deepJson = ("[" * 3000 + "]" * 3000).getBytes(UTF_8)
+    val deepMsgPack = Array.fill[Byte](200000)(0x91.toByte) :+ 0xc0.toByte
+    // CBOR 1, then 1,001 nested arrays around null: the CBOR decoder
+    // takes it, the JSON encoder fails 1,000 levels in
+    val deepCbor = Array[Byte](0x01) ++
+      Array.fill[Byte](1001)(0x81.toByte) :+ 0xf6.toByte
+    try for ((args, in, msg, out) <- Seq(
+        (Seq("-j", "-j"), deepJson, "json: nested deeper than 1000 levels", ""),
+        (Seq("-j", "-M"), deepJson, "json: nested deeper than 1000 levels", ""),
+        (Seq("-m"), deepMsgPack, "msgpack: nested deeper than 1000 levels", ""),
+        (Seq("-c", "-J"), deepCbor, "json: nested deeper than 1000 levels",
+          "1\n"))) {
+      val (code, got, err) = rq(args, in)
+      val what = s"rq ${args.mkString(" ")}"
+      assert(code != 0 && err.contains(msg) &&
+        !err.contains("StackOverflowError"), s"$what: $err")
+      assert(got == out, s"$what wrote a partial record")
+    } finally Files.delete(stdout)
+  }
 }
+

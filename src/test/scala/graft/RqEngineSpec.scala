@@ -442,6 +442,23 @@ class RqEngineSpec extends SparkSpec {
     }
   }
 
+  test("a 3,000-deep JSON array fails the job with a typed error, both " +
+      "row forms, and the session still runs queries") {
+    val dir = tmp()
+    Files.writeString(java.nio.file.Paths.get(dir, "deep.json"),
+      "[" * 3000 + "]" * 3000)
+    val max = graft.formats.AvroCodec.MaxDepth
+    val runs = Seq[() => Unit](() => engine.read("json", dir).count(),
+      () => engine.run("json", dir, "msgpack", tmp()))
+    for (run <- runs) {
+      val ex = intercept[Exception](run())
+      assert(chain(ex).exists(e => e.isInstanceOf[IllegalArgumentException] &&
+        e.getMessage.startsWith(
+          s"json: nested deeper than $max levels at byte $max")), ex)
+    }
+    assert(engine.read("json", writeInput()).count() == 3)
+  }
+
   test("a null value row fails the sink with a typed error, both row " +
       "forms") {
     import spark.implicits._
